@@ -220,6 +220,15 @@ def refresh_corpus(
     # One scan+spread of the landed batch, shared by every fold below
     # (unpersisted each step re-read and re-shuffled it).
     batch = _spread_input(spark, spark.read.parquet(batch_path)).persist()
+    if not os.path.isdir(p["corpus"]) and batch.isEmpty():
+        # an empty batch folded into a fresh store leaves schema-less
+        # dirs the next batch cannot read; ledger it without folding,
+        # since batch ids are ledger positions
+        batch.unpersist()
+        _write_ledger(p["ledger"], ledger + [batch_path])
+        summary["upsert"] = {"updated": 0, "inserted": 0, "deduped": 0}
+        summary["report"] = []
+        return summary
 
     # Steps 1-3 (and the optional embedding fold) are INDEPENDENT: they
     # read/write disjoint store paths (dedup_index+reports / corpus /

@@ -19,9 +19,13 @@ the daemon pins ``OPENBLAS_NUM_THREADS``/``OMP_NUM_THREADS`` to 1
 BEFORE importing numpy (ADVICE r12 low #4: common OpenBLAS builds
 spawn their thread pool at import time, not lazily — with the pin the
 daemon truly carries no live threads into fork instead of relying on
-OpenBLAS's atfork handlers). Workers that want multi-threaded BLAS can
-re-raise the env post-fork; Spark's one-core-per-task model means the
-single-threaded default is also the right performance posture.
+OpenBLAS's atfork handlers). OpenBLAS sizes its pool when numpy is
+imported, here in the daemon, so raising the env post-fork does
+nothing: a worker that wants multi-threaded BLAS must use
+``threadpoolctl``, or run with ``SPARK_GRAFT_PY_DAEMON_PRELOAD=0``
+(a value already in the environment at launch is kept, see below).
+Spark's one-core-per-task model means the single-threaded default is
+also the right performance posture.
 
 Activated via ``spark.python.daemon.module`` in
 :func:`data_ingestors_spark.session.get_spark`; the repo root is put

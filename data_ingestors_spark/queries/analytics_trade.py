@@ -279,8 +279,10 @@ def q_supplier_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = up.groupBy("l_partkey").agg(
         F.percentile("unit_price", F.lit(0.5)).alias("med_up_raw"),
     )
+    # count(l_suppkey), not count(*): a null-supplier group is no
+    # supplier, as in the oracle's count(DISTINCT l_suppkey)
     n_supps = per_supp.groupBy("l_partkey").agg(
-        F.count("*").cast("long").alias("n_supps")
+        F.count("l_suppkey").cast("long").alias("n_supps")
     )
     j = (
         per_supp.join(per_part, "l_partkey")

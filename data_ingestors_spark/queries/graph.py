@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from data_ingestors_spark.functions.rounding import fround, o_fround
 from data_ingestors_spark.operators.graph import pagerank, triangle_count
+from data_ingestors_spark.queries.analytics import MAX_BASKET_ITEMS, _cap_baskets
 from data_ingestors_spark.queries.base import tables
 
 QUERIES: dict = {}
@@ -30,9 +31,13 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1.2M pairs at sf0.1), while repeated pairs are signal whose count
     stays roughly constant (~3.5k at both sf0.01 and sf0.1), so the
     downstream triangle join rides a graph that does NOT grow with the
-    fact table."""
+    fact table. Whale baskets above :data:`MAX_BASKET_ITEMS` are
+    dropped before the O(k^2) fan-out, as in the other basket
+    queries."""
     t = tables(spark, sf_dir, "lineitem")
-    items = t["lineitem"].select("l_orderkey", "l_partkey").distinct()
+    items = _cap_baskets(
+        t["lineitem"].select("l_orderkey", "l_partkey").distinct(), "l_orderkey"
+    )
     a = items.alias("a")
     b = items.alias("b")
     return (
@@ -54,8 +59,12 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_count(_copurchase_edges(spark, sf_dir))
 
 
-O_TRIANGLE_COUNT = """
-WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+O_TRIANGLE_COUNT = f"""
+WITH items AS (
+  -- mirror MAX_BASKET_ITEMS: Spark drops whale baskets before the fan-out
+  SELECT l_orderkey, l_partkey FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
+  QUALIFY count(*) OVER (PARTITION BY l_orderkey) <= {MAX_BASKET_ITEMS}
+),
 edges AS (
   SELECT a.l_partkey AS a, b.l_partkey AS b
   FROM items a JOIN items b
@@ -298,8 +307,12 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-O_DEGREE_ASSORTATIVITY = """
-WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+O_DEGREE_ASSORTATIVITY = f"""
+WITH items AS (
+  -- mirror MAX_BASKET_ITEMS: Spark drops whale baskets before the fan-out
+  SELECT l_orderkey, l_partkey FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
+  QUALIFY count(*) OVER (PARTITION BY l_orderkey) <= {MAX_BASKET_ITEMS}
+),
 edges AS (
   SELECT a.l_partkey AS a, b.l_partkey AS b
   FROM items a JOIN items b
@@ -388,8 +401,12 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-O_CLUSTERING_COEFFICIENT = """
-WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+O_CLUSTERING_COEFFICIENT = f"""
+WITH items AS (
+  -- mirror MAX_BASKET_ITEMS: Spark drops whale baskets before the fan-out
+  SELECT l_orderkey, l_partkey FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
+  QUALIFY count(*) OVER (PARTITION BY l_orderkey) <= {MAX_BASKET_ITEMS}
+),
 edges AS (
   SELECT a.l_partkey AS src, b.l_partkey AS dst
   FROM items a JOIN items b

@@ -323,6 +323,7 @@ def q_refresh_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured flat-per-batch refresh sweep (BASELINE.md §r11); the
     report itself is a per-source handful of rows, collected driver-
     side only to decouple the result from the temp store lifetime."""
+    import os
     import shutil
     import tempfile
 
@@ -341,6 +342,11 @@ def q_refresh_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "par"
         ).parquet(f"{tmp}/batches")
         b0, b1 = f"{tmp}/batches/par=0", f"{tmp}/batches/par=1"
+        # an absent parity gets an empty batch, not a skipped one: the
+        # loop numbers batches by ledger length, so batch_id stays par
+        for b in (b0, b1):
+            if not os.path.isdir(b):
+                docs.limit(0).write.parquet(b)
         store = f"{tmp}/store"
         refresh_corpus(spark, store, b0, compact_every=0)
         refresh_corpus(spark, store, b1, compact_every=0)

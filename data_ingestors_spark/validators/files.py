@@ -224,8 +224,8 @@ def _bmp_dims(b: bytes) -> tuple[int, int]:
 def _tiff_dims(b: bytes) -> tuple[int, int]:
     """TIFF: first IFD's ImageWidth (256) / ImageLength (257) tags —
     both byte orders (the reference's default supported set includes
-    .tif/.tiff via PIL, image_validator.py:60; full pixel decode
-    lives in operators/codecs/raster.py _decode_tiff)."""
+    .tif/.tiff via PIL, image_validator.py:60; full pixel decode is
+    PIL's, via the ``images`` extra)."""
     order = "little" if b[:2] == b"II" else "big"
 
     def u(pos, n):

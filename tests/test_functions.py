@@ -91,54 +91,3 @@ def test_decimal_precision(spark):
     out = conform_types(df, {"v": "DECIMAL(10,2)"})
     vals = [r.v for r in out.collect()]
     assert str(vals[0]) == "12.35" and vals[1] is None
-
-
-def test_udtf_sentence_chunks_respects_boundaries(spark):
-    """UDTF surface (R10): greedy sentence packing never splits inside
-    a sentence, covers every word, and an oversized sentence gets its
-    own chunk rather than being dropped."""
-    from data_ingestors_spark.functions.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    spark.createDataFrame(
-        [(1, "aa bb. cc dd ee. ff. gg hh ii jj kk ll mm")], "doc_id long, text string"
-    ).createOrReplaceTempView("udtf_docs")
-    rows = spark.sql(
-        """
-        SELECT d.doc_id, c.chunk_id, c.chunk_text, c.n_words
-        FROM udtf_docs d, LATERAL sentence_chunks(d.text, 5) c
-        """
-    ).collect()
-    chunks = [(r.chunk_id, r.chunk_text, r.n_words) for r in sorted(rows, key=lambda r: r.chunk_id)]
-    # 2 + 3 fits the 5-word budget; 'ff' starts a new chunk; the
-    # 7-word final sentence is oversized but kept whole
-    assert chunks == [
-        (0, "aa bb. cc dd ee.", 5),
-        (1, "ff.", 1),
-        (2, "gg hh ii jj kk ll mm.", 7),
-    ]
-
-
-def test_udtf_sql_lateral_over_documents(spark, sf_dir):
-    """Registered UDTFs are callable from SQL in table position and in
-    a LATERAL join over a real table."""
-    from data_ingestors_spark.functions.udtfs import register_udtfs
-    from data_ingestors_spark.queries.base import views
-
-    assert register_udtfs(spark) == ["sentence_chunks", "word_counts"]
-    views(spark, sf_dir, "documents")
-    out = spark.sql(
-        """
-        SELECT d.doc_id, w.word, w.n
-        FROM documents d, LATERAL word_counts(d.text) w
-        WHERE d.doc_id = 1
-        """
-    ).collect()
-    assert out, "lateral UDTF produced no rows"
-    # histogram must match a driver-side recount of the same text
-    text = spark.sql("SELECT text FROM documents WHERE doc_id = 1").collect()[0][0]
-    from collections import Counter
-
-    expect = Counter(text.split())
-    got = {r.word: r.n for r in out}
-    assert got == dict(expect)

@@ -2206,6 +2206,7 @@ def test_whale_basket_cap_bounds_fanout(spark, tmp_path):
     completes bounded, with the small baskets' results intact."""
     from data_ingestors_spark.queries import analytics as A
     from data_ingestors_spark.queries import analytics_stats as AS
+    from data_ingestors_spark.queries import graph as G
 
     # whale: customer 1 / order 1 holds 80 distinct parts; the sane
     # baskets are orders 2-4 (3 parts each, shared across customers)
@@ -2226,6 +2227,7 @@ def test_whale_basket_cap_bounds_fanout(spark, tmp_path):
         cos = AS.q_item_cosine(spark, str(tmp_path)).collect()
         rules = AS.q_assoc_rules(spark, str(tmp_path)).collect()
         triples = AS.q_copurchase_triples(spark, str(tmp_path)).collect()
+        tri = G.q_triangle_count(spark, str(tmp_path)).collect()[0]
     # the whale contributed nothing: no pair involves parts > 4, and
     # the fan-out stayed at C(3,2) per sane basket
     assert pairs and all(r.part_b <= 4 for r in pairs)
@@ -2234,9 +2236,46 @@ def test_whale_basket_cap_bounds_fanout(spark, tmp_path):
     assert all(r.part_c <= 4 for r in triples)
     # (1,2,3) is the only triple with support >= the Apriori floor
     assert [(r.part_a, r.part_b, r.part_c) for r in triples] == [(1, 2, 3)]
+    # co-purchase graph: only {1,2,3} has support-2 edges; uncapped, the
+    # whale would lift (2,4) and (3,4) to support 2 (2 triangles, 5 edges)
+    assert (tri.n_triangles, tri.n_edges) == (1, 3)
     # uncapped, the whale dominates: the guard is what excluded it
     whale_pairs = A._cap_baskets(li, "l_orderkey", cap=1000)
     assert whale_pairs.count() == li.count()  # cap off -> nothing dropped
+
+
+def test_supplier_price_outliers_ignores_null_supplier(spark, tmp_path):
+    """A null-``l_suppkey`` line is no second supplier: a part with one
+    real supplier plus such a line has no cross-supplier ratio and stays
+    out, as under the oracle's ``count(DISTINCT l_suppkey)``."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_ingestors_spark.queries.analytics_trade import (
+        O_SUPPLIER_PRICE_OUTLIERS,
+        q_supplier_price_outliers,
+    )
+
+    # part 1: supplier 10 plus a null-supplier line; part 2: suppliers 20, 21
+    path = tmp_path / "lineitem.parquet"
+    pq.write_table(
+        pa.table({
+            "l_partkey": pa.array([1, 1, 2, 2], pa.int64()),
+            "l_suppkey": pa.array([10, None, 20, 21], pa.int64()),
+            "l_extendedprice": [100.0, 300.0, 50.0, 80.0],
+            "l_quantity": [1.0, 1.0, 1.0, 1.0],
+        }),
+        path,
+    )
+    got = {
+        (r.l_partkey, r.l_suppkey)
+        for r in q_supplier_price_outliers(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{path}'")
+    want = {r[:2] for r in con.execute(O_SUPPLIER_PRICE_OUTLIERS).fetchall()}
+    assert got == want == {(2, 20), (2, 21)}
 
 
 def test_blocking_audit_lossless_on_fixture(spark):

@@ -255,3 +255,91 @@ def test_committed_bench_artifact_head_is_valid():
         f"committed artifact's git_head {head[:12]} is not an ancestor of HEAD"
         " — it was produced on a different line of history"
     )
+
+
+def _package_imports(path: str, module: str, is_pkg: bool) -> set[str]:
+    """Every ``data_ingestors_spark`` module a file imports, anywhere in
+    it (function-local imports included). ``from P import name`` counts
+    both ``P`` and ``P.name``; the caller keeps whichever is a module."""
+    import ast
+
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    pkg = module if is_pkg else module.rpartition(".")[0]
+    found: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            found.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = pkg.rsplit(".", node.level - 1)[0]
+                base = f"{parent}.{base}" if base else parent
+            found.add(base)
+            found.update(f"{base}.{a.name}" for a in node.names)
+    return {m for m in found if m.split(".")[0] == "data_ingestors_spark"}
+
+
+def _daemon_module() -> str:
+    """The module session.py hands Spark as ``spark.python.daemon.module``
+    (loaded by name in the worker, so no import statement names it)."""
+    import ast
+
+    with open(os.path.join(REPO, "data_ingestors_spark", "session.py")) as fh:
+        tree = ast.parse(fh.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and len(node.args) == 2:
+            key, value = node.args
+            if (
+                isinstance(key, ast.Constant)
+                and key.value == "spark.python.daemon.module"
+            ):
+                return value.value
+    raise AssertionError("session.py no longer sets spark.python.daemon.module")
+
+
+def test_every_package_module_is_reached():
+    """Import closure over the package from its entry points
+    (``__spark_entry__.py``, bench, package root, CLI, python worker
+    daemon), by AST alone. A module nothing reaches is dead code: delete it rather than
+    keep it alive through its own tests."""
+    pkg_dir = os.path.join(REPO, "data_ingestors_spark")
+    files: dict[str, tuple[str, bool]] = {}
+    for root, _dirs, names in os.walk(pkg_dir):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, REPO)[: -len(".py")].split(os.sep)
+            is_pkg = rel[-1] == "__init__"
+            files[".".join(rel[:-1] if is_pkg else rel)] = (path, is_pkg)
+
+    daemon = _daemon_module()
+    assert daemon in files, f"daemon module {daemon} is not in the package"
+    pending = [
+        (os.path.join(REPO, "__spark_entry__.py"), "__spark_entry__", False),
+        (os.path.join(REPO, "bench.py"), "bench", False),
+    ] + [
+        (files[m][0], m, files[m][1])
+        for m in (
+            "data_ingestors_spark",
+            "data_ingestors_spark.cli.frontend",
+            "data_ingestors_spark.cli.__main__",
+            daemon,
+        )
+    ]
+    reached = {module for _path, module, _is_pkg in pending}
+    while pending:
+        path, module, is_pkg = pending.pop()
+        for imp in _package_imports(path, module, is_pkg):
+            parts = imp.split(".")
+            # importing a.b.c runs the __init__ of a and a.b first
+            for k in range(1, len(parts) + 1):
+                m = ".".join(parts[:k])
+                if m in files and m not in reached:
+                    reached.add(m)
+                    pending.append((files[m][0], m, files[m][1]))
+
+    unreached = sorted(set(files) - reached)
+    # io.dbsink is the reference's MySQL upsert target; e2e/ drives it
+    assert unreached == ["data_ingestors_spark.io.dbsink"], unreached

@@ -361,3 +361,29 @@ def test_spread_input_only_when_under_parallel(spark, tmp_path):
 
     wide = _docs(spark, rows).repartition(spark.sparkContext.defaultParallelism)
     assert _spread_input(spark, wide) is wide  # no extra shuffle added
+
+
+@pytest.mark.parametrize("parity", [0, 1])
+def test_refresh_report_single_parity_documents(spark, sf_dir, tmp_path, parity):
+    """``documents`` whose doc_ids all share one parity: the absent
+    batch folds as an empty batch, so batch ids stay ``doc_id % 2`` and
+    the report still matches its oracle."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_ingestors_spark.io.readers import TABLES
+    from data_ingestors_spark.queries.ingestion import O_REFRESH_REPORT, q_refresh_report
+    from tests.oracle_harness import compare
+
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    keep = pc.equal(pc.bit_wise_and(docs["doc_id"], 1), parity)
+    pq.write_table(docs.filter(keep), tmp_path / "documents.parquet")
+
+    got = q_refresh_report(spark, str(tmp_path)).collect()
+    assert got and {r.batch_id for r in got} == {parity}
+    assert compare(
+        spark, str(tmp_path), "refresh_report", q_refresh_report, O_REFRESH_REPORT
+    ) == []

@@ -95,6 +95,22 @@ def _real_png(w, h):
     )
 
 
+def _real_tiff(w, h, byteorder):
+    # header + one IFD: ImageWidth as LONG, ImageLength as SHORT (the
+    # value sits left-justified in the 4-byte field in both orders)
+    o = "little" if byteorder == "II" else "big"
+
+    def entry(tag, typ, val):
+        n = 4 if typ == 4 else 2
+        return (
+            tag.to_bytes(2, o) + typ.to_bytes(2, o) + (1).to_bytes(4, o)
+            + val.to_bytes(n, o) + b"\x00" * (4 - n)
+        )
+
+    ifd = (2).to_bytes(2, o) + entry(256, 4, w) + entry(257, 3, h) + b"\x00" * 4
+    return byteorder.encode() + (42).to_bytes(2, o) + (8).to_bytes(4, o) + ifd
+
+
 def _real_jpeg(w, h):
     # SOI + APP0(JFIF) + SOF0 carrying the frame dimensions
     app0 = b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
@@ -132,7 +148,7 @@ def _core_bmp(w, h):
 
 
 def test_image_resolution_real_headers_no_pil(spark, tmp_path):
-    """Fail-loud V10 without PIL (VERDICT r3 #3): real PNG/JPEG/GIF/BMP
+    """Fail-loud V10 without PIL (VERDICT r3 #3): real PNG/JPEG/GIF/BMP/TIFF
     byte headers must yield exact dimensions via the pure-python
     parsers, and corrupt payloads must FAIL the battery, not warn."""
     from data_ingestors_spark.validators.files import _header_dims
@@ -141,6 +157,8 @@ def test_image_resolution_real_headers_no_pil(spark, tmp_path):
     assert _header_dims(_real_jpeg(1024, 768)) == (1024, 768)
     assert _header_dims(_real_gif(320, 200)) == (320, 200)
     assert _header_dims(_real_bmp(800, 600)) == (800, 600)
+    assert _header_dims(_real_tiff(1280, 720, "II")) == (1280, 720)
+    assert _header_dims(_real_tiff(1280, 720, "MM")) == (1280, 720)
     # legacy CORE-header layout decodes via its own 16-bit offsets
     assert _header_dims(_core_bmp(320, 240)) == (320, 240)
     import pytest as _pytest

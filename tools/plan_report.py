@@ -41,7 +41,7 @@ at runtime). Columns:
   the reader).
 
 Queries that drive iterative jobs (`dedup_clusters`) or Python
-stages (`robust_stats`, multimodal) list the plan of their FINAL
+stages (`robust_stats`) list the plan of their FINAL
 frame; their scale notes live in the operator docstrings.
 
 | query | exch | bhj | smj | cart | wsc | push |
