@@ -22,6 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestors_spark.operators.baskets import (
+    MAX_BASKET_ITEMS,
+    basket_pairs,
+    cap_baskets,
+)
 from data_ingestors_spark.queries.base import (
     DEC,
     davg,
@@ -32,34 +37,6 @@ from data_ingestors_spark.queries.base import (
     o_fround,
     tables,
 )
-
-
-#: Density cap on basket size for the O(k^2)/O(k^3) per-basket
-#: self-joins (item_cosine, copurchase_*, assoc_rules) — the basket
-#: analog of FastSS's ``DEFAULT_MAX_KEY_DF``. A degenerate whale
-#: basket (one key holding m distinct items) emits m^2 (or m^3) rows
-#: from a single input key, which no partitioning strategy can split;
-#: real baskets here are k = 4-7 items per order and <= ~200 per
-#: customer at any SF, so the default only fires on data that should
-#: have been cleaned upstream. Baskets ABOVE the cap are dropped
-#: entirely (deterministic, and the standard treatment — a key that
-#: co-occurs with everything carries no association signal).
-MAX_BASKET_ITEMS = 1000
-
-
-def _cap_baskets(items: DataFrame, key_col: str, cap: int = None) -> DataFrame:
-    """Drop baskets with more than ``cap`` distinct items before a
-    per-basket pair/triple fan-out. One window count over the basket
-    key — the same hash partitioning the downstream self-join needs,
-    so AQE reuses the exchange and the guard costs no extra shuffle
-    of the items frame."""
-    cap = MAX_BASKET_ITEMS if cap is None else cap
-    w = Window.partitionBy(key_col)
-    return (
-        items.withColumn("_bk_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_bk_n") <= cap)
-        .drop("_bk_n")
-    )
 
 
 # ---------------------------------------------------------------- stats
@@ -1041,26 +1018,19 @@ def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at 100 TB ``support`` has one row per distinct part (hundreds of
     millions) and broadcasting it would OOM the driver.
 
-    Whale guard: baskets above :data:`MAX_BASKET_ITEMS` are dropped
-    before the O(k²) fan-out (never fires on sane data — see the
-    constant's doc)."""
+    Whale guard: baskets above
+    :data:`operators.baskets.MAX_BASKET_ITEMS` are dropped before the
+    O(k²) fan-out (never fires on sane data — see the constant's
+    doc)."""
     t = tables(spark, sf_dir, "lineitem")
-    items = _cap_baskets(
+    items = cap_baskets(
         t["lineitem"].select("l_orderkey", "l_partkey").distinct(), "l_orderkey"
     )
-    a = items.alias("a")
-    b = items.alias("b")
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-    )
     top = (
-        pairs.groupBy("part_a", "part_b")
-        .agg(F.count("*").cast("long").alias("n_both"))
+        basket_pairs(items, "l_orderkey", "l_partkey")
+        .select(
+            F.col("item_a").alias("part_a"), F.col("item_b").alias("part_b"), "n_both"
+        )
         .orderBy(F.desc("n_both"), "part_a", "part_b")
         .limit(20)
     )

@@ -8,8 +8,8 @@ time-decayed trends, frequent 3-itemsets, association rules, WOE/IV
 encoding, seasonality strength, repeat-purchase cadence, brand-share
 shift.
 
-Same conventions as queries/__init__; the basket-density cap imports
-from queries.analytics.
+Same conventions as queries/__init__; the basket-density cap and the
+pair fan-out come from operators.baskets.
 """
 
 from __future__ import annotations
@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestors_spark.operators.baskets import (
+    MAX_BASKET_ITEMS,
+    basket_pairs,
+    cap_baskets,
+)
 from data_ingestors_spark.queries.base import (
     DEC,
     davg,
@@ -26,10 +31,6 @@ from data_ingestors_spark.queries.base import (
     o_dsum,
     o_fround,
     tables,
-)
-from data_ingestors_spark.queries.analytics import (
-    MAX_BASKET_ITEMS,
-    _cap_baskets,
 )
 
 QUERIES: dict = {}
@@ -468,11 +469,11 @@ def q_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan (100 TB): distinct (customer, part) collapses map-side; the
     pair fan-out self-joins per CUSTOMER basket (O(k²) in basket
     size, never corpus-quadratic; degenerate whale baskets are
-    DROPPED by the enforced :data:`MAX_BASKET_ITEMS` cap — the guard
-    the r7 docstring only promised); per-part popularity joins stream
-    on the part key — both sides are |parts|-sized, no broadcast. The
-    top-5 window partitions by part. Co-count ≥ 2 prunes the pair
-    tail before any join."""
+    DROPPED by the enforced :data:`operators.baskets.MAX_BASKET_ITEMS`
+    cap — the guard the r7 docstring only promised); per-part
+    popularity joins stream on the part key — both sides are
+    |parts|-sized, no broadcast. The top-5 window partitions by part.
+    Co-count ≥ 2 prunes the pair tail before any join."""
     from data_ingestors_spark.operators.dedup import _materialize
 
     t = tables(spark, sf_dir, "lineitem", "orders")
@@ -483,7 +484,7 @@ def q_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (custkey, partkey) pairs are two longs per row at any scale
     # and the cache is read back by every branch.
     bought = _materialize(
-        _cap_baskets(
+        cap_baskets(
             t["lineitem"]
             .join(t["orders"].select(F.col("o_orderkey").alias("l_orderkey"), "o_custkey"), "l_orderkey")
             .select("o_custkey", "l_partkey")
@@ -491,16 +492,8 @@ def q_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
         )
     )
-    a, b = bought.alias("a"), bought.alias("b")
-    co = (
-        a.join(b, "o_custkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count("*").cast("long").alias("n_both"))
-        .filter(F.col("n_both") >= 2)
+    co = basket_pairs(bought, "o_custkey", "l_partkey", min_support=2).select(
+        F.col("item_a").alias("part_a"), F.col("item_b").alias("part_b"), "n_both"
     )
     pop = bought.groupBy(F.col("l_partkey")).agg(
         F.count("*").cast("long").alias("n")
@@ -1183,9 +1176,9 @@ def q_copurchase_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket of size k emits C(k,3) rows and nothing is corpus-
     quadratic; the count groupBy partial-aggregates and a
     deterministic (n desc, a, b, c) top-20 closes it. Whale baskets
-    above :data:`MAX_BASKET_ITEMS` are dropped before the C(k,3)
-    enumeration (cap applied AFTER the Apriori prefilter, so a basket
-    is judged on its frequent-item size).
+    above :data:`operators.baskets.MAX_BASKET_ITEMS` are dropped
+    before the C(k,3) enumeration (cap applied AFTER the Apriori
+    prefilter, so a basket is judged on its frequent-item size).
     """
     from data_ingestors_spark.operators.dedup import _materialize
 
@@ -1204,7 +1197,7 @@ def q_copurchase_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey")
     )
     fitems = _materialize(
-        _cap_baskets(items.join(freq, "l_partkey", "semi"), "l_orderkey")
+        cap_baskets(items.join(freq, "l_partkey", "semi"), "l_orderkey")
     )
     a = fitems.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
     b = fitems.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
@@ -1270,8 +1263,9 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-quadratic; min-support (>= 2, matching the co-purchase graph) HAVING prunes the pair tail before
     the metric joins; per-part support frames stream on the part key
     (|parts|-sized — NOT broadcast); the 1-row basket total cross-
-    joins broadcast. Whale baskets above :data:`MAX_BASKET_ITEMS`
-    are dropped before the fan-out.
+    joins broadcast. Whale baskets above
+    :data:`operators.baskets.MAX_BASKET_ITEMS` are dropped before the
+    fan-out.
 
     r12-opt note: wrapping ``items`` in ``_materialize`` (as
     ``item_cosine``/``copurchase_triples`` do) was measured and
@@ -1282,19 +1276,13 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     already shares the shuffle across the a/b branches, so the persist
     round-trip costs more than the recomputation it saves."""
     t = tables(spark, sf_dir, "lineitem")
-    items = _cap_baskets(
+    items = cap_baskets(
         t["lineitem"].select("l_orderkey", "l_partkey").distinct(), "l_orderkey"
     )
-    a, b = items.alias("a"), items.alias("b")
-    co = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("antecedent"),
-            F.col("b.l_partkey").alias("consequent"),
-        )
-        .agg(F.count("*").cast("long").alias("n_both"))
-        .filter(F.col("n_both") >= 2)
+    co = basket_pairs(
+        items, "l_orderkey", "l_partkey", min_support=2, directed=True
+    ).select(
+        F.col("item_a").alias("antecedent"), F.col("item_b").alias("consequent"), "n_both"
     )
     support = items.groupBy("l_partkey").agg(F.count("*").cast("long").alias("n_part"))
     total = items.agg(F.countDistinct("l_orderkey").cast("long").alias("n_orders"))

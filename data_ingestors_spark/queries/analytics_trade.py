@@ -116,7 +116,8 @@ def q_basket_size_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     many orders, their share of all orders, and the decimal-exact
     average order total — the shape parameter every co-purchase /
     recommender query in this module implicitly depends on (and the
-    empirical justification for :data:`MAX_BASKET_ITEMS`).
+    empirical justification for
+    :data:`operators.baskets.MAX_BASKET_ITEMS`).
 
     Plan (100 TB): distinct (order, part) collapses map-side, one
     |orders|-row count groupBy, one |sizes|-row histogram groupBy;

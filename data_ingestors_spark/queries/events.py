@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestors_spark.operators.baskets import basket_pairs
 from data_ingestors_spark.queries.base import DEC, tables, dsum, davg, fround, o_davg, o_fround
 
 
@@ -200,46 +201,6 @@ WHERE v.event_type = 'view' AND p.event_type = 'purchase'
 """
 
 
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-type transition matrix: for each user's time-ordered
-    stream, count (previous_type -> type) bigrams and the transition
-    probability within each source type. One shuffle on user_id for
-    the lag, one for the matrix aggregation."""
-    t = tables(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        t["events"]
-        .select("user_id", "ts", "event_id", "event_type")
-        .withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-    )
-    counts = pairs.groupBy("prev_type", F.col("event_type").alias("next_type")).agg(
-        F.count("*").cast("long").alias("n")
-    )
-    w_src = Window.partitionBy("prev_type")
-    return counts.select(
-        "prev_type",
-        "next_type",
-        "n",
-        fround(F.col("n") / F.sum("n").over(w_src), 6).alias("p"),
-    )
-
-
-O_EVENT_TRANSITIONS = f"""
-WITH pairs AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-  FROM events
-), counts AS (
-  SELECT prev_type, event_type AS next_type, CAST(count(*) AS BIGINT) AS n
-  FROM pairs WHERE prev_type IS NOT NULL GROUP BY 1, 2
-)
-SELECT prev_type, next_type, n,
-       {o_fround("CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY prev_type)", 6)} AS p
-FROM counts
-"""
-
-
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-fact interval overlap join: events become intervals
     [ts, ts + 10·value seconds]; pairs of the SAME user whose
@@ -287,7 +248,6 @@ FROM iv a JOIN iv b
 
 QUERIES = {
     "attribution_join": q_attribution_join,
-    "event_transitions": q_event_transitions,
     "tumbling_window": q_tumbling_window,
     "sliding_window": q_sliding_window,
     "session_window": q_session_window,
@@ -298,7 +258,6 @@ QUERIES = {
 
 ORACLES = {
     "attribution_join": O_ATTRIBUTION_JOIN,
-    "event_transitions": O_EVENT_TRANSITIONS,
     "tumbling_window": O_TUMBLING_WINDOW,
     "sliding_window": O_SLIDING_WINDOW,
     "session_window": O_SESSION_WINDOW,
@@ -1297,15 +1256,9 @@ def q_user_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair frame."""
     t = tables(spark, sf_dir, "events")
     ut = t["events"].select("user_id", "event_type").distinct()
-    a, b = ut.alias("a"), ut.alias("b")
-    inter = (
-        a.join(b, "user_id")
-        .filter(F.col("a.event_type") < F.col("b.event_type"))
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count("*").cast("long").alias("n_both"))
+    # uncapped: a user's basket is bounded by the event-type vocabulary
+    inter = basket_pairs(ut, "user_id", "event_type").select(
+        F.col("item_a").alias("type_a"), F.col("item_b").alias("type_b"), "n_both"
     )
     per = ut.groupBy("event_type").agg(F.count("*").cast("long").alias("n_users"))
     return (

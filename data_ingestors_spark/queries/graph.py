@@ -11,8 +11,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestors_spark.functions.rounding import fround, o_fround
+from data_ingestors_spark.operators.baskets import (
+    MAX_BASKET_ITEMS,
+    basket_pairs,
+    cap_baskets,
+)
 from data_ingestors_spark.operators.graph import pagerank, triangle_count
-from data_ingestors_spark.queries.analytics import MAX_BASKET_ITEMS, _cap_baskets
 from data_ingestors_spark.queries.base import tables
 
 QUERIES: dict = {}
@@ -31,25 +35,16 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1.2M pairs at sf0.1), while repeated pairs are signal whose count
     stays roughly constant (~3.5k at both sf0.01 and sf0.1), so the
     downstream triangle join rides a graph that does NOT grow with the
-    fact table. Whale baskets above :data:`MAX_BASKET_ITEMS` are
-    dropped before the O(k^2) fan-out, as in the other basket
-    queries."""
+    fact table. Whale baskets above
+    :data:`operators.baskets.MAX_BASKET_ITEMS` are dropped before the
+    O(k^2) fan-out, as in the other basket queries."""
     t = tables(spark, sf_dir, "lineitem")
-    items = _cap_baskets(
+    items = cap_baskets(
         t["lineitem"].select("l_orderkey", "l_partkey").distinct(), "l_orderkey"
     )
-    a = items.alias("a")
-    b = items.alias("b")
-    return (
-        a.join(b, on=(F.col("a.l_orderkey") == F.col("b.l_orderkey")))
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= _COPURCHASE_MIN_SUPPORT)
-        .select("src", "dst")
-    )
+    return basket_pairs(
+        items, "l_orderkey", "l_partkey", min_support=_COPURCHASE_MIN_SUPPORT
+    ).select(F.col("item_a").alias("src"), F.col("item_b").alias("dst"))
 
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -199,6 +194,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("deg") >= 2) & (F.col("deg") <= _AA_MAX_DEG)
     )
     e = edges.join(deg, "cust")
+    # not basket_pairs: the pair aggregate sums 1/log2(deg), not a count
     pairs = e.alias("a").join(e.alias("b"), "cust").filter(
         F.col("a.part") < F.col("b.part")
     )

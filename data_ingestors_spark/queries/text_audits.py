@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from data_ingestors_spark.operators import dedup as D
 from data_ingestors_spark.operators import similarity as S
 from data_ingestors_spark.operators import text as X
+from data_ingestors_spark.operators.baskets import basket_pairs
 from data_ingestors_spark.functions.rounding import fround, o_fround
 from data_ingestors_spark.queries.base import DEC, tables
 from data_ingestors_spark.queries.text_llm import (
@@ -682,17 +683,14 @@ def q_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("fp_md5", "source")
         .distinct()
     )
-    a, b = fps.alias("a"), fps.alias("b")
+    # uncapped: a fingerprint's basket is bounded by the source count
     return (
-        a.join(
-            b,
-            (F.col("a.fp_md5") == F.col("b.fp_md5"))
-            & (F.col("a.source") < F.col("b.source")),
+        basket_pairs(fps, "fp_md5", "source")
+        .select(
+            F.col("item_a").alias("source_a"),
+            F.col("item_b").alias("source_b"),
+            F.col("n_both").alias("n_shared_fps"),
         )
-        .groupBy(
-            F.col("a.source").alias("source_a"), F.col("b.source").alias("source_b")
-        )
-        .agg(F.count("*").cast("long").alias("n_shared_fps"))
         .orderBy("source_a", "source_b")
     )
 

@@ -2204,6 +2204,8 @@ def test_whale_basket_cap_bounds_fanout(spark, tmp_path):
     turn the per-basket O(k²)/O(k³) fan-outs quadratic: the
     MAX_BASKET_ITEMS cap drops the whale and every basket query
     completes bounded, with the small baskets' results intact."""
+    from data_ingestors_spark.operators import baskets
+    from data_ingestors_spark.operators.baskets import cap_baskets
     from data_ingestors_spark.queries import analytics as A
     from data_ingestors_spark.queries import analytics_stats as AS
     from data_ingestors_spark.queries import graph as G
@@ -2222,7 +2224,7 @@ def test_whale_basket_cap_bounds_fanout(spark, tmp_path):
 
     import unittest.mock as mock
 
-    with mock.patch.object(A, "MAX_BASKET_ITEMS", 10):
+    with mock.patch.object(baskets, "MAX_BASKET_ITEMS", 10):
         pairs = A.q_copurchase_pairs(spark, str(tmp_path)).collect()
         cos = AS.q_item_cosine(spark, str(tmp_path)).collect()
         rules = AS.q_assoc_rules(spark, str(tmp_path)).collect()
@@ -2240,9 +2242,57 @@ def test_whale_basket_cap_bounds_fanout(spark, tmp_path):
     # whale would lift (2,4) and (3,4) to support 2 (2 triangles, 5 edges)
     assert (tri.n_triangles, tri.n_edges) == (1, 3)
     # uncapped, the whale dominates: the guard is what excluded it
-    whale_pairs = A._cap_baskets(li, "l_orderkey", cap=1000)
+    whale_pairs = cap_baskets(li, "l_orderkey")
     assert whale_pairs.count() == li.count()  # cap off -> nothing dropped
 
+
+
+@pytest.mark.parametrize("directed", [False, True])
+@pytest.mark.parametrize("min_support", [1, 2])
+def test_basket_pairs_null_keys_match_duckdb(spark, directed, min_support):
+    """A null basket key or a null item never forms a pair: the
+    ``basket_pairs`` fan-out matches the DuckDB self-join on a frame
+    with a null basket, a null item and one item in two baskets."""
+    import duckdb
+    import pyarrow as pa
+
+    from data_ingestors_spark.operators.baskets import basket_pairs
+
+    rows = [
+        (1, 10), (1, 20),           # item 10 sits in baskets 1 and 2
+        (2, 10), (2, 20), (2, 30),
+        (None, 10), (None, 20),     # null basket: would lift (10, 20) to 3
+        (3, None), (3, 10),         # null item: would pair with 10
+    ]
+    items = spark.createDataFrame(rows, "basket long, item long")
+    got = {
+        tuple(r)
+        for r in basket_pairs(
+            items, "basket", "item", min_support=min_support, directed=directed
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register(
+        "items",
+        pa.table({
+            "basket": pa.array([b for b, _ in rows], pa.int64()),
+            "item": pa.array([i for _, i in rows], pa.int64()),
+        }),
+    )
+    op = "<>" if directed else "<"
+    want = set(con.execute(
+        "SELECT a.item, b.item, count(*) FROM items a JOIN items b"
+        f" ON a.basket = b.basket AND a.item {op} b.item"
+        f" GROUP BY 1, 2 HAVING count(*) >= {min_support}"
+    ).fetchall())
+    assert got == want
+    undirected = {(10, 20): 2} if min_support == 2 else {
+        (10, 20): 2, (10, 30): 1, (20, 30): 1
+    }
+    expect = dict(undirected)
+    if directed:
+        expect.update(((b, a), n) for (a, b), n in undirected.items())
+    assert got == {(a, b, n) for (a, b), n in expect.items()}
 
 def test_supplier_price_outliers_ignores_null_supplier(spark, tmp_path):
     """A null-``l_suppkey`` line is no second supplier: a part with one

@@ -343,3 +343,58 @@ def test_every_package_module_is_reached():
     unreached = sorted(set(files) - reached)
     # io.dbsink is the reference's MySQL upsert target; e2e/ drives it
     assert unreached == ["data_ingestors_spark.io.dbsink"], unreached
+
+
+def _registered_twice(tree) -> list[str]:
+    """Top-level names a module's body defines twice (``def``/``class``)
+    and ``QUERIES``/``ORACLES`` keys it registers twice, through dict
+    literals or ``REG["k"] = ...``. Plain reassignments such as
+    ``O_X = O_X.replace(...)`` are not definitions and do not count."""
+    import ast
+    from collections import Counter
+
+    seen: Counter = Counter()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            seen[node.name] += 1
+            continue
+        if isinstance(node, ast.Assign):
+            targets, value = node.targets, node.value
+        elif isinstance(node, ast.AnnAssign):
+            targets, value = [node.target], node.value
+        else:
+            continue
+        for target in targets:
+            if isinstance(target, ast.Name) and target.id in ("QUERIES", "ORACLES"):
+                if isinstance(value, ast.Dict):
+                    for key in value.keys:
+                        if isinstance(key, ast.Constant):
+                            seen[f"{target.id}[{key.value!r}]"] += 1
+            elif (
+                isinstance(target, ast.Subscript)
+                and isinstance(target.value, ast.Name)
+                and target.value.id in ("QUERIES", "ORACLES")
+                and isinstance(target.slice, ast.Constant)
+            ):
+                seen[f"{target.value.id}[{target.slice.value!r}]"] += 1
+    return sorted(name for name, n in seen.items() if n > 1)
+
+
+def test_no_module_defines_a_top_level_name_twice():
+    """A second top-level ``def`` (or registry key) of the same name
+    silently shadows the first, which then never runs. AST only: no
+    package module is imported."""
+    import ast
+
+    dupes = []
+    pkg_dir = os.path.join(REPO, "data_ingestors_spark")
+    for root, _dirs, names in os.walk(pkg_dir):
+        for name in sorted(names):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            rel = os.path.relpath(path, REPO)
+            dupes += [f"{rel}: {n}" for n in _registered_twice(tree)]
+    assert not dupes, dupes
