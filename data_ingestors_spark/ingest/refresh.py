@@ -35,13 +35,14 @@ compaction. Nothing in the loop ever rescans the corpus:
 5. **Compaction** — every ``compact_every`` fresh batches:
    :func:`~data_ingestors_spark.streaming.neardup.compact_neardup_index`
    folds the monitor's per-batch partitions into one ``__batch=-1``
-   layer and :func:`~data_ingestors_spark.io.writers.compact_table`
+   layer (:func:`~data_ingestors_spark.streaming.batches.compact_batches`)
+   and :func:`~data_ingestors_spark.io.writers.compact_table`
    bin-packs the corpus buckets — partition/file counts stay bounded
    as the store ages instead of growing one layer per batch.
    Compaction runs AFTER the ledger write (the folds' exactly-once
    story must not depend on it), so it carries its own crash
    discipline: the index swap is sibling-write + atomic rename
-   (:func:`~data_ingestors_spark.streaming.neardup.recover_compaction`
+   (:func:`~data_ingestors_spark.streaming.batches.recover_compaction`
    repairs half-swapped states at every loop entry), and
    ``compact_marker.json`` records ``compacted_through`` — a crash
    mid-compaction leaves the marker behind, and the NEXT refresh
@@ -147,7 +148,7 @@ def read_refresh_report(spark: SparkSession, store_dir: str, batch_id: int) -> D
     """One batch's stored per-source novelty report."""
     from pyspark.sql import functions as F
 
-    from data_ingestors_spark.streaming.neardup import BATCH_PART_COL
+    from data_ingestors_spark.streaming.batches import BATCH_PART_COL
 
     return (
         spark.read.parquet(_paths(store_dir)["reports"])
@@ -212,7 +213,7 @@ def refresh_corpus(
 
     # repair any compaction a previous run crashed in the middle of,
     # BEFORE the folds read the indexes
-    from data_ingestors_spark.streaming.neardup import recover_compaction
+    from data_ingestors_spark.streaming.batches import recover_compaction
 
     recover_compaction(p["nd_index"], ("bands", "shingles"))
     recover_compaction(p["emb_index"], ("sketches", "vectors"))

@@ -457,9 +457,12 @@ def compact_table(spark: SparkSession, path: str, *, files_per_bucket: int = 1) 
     incremental upsert appends files to its touched buckets; after
     many batches a bucket holds dozens of tiny files and scan/task
     overhead dominates. Rewrites each bucket directory down to
-    ``files_per_bucket`` files (atomic per bucket: write to a temp
-    sibling, then swap via the Hadoop FS API, so readers never see a
-    half-compacted bucket).
+    ``files_per_bucket`` files. Each bucket is rewritten into a temp
+    sibling first, so a failed rewrite leaves the bucket untouched;
+    the swap is then a Hadoop FS delete followed by a rename, so
+    between those two calls (or after a crash there) the bucket is
+    missing. A delete or rename the filesystem reports as failed
+    raises ``IOError``.
 
     Returns {"buckets": n_compacted, "files_before": .., "files_after": ..}.
     """
@@ -491,8 +494,8 @@ def compact_table(spark: SparkSession, path: str, *, files_per_bucket: int = 1) 
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        jvm_fs.delete(bucket_dir, True)
-        jvm_fs.rename(Path(tmp), bucket_dir)
+        _fs_must(jvm_fs.delete(bucket_dir, True), "delete", bucket_dir)
+        _fs_must(jvm_fs.rename(Path(tmp), bucket_dir), "rename", tmp, bucket_dir)
         files_after += files_per_bucket
     return {"buckets": buckets, "files_before": files_before, "files_after": files_after}
 

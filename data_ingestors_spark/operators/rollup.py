@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestors_spark.io.writers import path_exists
+from data_ingestors_spark.streaming.batches import BATCH_PART_COL, write_batch
 
 BUCKET_PART_COL = "__bucket"
 
@@ -152,9 +153,6 @@ def read_rollup(spark: SparkSession, store_path: str, *, bucket_alias: str = "bu
     )
 
 
-BATCH_PART_COL = "__batch"
-
-
 def rollup_append_partials(
     spark: SparkSession,
     batch: DataFrame,
@@ -167,24 +165,22 @@ def rollup_append_partials(
     bucket: str = "hour",
 ) -> None:
     """Exactly-once-effect rollup refresh for at-least-once upstreams
-    (Structured Streaming ``foreachBatch`` replays the in-flight batch
-    after a crash): instead of merging into the bucket rows — where a
-    replay would double-count the additive partials — each batch's
-    partials land in partitions keyed by (bucket, batch_id). A replay
-    dynamically overwrites ITS OWN partitions with identical content,
-    so the refresh is idempotent by construction, no transaction or
-    marker protocol needed. Readers merge partials at read time
-    (``read_rollup`` detects the layout); ``compact_rollup`` folds
-    accumulated partials offline so read cost stays bounded.
+    (Structured Streaming replays the in-flight batch after a crash):
+    instead of merging into the bucket rows — where a replay would
+    double-count the additive partials — each batch's partials land in
+    partitions keyed by (bucket, batch_id) of a batch-keyed store
+    (streaming/batches.py), so the refresh is idempotent by
+    construction, no transaction or marker protocol needed. Readers
+    merge partials at read time (``read_rollup`` detects the layout);
+    ``compact_rollup`` folds accumulated partials offline so read cost
+    stays bounded.
     """
-    parts = _partials(batch, ts_col, key_cols, val_col, bucket).withColumn(
-        BATCH_PART_COL, F.lit(int(batch_id)).cast("long")
+    write_batch(
+        _partials(batch, ts_col, key_cols, val_col, bucket).repartition(BUCKET_PART_COL),
+        store_path,
+        batch_id,
+        partition_by=(BUCKET_PART_COL, BATCH_PART_COL),
     )
-    parts.repartition(BUCKET_PART_COL).write.mode(
-        "overwrite" if path_exists(spark, store_path) else "errorifexists"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        BUCKET_PART_COL, BATCH_PART_COL
-    ).parquet(store_path)
 
 
 def compact_rollup(
@@ -193,6 +189,9 @@ def compact_rollup(
     """Fold all per-batch partials into a single __batch=-1 layer.
     Offline maintenance: run while no refresh is active (the same
     single-writer discipline as writers.upsert's table lock)."""
+    # Not batches.compact_batches: this store partitions by (__bucket,
+    # __batch) and uses only Spark writes, so it works on any Hadoop
+    # filesystem; compact_batches swaps with local os renames.
     df = spark.read.parquet(store_path)
     if BATCH_PART_COL not in df.columns:
         return

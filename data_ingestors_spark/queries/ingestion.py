@@ -328,7 +328,7 @@ def q_refresh_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from data_ingestors_spark.ingest.refresh import refresh_corpus
-    from data_ingestors_spark.streaming.neardup import BATCH_PART_COL
+    from data_ingestors_spark.streaming.batches import BATCH_PART_COL
 
     docs = tables(spark, sf_dir, "documents")["documents"]
     tmp = tempfile.mkdtemp(prefix="refresh_report_q_")

@@ -2,11 +2,11 @@
 value stream.
 
 Per micro-batch, compress the batch's values into <= B equal-weight
-centroids (operators/digest.py) and write them under a batch-keyed
-partition — centroid sets merge by UNION, so the cumulative digest is
-just the concatenation of partials, a replayed batch overwrites its
-own partition (exactly-once effect, stream_rollup contract), and any
-quantile is answered from the merged centroid frame at read time.
+centroids (operators/digest.py) and write them as one layer of a
+batch-keyed store (streaming/batches.py) — centroid sets merge by
+UNION, so the cumulative digest is just the concatenation of
+partials, and any quantile is answered from the merged centroid frame
+at read time.
 
 This is the streaming percentile monitor for ingest pipelines: track
 p50/p99 of document length / score / latency over an unbounded stream
@@ -16,8 +16,11 @@ global sort, and rank error bounded by ~2/B per merge level.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from data_ingestors_spark.streaming.batches import start_folds, write_batch
 
 
 def digest_fold_batch(
@@ -28,15 +31,10 @@ def digest_fold_batch(
     col: str,
     b: int = 200,
 ) -> None:
-    """Write one micro-batch's centroid digest under __batch=<id>."""
+    """Write one micro-batch's centroid digest as batch ``batch_id``."""
     from data_ingestors_spark.operators.digest import build_digest
 
-    partial = build_digest(batch_df, col, b).withColumn(
-        "__batch", F.lit(int(batch_id))
-    )
-    partial.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("__batch").parquet(store_path)
+    write_batch(build_digest(batch_df, col, b), store_path, batch_id)
 
 
 def stream_quantile_digest(
@@ -50,20 +48,12 @@ def stream_quantile_digest(
 ):
     """Fold a value stream into batch-keyed centroid digests; answer
     quantiles with ``read_stream_quantiles``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        digest_fold_batch(batch_df.sparkSession, batch_df, batch_id, store_path, col, b)
-
-    writer = (
-        values.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_folds(
+        values,
+        checkpoint,
+        partial(digest_fold_batch, store_path=store_path, col=col, b=b),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_stream_quantiles(

@@ -11,10 +11,8 @@ This twin does exactly that:
   identical binning to the batch query) and persists (event_type,
   bin, c_ref, t_ref, vmin, vmax).
 - ``stream_psi_fold`` folds each micro-batch's (event_type, bin)
-  counts into a partition keyed by batch_id — counts are additive, so
-  a replayed batch overwrites its OWN partition with identical
-  content: exactly-once effect with no transactional sink (the same
-  contract as stream_rollup / stream_heavy_hitters).
+  counts into a batch-keyed store (streaming/batches.py) — counts are
+  additive, so the read side just sums the partials.
 - ``read_psi`` merges the partials and computes the same Laplace-
   smoothed PSI arithmetic as the batch query, with one deliberate
   difference: smoothing runs over the FULL fixed n_bins grid (the
@@ -34,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from data_ingestors_spark.streaming.batches import start_folds, write_batch
 
 DEC = "decimal(30,10)"
 
@@ -91,9 +91,7 @@ def stream_psi_fold(
         baseline.select("event_type", "vmin", "vmax").distinct()
     )
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
         partial = (
             batch_df.join(edges, "event_type")
             .groupBy(
@@ -101,20 +99,10 @@ def stream_psi_fold(
                 _bin_col(F.col("vmin"), F.col("vmax"), n_bins).alias("bin"),
             )
             .agg(F.count("*").cast("long").alias("c_new"))
-            .withColumn("__batch", F.lit(int(batch_id)))
         )
-        partial.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("__batch").parquet(store_path)
+        write_batch(partial, store_path, batch_id)
 
-    writer = (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_folds(events, checkpoint, fold, available_now)
 
 
 def read_psi(

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_ingestors_spark.streaming.batches import start_folds
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -246,10 +248,10 @@ def stream_upsert(
     available_now: bool = False,
 ) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
     """Streaming MERGE sink: every micro-batch upserts into the keyed
-    bucketed table via ``foreachBatch``. Exactly-once EFFECT comes from
-    the composition — the checkpoint gives at-least-once batch
-    delivery, and the keyed upsert is idempotent, so a replayed batch
-    after a crash rewrites the same rows instead of duplicating them.
+    bucketed table. Exactly-once EFFECT comes from the composition —
+    the checkpoint gives at-least-once batch delivery, and the keyed
+    upsert is idempotent, so a replayed batch after a crash rewrites
+    the same rows instead of duplicating them.
     This is the production pattern for streaming into a warehouse
     table without a transactional sink.
 
@@ -259,19 +261,10 @@ def stream_upsert(
     the same checkpoint bookkeeping deciding what is "new"."""
     from data_ingestors_spark.io.writers import upsert
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert(batch_df.sparkSession, target_path, batch_df, key=key)
+    def merge_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        upsert(spark, target_path, batch_df, key=key)
 
-    writer = (
-        df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_folds(df, checkpoint, merge_batch, available_now)
 
 
 def stream_rollup(
@@ -287,18 +280,15 @@ def stream_rollup(
 ) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
     """Streaming continuous aggregate: each micro-batch appends its
     rollup PARTIALS into partitions keyed by (bucket, batch_id)
-    (operators/rollup.py rollup_append_partials). Exactly-once EFFECT
-    by construction: foreachBatch replays a crashed batch with the
-    SAME batch_id, which dynamically overwrites its own partitions with
-    identical content — additive merges never double-count. Readers
-    merge partials at read time; compact_rollup folds them offline."""
+    (operators/rollup.py rollup_append_partials), a batch-keyed store
+    (streaming/batches.py), so additive merges never double-count a
+    replayed batch. Readers merge partials at read time;
+    compact_rollup folds them offline."""
     from data_ingestors_spark.operators.rollup import rollup_append_partials
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
         rollup_append_partials(
-            batch_df.sparkSession,
+            spark,
             batch_df,
             store_path,
             batch_id,
@@ -308,14 +298,7 @@ def stream_rollup(
             bucket=bucket,
         )
 
-    writer = (
-        df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_folds(df, checkpoint, fold, available_now)
 
 
 def run_stream_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> DataFrame:

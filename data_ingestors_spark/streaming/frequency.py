@@ -5,23 +5,24 @@ The batch operator (operators/sketches.py:heavy_hitter_candidates +
 the verify join in queries/statistics.py) answers "which values carry
 >= s of all occurrences" in one pass. The streaming twin maintains the
 same answer INCREMENTALLY: each micro-batch writes its own per-value
-counts into a partition keyed by batch_id — counts are additive, so
-the cumulative answer is a groupBy-sum over the partials, and a
-replayed batch (crash between write and checkpoint commit) dynamically
-overwrites its OWN partition with identical content: exactly-once
-effect with no transactional sink, same contract as stream_rollup
-(streaming/events.py:277).
+counts as one layer of a batch-keyed store (streaming/batches.py) —
+counts are additive, so the cumulative answer is a groupBy-sum over
+the partials.
 
 Scale: the per-batch partial is a combiner-friendly groupBy bounded by
 the batch's distinct values; the read-side merge shuffles one row per
 (value, batch) — compact with ``compact_counts`` once batch count
-grows, exactly like the rollup's offline fold.
+grows.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from data_ingestors_spark.streaming.batches import compact_batches, start_folds, write_batch
 
 
 def counts_fold_batch(
@@ -31,15 +32,12 @@ def counts_fold_batch(
     store_path: str,
     col: str,
 ) -> None:
-    """Write one micro-batch's exact value counts under __batch=<id>."""
-    partial = (
-        batch_df.groupBy(F.col(col).alias("w"))
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .withColumn("__batch", F.lit(int(batch_id)))
+    """Write one micro-batch's exact value counts as batch ``batch_id``."""
+    write_batch(
+        batch_df.groupBy(F.col(col).alias("w")).agg(F.count("*").cast("long").alias("cnt")),
+        store_path,
+        batch_id,
     )
-    partial.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("__batch").parquet(store_path)
 
 
 def stream_heavy_hitters(
@@ -52,20 +50,12 @@ def stream_heavy_hitters(
 ):
     """Fold a token stream into batch-keyed count partials; read the
     current heavy-hitter set with ``read_heavy_hitters``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        counts_fold_batch(batch_df.sparkSession, batch_df, batch_id, store_path, col)
-
-    writer = (
-        tokens.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_folds(
+        tokens,
+        checkpoint,
+        partial(counts_fold_batch, store_path=store_path, col=col),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_heavy_hitters(
@@ -86,20 +76,15 @@ def read_heavy_hitters(
 
 
 def compact_counts(spark: SparkSession, store_path: str) -> None:
-    """Fold all batch partials into a single __batch=-1 partition (and
-    remove the folded ones) — bounds the read-side merge width. Safe
-    against replay: a re-run batch would overwrite its (now deleted)
-    partition, and additive merge absorbs it."""
-    import shutil
-    import os
-
-    partials = spark.read.parquet(store_path)
-    folded = (
-        partials.groupBy("w")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .withColumn("__batch", F.lit(-1))
+    """Fold all batch partials into a single summed __batch=-1 layer
+    (crash-safe swap, see ``batches.compact_batches``) — bounds the
+    read-side merge width. Safe against replay: a re-run batch would
+    overwrite its (now deleted) partition, and additive merge absorbs
+    it."""
+    compact_batches(
+        spark,
+        store_path,
+        merge=lambda partials: partials.groupBy("w").agg(
+            F.sum("cnt").cast("long").alias("cnt")
+        ),
     )
-    tmp = store_path.rstrip("/") + "__compact_tmp"
-    folded.write.mode("overwrite").partitionBy("__batch").parquet(tmp)
-    shutil.rmtree(store_path)
-    os.rename(tmp, store_path)

@@ -1,12 +1,10 @@
 """Streaming entity resolution: match a record stream against a static
 reference dictionary at edit distance <= 1, using the batch FastSS
-machinery (operators/fuzzy.py) per micro-batch via foreachBatch.
+machinery (operators/fuzzy.py) per micro-batch.
 
-Same exactly-once-effect construction as stream_rollup /
-stream_neardup: each batch's matches land in a ``__batch=<id>``
-partition under dynamic overwrite, so a replayed batch overwrites its
-own partition with identical content instead of duplicating matches.
-Read the cumulative matches with
+The matches are a batch-keyed store (streaming/batches.py), so a
+replayed batch rewrites its own partition instead of duplicating
+matches. Read the cumulative matches with
 ``spark.read.parquet(matches_path).drop("__batch")``. The sink
 directory is only created once some batch produces at least one match
 (an all-empty prefix of batches writes nothing — an empty partitioned
@@ -16,10 +14,11 @@ treat a missing path as "no matches yet".
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from functools import partial
 
-from data_ingestors_spark.streaming.neardup import BATCH_PART_COL
+from pyspark.sql import DataFrame
+
+from data_ingestors_spark.streaming.batches import start_folds, write_batch
 
 
 def fuzzy_match_fold_batch(
@@ -39,25 +38,17 @@ def fuzzy_match_fold_batch(
     from data_ingestors_spark.io.writers import path_exists
     from data_ingestors_spark.operators.fuzzy import fastss_match
 
-    matched = fastss_match(
-        batch, reference, col, id_col, ref_col, ref_id_col
-    ).withColumn(BATCH_PART_COL, F.lit(int(batch_id)).cast("long"))
+    matched = fastss_match(batch, reference, col, id_col, ref_col, ref_id_col)
 
-    exists = path_exists(spark, matches_path)
     # First creation with zero matches would leave an empty partitioned
     # directory that spark.read.parquet() cannot infer a schema from —
     # skip the write until some batch produces rows (idempotent: a
     # replay of this batch also produces zero rows). Once the sink
     # exists, empty batches write nothing under dynamic overwrite
     # anyway, so only the creation path needs the guard.
-    if not exists and matched.isEmpty():
+    if not path_exists(spark, matches_path) and matched.isEmpty():
         return
-
-    matched.write.mode(
-        "overwrite" if exists else "errorifexists"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy(
-        BATCH_PART_COL
-    ).parquet(matches_path)
+    write_batch(matched, matches_path, batch_id)
 
 
 def stream_fuzzy_match(
@@ -74,27 +65,17 @@ def stream_fuzzy_match(
 ):
     """Streaming fuzzy match of ``docs`` (a streaming DataFrame)
     against the static ``reference``. Returns the started query."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fuzzy_match_fold_batch(
-            batch_df.sparkSession,
-            batch_df,
-            batch_id,
-            reference,
-            matches_path,
+    return start_folds(
+        docs,
+        checkpoint,
+        partial(
+            fuzzy_match_fold_batch,
+            reference=reference,
+            matches_path=matches_path,
             col=col,
             id_col=id_col,
             ref_col=ref_col,
             ref_id_col=ref_id_col,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

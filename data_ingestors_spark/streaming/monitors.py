@@ -8,11 +8,10 @@ event age vs the global data-derived anchor) and q_profile_drift
 Both twins follow drift.py's exactly-once fold contract:
 
 - ``stream_*_fold`` writes each micro-batch's per-type partials into
-  a partition keyed by ``__batch`` — every statistic stored is
-  decomposable (count, sum, min, max, and the (type, user) partial
-  rows that make COUNT(DISTINCT) mergeable), so a replayed batch
-  overwrites its OWN partition with identical content: exactly-once
-  effect with no transactional sink.
+  a batch-keyed store (streaming/batches.py) — every statistic stored
+  is decomposable (count, sum, min, max, and the (type, user) partial
+  rows that make COUNT(DISTINCT) mergeable), so partials from any set
+  of batches merge exactly.
 - ``read_*`` merges the partials with the batch query's exact
   arithmetic (decimal sums for means, microsecond-integer ages), so
   fold(waves) == batch(union of waves) — asserted with checkpoint
@@ -32,16 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestors_spark.streaming.batches import start_folds, write_batch
+
 DEC = "decimal(30,10)"
 
 #: staleness SLA matching the batch audit (1 hour, microseconds)
 STALE_SLA_US = 3_600_000_000
-
-
-def _overwrite_batch_partition(partial: DataFrame, store_path: str) -> None:
-    partial.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("__batch").parquet(store_path)
 
 
 # ---------------------------------------------------------------- freshness
@@ -59,28 +54,15 @@ def stream_freshness_fold(
     (sum / max / min), so the read side reconstructs the batch
     audit exactly."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("n"),
-                F.max(F.unix_micros("ts")).alias("last_us"),
-                F.min(F.unix_micros("ts")).alias("first_us"),
-            )
-            .withColumn("__batch", F.lit(int(batch_id)))
+    def fold(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        partial = batch_df.groupBy("event_type").agg(
+            F.count("*").cast("long").alias("n"),
+            F.max(F.unix_micros("ts")).alias("last_us"),
+            F.min(F.unix_micros("ts")).alias("first_us"),
         )
-        _overwrite_batch_partition(partial, store_path)
+        write_batch(partial, store_path, batch_id)
 
-    writer = (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_folds(events, checkpoint, fold, available_now)
 
 
 def read_freshness(spark: SparkSession, store_path: str) -> DataFrame:
@@ -145,27 +127,14 @@ def stream_profile_fold(
     sketch; see the module docstring for the HLL swap at extreme
     user cardinality."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.groupBy("event_type", "user_id")
-            .agg(
-                F.count("*").cast("long").alias("n"),
-                F.sum(F.col("value").cast(DEC)).alias("sum_val"),
-            )
-            .withColumn("__batch", F.lit(int(batch_id)))
+    def fold(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        partial = batch_df.groupBy("event_type", "user_id").agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(F.col("value").cast(DEC)).alias("sum_val"),
         )
-        _overwrite_batch_partition(partial, store_path)
+        write_batch(partial, store_path, batch_id)
 
-    writer = (
-        events.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_folds(events, checkpoint, fold, available_now)
 
 
 def read_profile_drift(

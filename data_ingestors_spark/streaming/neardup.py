@@ -13,10 +13,9 @@ Per micro-batch:
    index holds (doc_id, band, bucket) longs only, never text;
 3. exact-Jaccard verify against the accumulated shingle store;
 4. append this batch's bands/shingles to the index and its verified
-   pairs to the output — ALL writes partitioned by batch_id, so a
-   crash-replayed batch dynamically overwrites its own partitions with
-   identical content (the same exactly-once-effect construction as
-   stream_rollup; no transactional sink needed).
+   pairs to the output — all three are batch-keyed stores
+   (streaming/batches.py), so a crash-replayed batch rewrites its own
+   partitions with identical content.
 
 Coverage argument: a pair (a, b) is checked exactly when the LATER of
 the two arrives (or both in one batch, guarded by id order), so after
@@ -30,10 +29,19 @@ collisions only; the stream never joins old-vs-old again.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-BATCH_PART_COL = "__batch"
+from data_ingestors_spark.streaming.batches import (
+    BATCH_PART_COL,
+    compact_batches,
+    read_prior,
+    start_folds,
+    write_all,
+    write_batch,
+)
 
 
 def _batch_index_frames(
@@ -127,16 +135,8 @@ def neardup_fold_batch(
     if have_index:
         # a replayed batch's own earlier partitions may be present;
         # exclude them so its pairs come out identical, not doubled
-        old_bands = (
-            spark.read.parquet(bands_dir)
-            .filter(F.col(BATCH_PART_COL) != int(batch_id))
-            .select("doc_id", "band", "bucket")
-        )
-        old_sh = (
-            spark.read.parquet(sh_dir)
-            .filter(F.col(BATCH_PART_COL) != int(batch_id))
-            .select("doc_id", "shingles")
-        )
+        old_bands = read_prior(spark, bands_dir, batch_id).select("doc_id", "band", "bucket")
+        old_sh = read_prior(spark, sh_dir, batch_id).select("doc_id", "shingles")
         all_bands = new_bands.unionByName(old_bands)
         all_sh = new_sh.unionByName(old_sh)
 
@@ -168,43 +168,18 @@ def neardup_fold_batch(
         pairs.select("id_a", "id_b", (inter / union).alias("j"))
         .filter(F.col("j") >= threshold)
         .select("id_a", "id_b", fround(F.col("j"), 6).alias("jaccard"))
-        .withColumn(BATCH_PART_COL, F.lit(int(batch_id)).cast("long"))
     )
 
     # The three writes land on DISTINCT paths and each reads only the
     # persisted shingle/signature caches (plus prior-batch parquet), so
     # they are independent jobs — run them concurrently (r12-opt,
-    # guide §2.6) instead of paying three serial job latencies. The
-    # fold still returns only after ALL writes landed, so callers'
-    # ledger/exactly-once discipline is unchanged. Overwrite mode is a
-    # PER-WRITE option (r13, ADVICE r12 low #3): it takes precedence
-    # over the session conf, so no session-level set/restore exists to
-    # race across these (or the caller's) threads.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_pairs():
-        verified.write.mode(
-            "overwrite" if path_exists(spark, pairs_path) else "errorifexists"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            BATCH_PART_COL
-        ).parquet(pairs_path)
-
-    def _write_index(frame, path):
-        frame.withColumn(BATCH_PART_COL, F.lit(int(batch_id)).cast("long")).write.mode(
-            "overwrite" if path_exists(spark, path) else "errorifexists"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            BATCH_PART_COL
-        ).parquet(path)
-
+    # guide §2.6) instead of paying three serial job latencies.
     try:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_write_pairs),
-                pool.submit(_write_index, new_bands, bands_dir),
-                pool.submit(_write_index, new_sh, sh_dir),
-            ]
-            for f in futs:
-                f.result()
+        write_all(
+            partial(write_batch, verified, pairs_path, batch_id),
+            partial(write_batch, new_bands, bands_dir, batch_id),
+            partial(write_batch, new_sh, sh_dir, batch_id),
+        )
     finally:
         # free the shingle/signature caches so long streams don't
         # accumulate storage memory
@@ -229,127 +204,39 @@ def stream_neardup(
     """Streaming near-dup query over a document stream. Read the
     cumulative verified pairs with
     ``spark.read.parquet(pairs_path).drop("__batch")``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        neardup_fold_batch(
-            batch_df.sparkSession,
-            batch_df,
-            batch_id,
-            index_path,
-            pairs_path,
+    return start_folds(
+        docs,
+        checkpoint,
+        partial(
+            neardup_fold_batch,
+            index_path=index_path,
+            pairs_path=pairs_path,
             text_col=text_col,
             id_col=id_col,
             num_hashes=num_hashes,
             bands=bands,
             shingle_n=shingle_n,
             threshold=threshold,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# sibling-directory suffixes for the crash-safe compaction swap
-_COMPACT_TMP = "__compacting"
-_COMPACT_OLD = "__precompact"
-
-
-def recover_compaction(index_path: str, subdirs: tuple[str, ...]) -> None:
-    """Repair a compaction interrupted mid-swap (see _compact_index).
-
-    State machine per subdir (write-tmp → rename live→old →
-    rename tmp→live → rm old):
-
-    - live missing, old present: crashed between the two renames —
-      restore the original (``old`` → live); the interrupted
-      compaction simply never happened. The tmp copy (complete at
-      that point by ordering) is discarded.
-    - live present, old present: crashed before the old layer was
-      removed — finish by deleting ``old``.
-    - tmp present, live present: crashed before the swap started —
-      discard the partial/complete tmp copy.
-
-    Every terminal state leaves ``live`` holding either the exact
-    pre-compaction or the exact post-compaction row set (the two are
-    semantically identical: compaction is pure row movement)."""
-    import os
-    import shutil
-
-    for sub in subdirs:
-        live = f"{index_path}/{sub}"
-        tmp = live + _COMPACT_TMP
-        old = live + _COMPACT_OLD
-        if not os.path.isdir(live) and os.path.isdir(old):
-            os.rename(old, live)
-        if os.path.isdir(old) and os.path.isdir(live):
-            shutil.rmtree(old)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-
-
-def _compact_index(spark, index_path: str, subdirs: tuple[str, ...]) -> None:
-    """Fold the accumulated per-batch index partitions into a single
-    __batch=-1 layer so partition counts stay bounded as the stream
-    ages. Offline maintenance (single-writer discipline, same
-    contract as operators/rollup.py compact_rollup); folding is pure
-    row movement — index rows are immutable facts, so no merge math
-    is involved and emitted pairs are unaffected.
-
-    Crash-safe: the folded layer is written to a SIBLING directory
-    first, then swapped in with two directory renames (local-FS
-    atomic each); the live index is never the write target, so a
-    crash at any point leaves a complete copy on disk and
-    :func:`recover_compaction` (run here and at every refresh-loop
-    entry) repairs the half-swapped states. The pre-r12 form
-    overwrote the live path in place — a mid-write crash lost the
-    index permanently (ADVICE r12 #1)."""
-    import os
-    import shutil
-
-    recover_compaction(index_path, subdirs)
-    for sub in subdirs:
-        live = f"{index_path}/{sub}"
-        tmp = live + _COMPACT_TMP
-        old = live + _COMPACT_OLD
-        df = spark.read.parquet(live)
-        folded = df.drop(BATCH_PART_COL).withColumn(
-            BATCH_PART_COL, F.lit(-1).cast("long")
-        )
-        # the write target is a sibling, not the read path, so no
-        # localCheckpoint materialization is needed (pre-r12 the
-        # in-place overwrite required one — and its volatility was
-        # exactly the crash-loss window). STATIC overwrite is
-        # load-bearing: under dynamic mode only the __batch=-1
-        # partitions would be replaced and the stale per-batch layers
-        # would survive, doubling every index row (the compact_rollup
-        # bug class — regression-tested there and here). Per-write
-        # option so an ambient dynamic mode cannot leak in (r13).
-        folded.write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy(BATCH_PART_COL).parquet(tmp)
-        os.rename(live, old)
-        os.rename(tmp, live)
-        shutil.rmtree(old)
 
 
 def compact_neardup_index(spark, index_path: str) -> None:
     """Fold the MinHash monitor's per-batch band/shingle partitions
-    into one __batch=-1 layer (see ``_compact_index``)."""
-    _compact_index(spark, index_path, ("bands", "shingles"))
+    into one __batch=-1 layer each (see ``batches.compact_batches``).
+    Index rows are immutable facts, so folding is pure row movement
+    and emitted pairs are unaffected."""
+    for sub in ("bands", "shingles"):
+        compact_batches(spark, f"{index_path}/{sub}")
 
 
 def compact_embedding_neardup_index(spark, index_path: str) -> None:
     """Fold the embedding monitor's per-batch sketch/vector
-    partitions into one __batch=-1 layer (see ``_compact_index``)."""
-    _compact_index(spark, index_path, ("sketches", "vectors"))
+    partitions into one __batch=-1 layer each (see
+    ``compact_neardup_index``)."""
+    for sub in ("sketches", "vectors"):
+        compact_batches(spark, f"{index_path}/{sub}")
 
 
 # ------------------------------------------------- incremental dedup monitor
@@ -372,13 +259,10 @@ def incremental_dedup_fold_batch(
     operators/dedup.py incremental_dedup_report (the two share the
     report computation, _novelty_report, so they cannot drift).
 
-    Exactly-once under checkpoint replay, monitors.py-style: both the
-    report rows and the batch's fingerprint rows land in partitions
-    keyed by ``__batch``; the corpus probe EXCLUDES the current batch
-    id, so a replayed batch sees the identical prior-corpus state and
-    overwrites its own partitions with identical content (unlike the
-    batch-API build_fingerprint_index, whose merge fold is
-    at-least-once).
+    Exactly-once under checkpoint replay: the report and the batch's
+    fingerprint rows are batch-keyed stores and the corpus probe reads
+    only prior batches (streaming/batches.py), unlike the batch-API
+    build_fingerprint_index, whose merge fold is at-least-once.
 
     Scale: the index holds (fp_md5) per (__batch, __bucket) partition
     — ids only, never text. The probe reads ONLY the batch's touched
@@ -411,20 +295,15 @@ def incremental_dedup_fold_batch(
         touched = [r[0] for r in b.select(BUCKET_COL).distinct().collect()]
         if path_exists(spark, fps_dir) and touched:
             idx = (
-                spark.read.parquet(fps_dir)
-                .filter(
-                    (F.col(BATCH_PART_COL) != int(batch_id))
-                    & F.col(BUCKET_COL).isin(touched)
-                )
+                read_prior(spark, fps_dir, batch_id)
+                .filter(F.col(BUCKET_COL).isin(touched))
                 .select("fp_md5")
                 .distinct()
                 .select("fp_md5", F.lit(1).alias("in_corpus"))
             )
         else:
             idx = spark.createDataFrame([], "fp_md5 string, in_corpus int")
-        report = _novelty_report(
-            b.drop(BUCKET_COL).join(idx, "fp_md5", "left")
-        ).withColumn(BATCH_PART_COL, F.lit(int(batch_id)).cast("long"))
+        report = _novelty_report(b.drop(BUCKET_COL).join(idx, "fp_md5", "left"))
         # r12-opt (guide §6 small files): cluster on the bucket column
         # before the two-level partitionBy write — unclustered, every
         # task writes one file into every bucket directory it holds
@@ -437,31 +316,18 @@ def incremental_dedup_fold_batch(
             b.select("fp_md5", BUCKET_COL)
             .distinct()
             .repartition(n_buckets, F.col(BUCKET_COL))
-            .withColumn(BATCH_PART_COL, F.lit(int(batch_id)).cast("long"))
         )
         # the two writes land on distinct paths and both read only the
         # persisted batch frame (+ prior-batch fps, whose file listing
         # was captured above) — run them concurrently (r12-opt, guide
-        # §2.6); the fold still returns only after both landed
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_report():
-            report.write.mode(
-                "overwrite" if path_exists(spark, reports_path) else "errorifexists"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                BATCH_PART_COL
-            ).parquet(reports_path)
-
-        def _write_fps():
-            new_fps.write.mode(
-                "overwrite" if path_exists(spark, fps_dir) else "errorifexists"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                BATCH_PART_COL, BUCKET_COL
-            ).parquet(fps_dir)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(_write_report), pool.submit(_write_fps)]:
-                f.result()
+        # §2.6)
+        write_all(
+            partial(write_batch, report, reports_path, batch_id),
+            partial(
+                write_batch, new_fps, fps_dir, batch_id,
+                partition_by=(BATCH_PART_COL, BUCKET_COL),
+            ),
+        )
     finally:
         b.unpersist()
 
@@ -481,30 +347,20 @@ def stream_incremental_dedup(
     """Continuous incremental-dedup monitor over a document stream:
     per micro-batch, the per-source novelty report vs everything seen
     in PRIOR batches. Read results with :func:`read_incremental_dedup`."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_dedup_fold_batch(
-            batch_df.sparkSession,
-            batch_df,
-            batch_id,
-            index_path,
-            reports_path,
+    return start_folds(
+        docs,
+        checkpoint,
+        partial(
+            incremental_dedup_fold_batch,
+            index_path=index_path,
+            reports_path=reports_path,
             text_col=text_col,
             id_col=id_col,
             source_col=source_col,
             n_buckets=n_buckets,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_incremental_dedup(spark, reports_path: str) -> DataFrame:
@@ -535,11 +391,10 @@ def embedding_neardup_fold_batch(
     ``neardup_fold_batch`` (text MinHash) and ``stream_fuzzy_match``
     (string FastSS): the third modality of incremental dedup.
 
-    Same exactly-once construction: sketches, vectors, and pairs all
-    write partitioned by batch id with dynamic overwrite, so a
-    crash-replayed batch rewrites its own partitions with identical
-    content (the hyperplanes are seeded literals — sketches are
-    deterministic across runs and processes).
+    Same exactly-once construction: sketches, vectors, and pairs are
+    all batch-keyed stores (streaming/batches.py), and a replayed
+    batch's rewrite is identical because the hyperplanes are seeded
+    literals — sketches are deterministic across runs and processes.
 
     The analytic gate is honest about geometry exactly like the batch
     operator: thresholds where recall-safe hyperplane LSH cannot
@@ -593,17 +448,8 @@ def embedding_neardup_fold_batch(
     vec_dir = f"{index_path}/vectors"
     all_sk, all_vec = new_sk, new_vec
     if path_exists(spark, sk_dir):
-        # exclude a replayed batch's own earlier partitions (idempotence)
-        old_sk = (
-            spark.read.parquet(sk_dir)
-            .filter(F.col(BATCH_PART_COL) != int(batch_id))
-            .select("vec_id", "tbl", "bucket")
-        )
-        old_vec = (
-            spark.read.parquet(vec_dir)
-            .filter(F.col(BATCH_PART_COL) != int(batch_id))
-            .select("vec_id", "vec")
-        )
+        old_sk = read_prior(spark, sk_dir, batch_id).select("vec_id", "tbl", "bucket")
+        old_vec = read_prior(spark, vec_dir, batch_id).select("vec_id", "vec")
         all_sk = new_sk.unionByName(old_sk)
         all_vec = new_vec.unionByName(old_vec)
 
@@ -636,44 +482,18 @@ def embedding_neardup_fold_batch(
         )
         .select("id_a", "id_b", sim.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
-        .withColumn(BATCH_PART_COL, F.lit(int(batch_id)).cast("long"))
     )
 
     # r13-opt (guide §2.6, VERDICT r12 #6): the three writes land on
     # DISTINCT paths (pairs / sketches / vectors) and all read only the
     # persisted new_sk/new_vec caches plus prior-batch parquet — the
-    # exact shape the text fold already runs concurrently. The fold
-    # still returns only after ALL writes landed, so the caller's
-    # ledger-last / exactly-once discipline is unchanged; a failure in
-    # any write propagates out of .result() and leaves the batch
-    # un-ledgered, same as the serial form.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_pairs():
-        verified.write.mode(
-            "overwrite" if path_exists(spark, pairs_path) else "errorifexists"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            BATCH_PART_COL
-        ).parquet(pairs_path)
-
-    def _write_index(frame, path):
-        frame.withColumn(
-            BATCH_PART_COL, F.lit(int(batch_id)).cast("long")
-        ).write.mode(
-            "overwrite" if path_exists(spark, path) else "errorifexists"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            BATCH_PART_COL
-        ).parquet(path)
-
+    # exact shape the text fold already runs concurrently.
     try:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_write_pairs),
-                pool.submit(_write_index, new_sk, sk_dir),
-                pool.submit(_write_index, new_vec, vec_dir),
-            ]
-            for f in futs:
-                f.result()
+        write_all(
+            partial(write_batch, verified, pairs_path, batch_id),
+            partial(write_batch, new_sk, sk_dir, batch_id),
+            partial(write_batch, new_vec, vec_dir, batch_id),
+        )
     finally:
         new_sk.unpersist()
         new_vec.unpersist()
@@ -694,27 +514,17 @@ def stream_embedding_neardup(
     """Streaming embedding near-dup query over a vector stream. Read
     the cumulative verified pairs with
     ``spark.read.parquet(pairs_path).drop("__batch")``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        embedding_neardup_fold_batch(
-            batch_df.sparkSession,
-            batch_df,
-            batch_id,
-            index_path,
-            pairs_path,
+    return start_folds(
+        vecs,
+        checkpoint,
+        partial(
+            embedding_neardup_fold_batch,
+            index_path=index_path,
+            pairs_path=pairs_path,
             id_col=id_col,
             vec_col=vec_col,
             threshold=threshold,
             recall_eps=recall_eps,
-        )
-
-    writer = (
-        vecs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -398,3 +398,56 @@ def test_no_module_defines_a_top_level_name_twice():
             rel = os.path.relpath(path, REPO)
             dupes += [f"{rel}: {n}" for n in _registered_twice(tree)]
     assert not dupes, dupes
+
+
+def _batch_store_leaks(tree) -> list[str]:
+    """Non-docstring strings naming ``__batch``, ``.foreachBatch``
+    attributes and ``BATCH_PART_COL =`` assignments in one module."""
+    import ast
+
+    docstrings = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            body = node.body
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+                docstrings.add(id(body[0].value))
+    leaks = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "__batch" in node.value
+            and id(node) not in docstrings
+        ):
+            leaks.append(f"{node.lineno}: {node.value!r}")
+        elif isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+            leaks.append(f"{node.lineno}: .foreachBatch")
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            if any(isinstance(t, ast.Name) and t.id == "BATCH_PART_COL" for t in targets):
+                leaks.append(f"{node.lineno}: BATCH_PART_COL =")
+    return leaks
+
+
+def test_batch_store_lives_in_one_module():
+    """The batch-keyed store's column name, its ``foreachBatch``
+    driver and its constant belong to ``streaming/batches.py`` alone;
+    every other module goes through that module's functions. AST only:
+    no package module is imported."""
+    import ast
+
+    pkg_dir = os.path.join(REPO, "data_ingestors_spark")
+    owner = os.path.join(pkg_dir, "streaming", "batches.py")
+    with open(owner) as fh:
+        assert _batch_store_leaks(ast.parse(fh.read(), owner)), "owner lost the store"
+    leaks = []
+    for root, _dirs, names in os.walk(pkg_dir):
+        for name in sorted(names):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == owner:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            rel = os.path.relpath(path, REPO)
+            leaks += [f"{rel}:{leak}" for leak in _batch_store_leaks(tree)]
+    assert not leaks, leaks

@@ -94,7 +94,7 @@ def test_refresh_monitor_cumulative_equals_batch(spark, store):
     operator run once over the union of both batches — including
     pairs that span the two batches."""
     from data_ingestors_spark.operators.dedup import minhash_near_duplicates
-    from data_ingestors_spark.streaming.neardup import BATCH_PART_COL
+    from data_ingestors_spark.streaming.batches import BATCH_PART_COL
 
     union = spark.read.parquet(store["b1"]).unionByName(
         spark.read.parquet(store["b2"])
@@ -134,7 +134,7 @@ def test_refresh_compaction_ran_and_bounded_layers(spark, store):
     """compact_every=2 fired on batch 2: the near-dup index is folded
     to the single __batch=-1 layer (bounded partition count) and the
     monitor comparison above still held AFTER compaction."""
-    from data_ingestors_spark.streaming.neardup import BATCH_PART_COL
+    from data_ingestors_spark.streaming.batches import BATCH_PART_COL
 
     assert store["r2"]["compacted"] is True and "compact_stats" in store["r2"]
     bands = spark.read.parquet(
@@ -169,7 +169,7 @@ def test_refresh_embedding_monitor(spark, tmp_path):
 
     from data_ingestors_spark.ingest.refresh import refresh_corpus
     from data_ingestors_spark.operators.similarity import blocked_cosine_pairs
-    from data_ingestors_spark.streaming.neardup import BATCH_PART_COL
+    from data_ingestors_spark.streaming.batches import BATCH_PART_COL
 
     rng = np.random.RandomState(97)
     base = rng.randn(6, 16)
@@ -224,7 +224,7 @@ def test_recover_compaction_state_machine(tmp_path):
     live+tmp → drop tmp. Pure directory mechanics, no Spark."""
     import shutil
 
-    from data_ingestors_spark.streaming.neardup import (
+    from data_ingestors_spark.streaming.batches import (
         _COMPACT_OLD,
         _COMPACT_TMP,
         recover_compaction,
@@ -266,6 +266,36 @@ def test_recover_compaction_state_machine(tmp_path):
     assert (idx / "bands" / "part-0.parquet").read_text() == "original"
 
 
+def test_compact_table_raises_when_swap_rename_fails(spark, tmp_path, monkeypatch):
+    """Hadoop FileSystem reports a failed rename by returning False;
+    compact_table must raise instead of reporting success with the
+    bucket directory already deleted."""
+    from data_ingestors_spark.io import writers
+
+    table = str(tmp_path / "table")
+    spark.range(30).repartition(3).write.parquet(f"{table}/__bucket=0")
+
+    real_hadoop_fs = writers.hadoop_fs
+
+    class RenameFails:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            return False
+
+    def failing_fs(spark, path):
+        fs, jpath = real_hadoop_fs(spark, path)
+        return RenameFails(fs), jpath
+
+    monkeypatch.setattr(writers, "hadoop_fs", failing_fs)
+    with pytest.raises(IOError, match="rename"):
+        writers.compact_table(spark, table)
+
+
 def test_refresh_compaction_overdue_catchup(spark, tmp_path):
     """A compaction cycle that never completed (crash after the ledger
     write) re-runs on the NEXT refresh via the compacted_through
@@ -273,7 +303,7 @@ def test_refresh_compaction_overdue_catchup(spark, tmp_path):
     import json as _json
 
     from data_ingestors_spark.ingest.refresh import refresh_corpus
-    from data_ingestors_spark.streaming.neardup import BATCH_PART_COL
+    from data_ingestors_spark.streaming.batches import BATCH_PART_COL
 
     store_dir = str(tmp_path / "store")
     # batches 0 and 1 with compaction disabled == "ledgered but the
@@ -313,7 +343,7 @@ def test_refresh_repairs_halfswapped_index_at_entry(spark, tmp_path):
 
     from data_ingestors_spark.ingest.refresh import refresh_corpus
     from data_ingestors_spark.operators.dedup import minhash_near_duplicates
-    from data_ingestors_spark.streaming.neardup import _COMPACT_OLD, BATCH_PART_COL
+    from data_ingestors_spark.streaming.batches import _COMPACT_OLD, BATCH_PART_COL
 
     store_dir = str(tmp_path / "store")
     b0 = _write_batch(

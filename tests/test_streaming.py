@@ -502,6 +502,39 @@ def test_stream_heavy_hitters_matches_batch_and_replay(spark, tmp_path):
     assert {(r.w, r.cnt) for r in read_heavy_hitters(spark, store, 1, 10).collect()} == truth
 
 
+def test_compact_counts_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch):
+    """A crash between compaction's two swap renames (live store moved
+    aside, folded copy not yet in place) loses nothing: the next
+    compaction restores the store first, then folds it."""
+    import os
+
+    import pytest
+
+    from data_ingestors_spark.streaming import compact_counts, counts_fold_batch, read_heavy_hitters
+
+    store = str(tmp_path / "counts")
+    waves = [[("hot",)] * 5 + [("cold",)], [("hot",)] * 3 + [("warm",)] * 4]
+    for batch_id, rows in enumerate(waves):
+        counts_fold_batch(spark, spark.createDataFrame(rows, "w string"), batch_id, store, "w")
+    before = {(r.w, r.cnt) for r in read_heavy_hitters(spark, store, 1, 10).collect()}
+    assert before == {("hot", 8), ("warm", 4)}
+
+    real_rename = os.rename
+
+    def crash_into_store(src, dst):
+        if os.fspath(dst) == store:
+            raise OSError("simulated crash before the folded copy is swapped in")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_into_store)
+    with pytest.raises(OSError):
+        compact_counts(spark, store)
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    compact_counts(spark, store)
+    assert {(r.w, r.cnt) for r in read_heavy_hitters(spark, store, 1, 10).collect()} == before
+
+
 def test_stream_quantile_digest_matches_batch(spark, tmp_path):
     """Streaming digest: quantiles read after folding two waves must
     match the batch digest over the union within the rank-error
