@@ -198,6 +198,7 @@ class Ingestor:
             if raw.rdd.getNumPartitions() < par:
                 raw = raw.repartition(par)
         raw.cache()
+        augmented = None
         try:
             total = raw.count()
 
@@ -322,10 +323,11 @@ class Ingestor:
 
             # in-batch duplicate data_ids collapse in the upsert's
             # deterministic dedup; the reference treats duplicate keys
-            # as updates, never failures. The upsert reports the count
-            # from its own single merge-count aggregation — the r3
-            # standalone count_distinct job (the ingest throughput
-            # regression) is gone.
+            # as updates, never failures. The upsert takes that count
+            # from work it runs anyway (observed on a fresh table's
+            # write; the merge's per-bucket aggregation) — no
+            # standalone count_distinct job (the r3 ingest throughput
+            # regression).
             updated, inserted, deduped = upsert(
                 self.spark, self.target_path, ok, key="data_id"
             )
@@ -367,3 +369,5 @@ class Ingestor:
             )
         finally:
             raw.unpersist()
+            if augmented is not None:
+                augmented.unpersist()

@@ -154,10 +154,6 @@ def read_csv_header(
     return names
 
 
-def check_duplicate_header(spark: SparkSession, path: str) -> None:
-    read_csv_header(spark, path)
-
-
 def read_csv_source(
     spark: SparkSession,
     path: str,

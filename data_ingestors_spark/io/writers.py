@@ -15,7 +15,10 @@ per-record fallback isolation. Spark-first equivalents:
 - batch dedup on the key is DETERMINISTIC (row_number over a stable
   content hash), because ``dropDuplicates`` keeps an arbitrary row and
   an ambiguous merge source must not resolve differently per run;
-- both merge counts (updated, inserted) come from ONE aggregation job;
+- no job runs just to count: the merge counts (updated, inserted,
+  deduped) are observed on the write or on the merge's lineage
+  checkpoint, next to the one per-bucket aggregation the merge needs
+  to find its touched buckets;
 - per-record fallback isolation is replaced by *pre-validation
   splitting* (SURVEY.md §7 hard-part 1): rows that would violate
   constraints split off before the write.
@@ -31,7 +34,7 @@ With Delta/Iceberg jars on the classpath, swap the write for a real
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 BUCKET_COL = "__bucket"
@@ -78,14 +81,25 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 DUPS_COL = "__dups"
 
 
+def _bucket_of(key: str, n_buckets: int):
+    """The bucket a key hashes to: ``pmod(xxhash64(key), n_buckets)``."""
+    return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int")
+
+
 def _cluster_by_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Repartition on the bucket column before a partitionBy write.
-    Without this, every task writes a file into every bucket directory
-    it holds rows for — tasks × buckets files (measured 640 files /
-    5.0 s for a 150k-row batch; clustered: 64 files / 1.0 s). The
-    extra shuffle is rows-sized and cheap; the file-count explosion is
-    not — at 100 TB it's also what keeps bucket directories scannable."""
-    return df.repartition(n_buckets, F.col(BUCKET_COL))
+    """Hash-repartition on the bucket column before a partitionBy
+    write, into ``min(n_buckets, defaultParallelism)`` partitions. Each
+    bucket lands in exactly one task, which writes one file per bucket
+    it holds: one file per touched bucket per write, whatever the
+    partition count. Without the clustering every task writes a file
+    into every bucket directory it holds rows for — tasks × buckets
+    files (a 150k-row batch into 64 buckets measured 640 files / 5.0 s
+    unclustered, 64 files / 1.0 s clustered). Capping the partitions
+    at the cores keeps a small batch from paying one task per bucket;
+    with at least ``n_buckets`` cores the plan is one partition per
+    bucket."""
+    parts = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(parts, F.col(BUCKET_COL))
 
 
 def _dedup_deterministic(batch: DataFrame, key: str) -> DataFrame:
@@ -123,9 +137,13 @@ def upsert(
     table. WHEN MATCHED → the batch row wins; WHEN NOT MATCHED →
     insert. Returns (updated, inserted, deduped) where ``deduped`` is
     the number of in-batch rows collapsed by the deterministic key
-    dedup — all three come from the ONE merge-count aggregation, no
-    extra job. Only the hash buckets present in the batch are read,
-    merged, and rewritten.
+    dedup. No job runs just to count: a fresh table's counts are
+    observed on its write; a merge takes the batch size and ``deduped``
+    from the per-bucket aggregation that also names the touched
+    buckets, and ``updated`` from the rows observed on the current
+    buckets and on their kept rows during the lineage checkpoint. Only
+    the hash buckets present in the batch are read, merged, and
+    rewritten.
 
     Schema drift is an ERROR, never silent: a batch missing table
     columns, or carrying new ones without ``allow_evolution=True``,
@@ -135,30 +153,24 @@ def upsert(
     table once so every parquet file carries the same schema, because
     a mixed-schema directory silently drops the new column on read
     unless every reader remembers mergeSchema."""
-    batch = _dedup_deterministic(batch, key)
-    batch = batch.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int")
-    )
+    batch = _dedup_deterministic(batch, key).withColumn(BUCKET_COL, _bucket_of(key, n_buckets))
 
     if not path_exists(spark, target_path):
-        batch = batch.persist()
-        try:
-            row = batch.agg(
-                F.count("*").alias("n"), F.sum(DUPS_COL).alias("deduped")
-            ).collect()[0]
-            write_table(
-                _cluster_by_bucket(batch.drop(DUPS_COL), n_buckets),
-                target_path, "overwrite", [BUCKET_COL],
-            )
-            return (0, int(row["n"]), int(row["deduped"] or 0))
-        finally:
-            batch.unpersist()
+        obs = Observation()
+        observed = batch.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.sum(DUPS_COL).alias("deduped")
+        )
+        write_table(
+            _cluster_by_bucket(observed.drop(DUPS_COL), n_buckets),
+            target_path, "overwrite", [BUCKET_COL],
+        )
+        return (0, int(obs.get["n"]), int(obs.get["deduped"] or 0))
 
     batch = batch.persist()
     try:
-        all_current = spark.read.parquet(target_path)
+        current = spark.read.parquet(target_path)
 
-        current_cols = [c for c in all_current.columns if c != BUCKET_COL]
+        current_cols = [c for c in current.columns if c != BUCKET_COL]
         batch_cols = [c for c in batch.columns if c not in (BUCKET_COL, DUPS_COL)]
         missing = [c for c in current_cols if c not in batch_cols]
         extra = [c for c in batch_cols if c not in current_cols]
@@ -174,104 +186,57 @@ def upsert(
                 f"table ({current_cols}). Pass allow_evolution=True to add "
                 "them (existing rows read NULL)."
             )
-        if extra:
-            for c in extra:
-                all_current = all_current.withColumn(
-                    c, F.lit(None).cast(batch.schema[c].dataType)
-                )
-            # evolution rewrites the WHOLE table so the on-disk schema is
-            # uniform; fall through to the full-merge path
-            row = _merge_counts(batch, all_current, key)
-            keep = all_current.join(batch.select(key), on=key, how="left_anti")
-            if BUCKET_COL not in keep.columns:  # legacy flat layout
-                keep = keep.withColumn(
-                    BUCKET_COL,
-                    F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int"),
-                )
-            merged = _cluster_by_bucket(
-                keep.unionByName(batch.select(keep.columns)), n_buckets
-            ).localCheckpoint(eager=True)
-            # whole-table rewrite: force a STATIC overwrite per-write so
-            # an ambient dynamic mode (e.g. a caller running refresh
-            # folds concurrently) cannot leave the pre-upgrade files
-            # alongside the new __bucket=* dirs — reads would then
-            # return duplicated rows (ADVICE r12, medium). The writer
-            # option takes precedence over the session conf and is
-            # scoped to this write only.
-            merged.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy(BUCKET_COL).parquet(target_path)
-            updated = int(row["updated"] or 0)
-            return (updated, int(row["n"]) - updated, int(row["deduped"] or 0))
 
-        if BUCKET_COL not in all_current.columns:
-            # Legacy flat layout (pre-bucketing): one-time upgrade —
-            # merge the full table and rewrite it bucketed.
-            row = _merge_counts(batch, all_current, key)
-            keep = all_current.join(batch.select(key), on=key, how="left_anti").withColumn(
-                BUCKET_COL,
-                F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int"),
-            )
-            merged = _cluster_by_bucket(
-                keep.unionByName(batch.select(keep.columns)), n_buckets
-            ).localCheckpoint(eager=True)
-            # whole-table rewrite: force a STATIC overwrite per-write so
-            # an ambient dynamic mode (e.g. a caller running refresh
-            # folds concurrently) cannot leave the pre-upgrade files
-            # alongside the new __bucket=* dirs — reads would then
-            # return duplicated rows (ADVICE r12, medium). The writer
-            # option takes precedence over the session conf and is
-            # scoped to this write only.
-            merged.write.mode("overwrite").option(
-                "partitionOverwriteMode", "static"
-            ).partitionBy(BUCKET_COL).parquet(target_path)
-            updated = int(row["updated"] or 0)
-            return (updated, int(row["n"]) - updated, int(row["deduped"] or 0))
+        per_bucket = batch.groupBy(BUCKET_COL).agg(
+            F.count(F.lit(1)).alias("n"), F.sum(DUPS_COL).alias("deduped")
+        ).collect()
+        n = sum(r["n"] for r in per_bucket)
+        deduped = sum(r["deduped"] or 0 for r in per_bucket)
 
-        touched = [r[BUCKET_COL] for r in batch.select(BUCKET_COL).distinct().collect()]
-        current = all_current.filter(F.col(BUCKET_COL).isin(touched))
+        # Evolution and the legacy flat layout (pre-bucketing) rewrite
+        # the WHOLE table once, so the on-disk schema and layout are
+        # uniform; otherwise only the touched buckets are read.
+        whole_table = bool(extra) or BUCKET_COL not in current.columns
+        for c in extra:
+            current = current.withColumn(c, F.lit(None).cast(batch.schema[c].dataType))
+        if BUCKET_COL not in current.columns:
+            current = current.withColumn(BUCKET_COL, _bucket_of(key, n_buckets))
+        if not whole_table:
+            current = current.filter(F.col(BUCKET_COL).isin([r[BUCKET_COL] for r in per_bucket]))
 
-        # one job for all three counts: left-join batch keys to current
-        row = _merge_counts(batch, current, key)
-        updated = int(row["updated"] or 0)
-        inserted = int(row["n"]) - updated
-        deduped = int(row["deduped"] or 0)
-
-        keep = current.join(batch.select(key), on=key, how="left_anti")
+        # the batch is key-deduplicated, so every current row whose key
+        # the batch carries is exactly one update: updated = rows read
+        # − rows kept
+        read_obs, keep_obs = Observation(), Observation()
+        keep = (
+            current.observe(read_obs, F.count(F.lit(1)).alias("n"))
+            .join(batch.select(key), on=key, how="left_anti")
+            .observe(keep_obs, F.count(F.lit(1)).alias("n"))
+        )
         merged = _cluster_by_bucket(keep.unionByName(batch.select(keep.columns)), n_buckets)
 
         # Truncate lineage before overwriting the path we just read —
         # Spark (correctly) refuses an overwrite whose plan still scans
-        # the target. Scoped to the touched buckets only; a
-        # transactional format (Delta MERGE) removes the need.
+        # the target. A transactional format (Delta MERGE) removes the
+        # need.
         merged = merged.localCheckpoint(eager=True)
+        updated = int(read_obs.get["n"]) - int(keep_obs.get["n"])
 
-        # dynamic overwrite: only partitions present in `merged`
-        # (exactly the touched buckets) are replaced. Per-write option
-        # instead of a session-conf set/restore: thread-safe under the
-        # concurrent refresh folds (r13, ADVICE r12 low #3).
+        # A whole-table rewrite forces a STATIC overwrite so an ambient
+        # dynamic mode (e.g. a caller running refresh folds
+        # concurrently) cannot leave the pre-upgrade files alongside
+        # the new __bucket=* dirs — reads would then return duplicated
+        # rows (ADVICE r12, medium). Otherwise a dynamic overwrite
+        # replaces only partitions present in `merged` (exactly the
+        # touched buckets). The writer option takes precedence over the
+        # session conf and is scoped to this write only, so it is
+        # thread-safe under the concurrent refresh folds.
         merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
+            "partitionOverwriteMode", "static" if whole_table else "dynamic"
         ).partitionBy(BUCKET_COL).parquet(target_path)
-        return (updated, inserted, deduped)
+        return (updated, n - updated, deduped)
     finally:
         batch.unpersist()
-
-
-def _merge_counts(batch: DataFrame, current: DataFrame, key: str):
-    """(n, updated, deduped) in ONE aggregation job: left-join batch
-    keys against current keys; ``__dups`` rides along from the dedup
-    window so the in-batch duplicate count costs nothing extra."""
-    return (
-        batch.select(key, DUPS_COL)
-        .join(current.select(key, F.lit(1).alias("__hit")), key, "left")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("updated"),
-            F.sum(DUPS_COL).alias("deduped"),
-        )
-        .collect()[0]
-    )
 
 
 def purge_keys(
@@ -400,16 +365,6 @@ def purge_keys(
         return n_before - n_after
     finally:
         keyset.unpersist()
-
-
-def quarantine_split(df: DataFrame, valid_predicate) -> tuple[DataFrame, DataFrame]:
-    """Split valid/invalid rows by predicate — the distributed
-    replacement for the reference's per-record failure isolation
-    (database.py:421-467): no exceptions in the hot path, failed rows
-    become a countable, inspectable DataFrame."""
-    valid = df.filter(valid_predicate)
-    invalid = df.filter(~F.coalesce(valid_predicate, F.lit(False)))
-    return valid, invalid
 
 
 def export_table(

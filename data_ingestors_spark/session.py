@@ -58,6 +58,10 @@ def get_spark(app_name: str = "data_ingestors_spark", cpus: int | None = None) -
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+        # listing a table's partition directories (64 bucket dirs)
+        # runs as a Spark job with one task per directory by default;
+        # cap it at the cores
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

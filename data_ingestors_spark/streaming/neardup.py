@@ -272,6 +272,7 @@ def incremental_dedup_fold_batch(
     from data_ingestors_spark.io.writers import (
         BUCKET_COL,
         DEFAULT_N_BUCKETS,
+        _cluster_by_bucket,
         path_exists,
     )
     from data_ingestors_spark.operators.dedup import _novelty_report, normalize_text
@@ -304,19 +305,15 @@ def incremental_dedup_fold_batch(
         else:
             idx = spark.createDataFrame([], "fp_md5 string, in_corpus int")
         report = _novelty_report(b.drop(BUCKET_COL).join(idx, "fp_md5", "left"))
-        # r12-opt (guide §6 small files): cluster on the bucket column
-        # before the two-level partitionBy write — unclustered, every
-        # task writes one file into every bucket directory it holds
-        # rows for (tasks × buckets files per batch; measured 130
-        # files / 1.8 s at sf0.1 vs 130 dirs-worth clustered in
-        # 0.7 s), and at corpus scale the file count per batch layer
-        # is what keeps the touched-bucket probe's listing cheap. Same
-        # discipline as io/writers._cluster_by_bucket.
-        new_fps = (
-            b.select("fp_md5", BUCKET_COL)
-            .distinct()
-            .repartition(n_buckets, F.col(BUCKET_COL))
-        )
+        # cluster on the bucket column before the two-level
+        # partitionBy write (io/writers._cluster_by_bucket): one file
+        # per touched bucket per batch layer in at most one task per
+        # core — unclustered, every task writes one file into every
+        # bucket directory it holds rows for (tasks × buckets files
+        # per batch; measured 130 files / 1.8 s at sf0.1 vs 0.7 s
+        # clustered), and at corpus scale the file count per batch
+        # layer is what keeps the touched-bucket probe's listing cheap.
+        new_fps = _cluster_by_bucket(b.select("fp_md5", BUCKET_COL).distinct(), n_buckets)
         # the two writes land on distinct paths and both read only the
         # persisted batch frame (+ prior-batch fps, whose file listing
         # was captured above) — run them concurrently (r12-opt, guide

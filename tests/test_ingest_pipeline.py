@@ -132,3 +132,29 @@ def test_intent_validated():
     cfg = ResolvedConfig(table_name="t", data_intent="validate-me")
     with pytest.raises(ValueError, match="data_intent"):
         cfg.validate()
+
+
+def test_reingest_of_rewritten_source_reads_new_rows(spark, tmp_path):
+    """A second ingest of the same source path in the same session reads
+    the file as it is now, not rows cached by the first run; an ingest
+    leaves the session's Dataset cache as it found it."""
+    spark.catalog.clearCache()
+    src = tmp_path / "src.csv"
+    src.write_text("rid,qty\na,1\nb,2\n")
+
+    def ingest(target):
+        cfg = ResolvedConfig(
+            table_name="t_reingest",
+            schema={"rid": "VARCHAR(10)", "qty": "DOUBLE"},
+            data_id_strategy="column",
+            data_id_column="rid",
+        )
+        return Ingestor(spark, cfg, str(tmp_path / target)).ingest(str(src))
+
+    ingest("first")
+    src.write_text("rid,qty\na,100\nb,200\nc,300\n")
+    s = ingest("second")
+    assert (s.total_records, s.processed, s.failed) == (3, 3, 0)
+    rows = sorted((r.rid, r.qty) for r in spark.read.parquet(str(tmp_path / "second")).collect())
+    assert rows == [("a", 100.0), ("b", 200.0), ("c", 300.0)]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

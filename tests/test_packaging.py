@@ -451,3 +451,42 @@ def test_batch_store_lives_in_one_module():
             rel = os.path.relpath(path, REPO)
             leaks += [f"{rel}:{leak}" for leak in _batch_store_leaks(tree)]
     assert not leaks, leaks
+
+
+def test_bucket_clustering_lives_in_writers():
+    """Every clustered bucket write goes through
+    ``io/writers._cluster_by_bucket``: outside ``io/writers.py`` no call
+    to ``.repartition(...)`` takes ``BUCKET_COL`` among its arguments,
+    and the separate merge-count job ``_merge_counts`` is gone
+    everywhere. AST only: no package module is imported."""
+    import ast
+
+    hits = []
+    pkg_dir = os.path.join(REPO, "data_ingestors_spark")
+    writers = os.path.join(pkg_dir, "io", "writers.py")
+    for root, _dirs, names in os.walk(pkg_dir):
+        for name in sorted(names):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            rel = os.path.relpath(path, REPO)
+            for node in ast.walk(tree):
+                if isinstance(node, (ast.FunctionDef, ast.Name, ast.Attribute)):
+                    ident = getattr(node, "name", None) or getattr(node, "id", None) or node.attr
+                    if ident == "_merge_counts":
+                        hits.append(f"{rel}:{node.lineno}: _merge_counts")
+                if (
+                    path != writers
+                    and isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "repartition"
+                    and any(
+                        isinstance(n, ast.Name) and n.id == "BUCKET_COL"
+                        for arg in node.args + [k.value for k in node.keywords]
+                        for n in ast.walk(arg)
+                    )
+                ):
+                    hits.append(f"{rel}:{node.lineno}: repartition on BUCKET_COL")
+    assert not hits, hits

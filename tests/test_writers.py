@@ -372,3 +372,92 @@ def test_purge_keys_recovers_interrupted_legacy_swap(spark, tmp_path):
     assert n == 1  # only k1 remained to delete
     rows = {r.data_id for r in spark.read.parquet(t).collect()}
     assert rows == {f"k{i}" for i in range(2, 30)}
+
+
+def _reference_upsert(table: dict, batch: list[tuple]) -> tuple[tuple[int, int, int], dict]:
+    """Plain-Python MERGE: the in-batch winner per key is the row with
+    the smallest sha256 of its ``\\x1f``-joined values (the dedup's
+    tiebreak); it replaces or inserts the table row. Returns the
+    expected (updated, inserted, deduped) and the table afterwards."""
+    import hashlib
+
+    winners: dict = {}
+    for row in batch:
+        h = hashlib.sha256("\x1f".join(str(v) for v in row).encode()).hexdigest()
+        if row[0] not in winners or h < winners[row[0]][0]:
+            winners[row[0]] = (h, row)
+    updated = sum(1 for k in winners if k in table)
+    after = {**table, **{k: row for k, (_h, row) in winners.items()}}
+    return (updated, len(winners) - updated, len(batch) - len(winners)), after
+
+
+def _table_rows(spark, t, cols):
+    return {r[0]: tuple(r) for r in read_table(spark, t).select(*cols).collect()}
+
+
+@pytest.mark.parametrize(
+    "path", ["fresh", "fresh_empty", "merge", "merge_empty", "all_duplicates", "evolution", "legacy_flat"]
+)
+def test_upsert_counts_match_python_reference(spark, tmp_path, path):
+    t = str(tmp_path / "t")
+    cols = ["data_id", "v"]
+    base = [(f"k{i}", i) for i in range(40)]
+    batch = [(f"k{i}", 100 + i) for i in range(30, 60)] + [("k31", 7), ("k55", 8), ("k55", 9)]
+    table: dict = {}
+    if path.startswith("fresh"):
+        batch = [] if path == "fresh_empty" else batch
+    elif path == "legacy_flat":
+        spark.createDataFrame(base, cols).write.parquet(t)
+        table = {r[0]: r for r in base}
+    else:
+        upsert(spark, t, spark.createDataFrame(base, cols), n_buckets=8)
+        table = {r[0]: r for r in base}
+        if path == "merge_empty":
+            batch = []
+        elif path == "all_duplicates":
+            batch = [("k3", 30), ("k3", 31), ("k3", 32), ("new", 1), ("new", 2)]
+    if path == "evolution":
+        cols = ["data_id", "v", "tag"]
+        batch = [r + ("x",) for r in batch]
+        table = {k: r + (None,) for k, r in table.items()}
+
+    expected, after = _reference_upsert(table, batch)
+    df = spark.createDataFrame(batch, "data_id string, v long" + (", tag string" if len(cols) == 3 else ""))
+    assert upsert(spark, t, df, n_buckets=8, allow_evolution=path == "evolution") == expected
+    if after:
+        assert _table_rows(spark, t, cols) == after
+
+
+def test_fresh_insert_writes_one_file_per_bucket_in_at_most_one_task_per_core(spark, tmp_path):
+    """64 buckets on fewer cores: the clustered write runs at most
+    ``defaultParallelism`` tasks and still leaves exactly one file in
+    every bucket directory."""
+    sc = spark.sparkContext
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame([(f"k{i}", i) for i in range(2000)], ["data_id", "v"])
+    group = f"fresh-insert-{tmp_path.name}"
+    sc.setJobGroup(group, "fresh 64-bucket insert")
+    try:
+        assert upsert(spark, t, df, n_buckets=64) == (0, 2000, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    write_job = max(st.getJobIdsForGroup(group))
+    write_stage = st.getStageInfo(max(st.getJobInfo(write_job).stageIds))
+    assert write_stage.numTasks <= sc.defaultParallelism < 64
+    files = bucket_files(t)
+    assert len(files) == 64
+    assert all(len(f) == 1 for f in files.values()), files
+
+
+def test_cluster_by_bucket_keeps_one_partition_per_bucket_when_cores_suffice(spark):
+    """With at least ``n_buckets`` cores the clustered plan is the
+    unchanged one-partition-per-bucket plan; with fewer it is capped at
+    the cores."""
+    from data_ingestors_spark.io.writers import _cluster_by_bucket
+
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.range(100).withColumn(BUCKET_COL, (F.col("id") % 64).cast("int"))
+    for n_buckets, want in ((cores, cores), (max(cores // 2, 1), max(cores // 2, 1)), (cores + 64, cores)):
+        plan = _cluster_by_bucket(df, n_buckets)._jdf.queryExecution().logical()
+        assert plan.numPartitions() == want
