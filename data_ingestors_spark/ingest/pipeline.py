@@ -4,12 +4,19 @@ re-expressed as one declarative DataFrame program.
 Reference lifecycle (base.py:713-929, SURVEY.md §3): validate →
 count → stream records → clean/normalize/label/uuid → copy files →
 batch upsert → API send → summary. The reference re-reads the source
-≥6 times (SURVEY.md §4); here the source is read ONCE, cached, and
-every stage is a projection/aggregation over it:
+≥6 times (SURVEY.md §4); here the source is read ONCE and cached, and
+the only job before the write is one aggregation over that cache:
 
-    read → validate (one agg pass) → conform types → normalize nulls
-         → label policy → data_id/constants → split valid/invalid
-         → upsert → summary
+    read → normalize nulls → validate (one agg pass; builds the cache
+         and observes the row count) → conform types → label policy
+         → data_id/constants → split valid/skipped → upsert → summary
+
+Conformance and the framework columns are one ``withColumns``
+projection each. The split is a filter whose two counts are observed
+on the first action that scans it (the file transfer's count, else the
+upsert's write), so no job runs just to count (``_observe``), and
+nothing past the source is cached. Offending-value samples are gathered only when the
+validation fails.
 
 Failure accounting is reproduced by *splitting* DataFrames rather than
 catching per-row exceptions (SURVEY.md §7 hard-part 1): `skipped` =
@@ -20,8 +27,10 @@ rows whose declared-type conformance produced an error verdict.
 from __future__ import annotations
 
 import uuid as _uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,6 +51,26 @@ from data_ingestors_spark.io.readers import (
 )
 from data_ingestors_spark.io.writers import upsert, write_table
 from data_ingestors_spark.validators.mapping import run_battery
+
+
+def _observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Callable[[], dict]]:
+    """``df`` with ``aggs`` observed on it, and a reader for their
+    values, which ride on the first action over the returned frame. When
+    the optimizer drops the observed node from that action's plan (it
+    does when it proves empty the rows reaching the node, or a window,
+    grouping or filter above it), no values are reported and the reader
+    computes ``aggs`` in a job of their own."""
+    obs = Observation()
+    cols = [c.alias(k) for k, c in aggs.items()]
+    observed = df.observe(obs, *cols)
+
+    def values() -> dict:
+        try:
+            return obs.get
+        except Py4JJavaError:  # no values reported: see above
+            return observed.agg(*cols).first().asDict()
+
+    return observed, values
 
 
 class Ingestor:
@@ -106,33 +135,39 @@ class Ingestor:
             label = F.col("label").cast("string")
         else:
             label = F.lit(None).cast("string")
+
+        def src(c: str):
+            # data_id reads `label` as relabelled above, not the source
+            # column, so existing rows keep their data_id
+            return label if c.lower() == "label" else F.col(c)
+
         # data_id strategy (T4): deterministic UUID5-style hash of row
         # content instead of random UUID4 — retry-idempotent (SURVEY.md
         # §7 hard-part 5) while keeping the privacy property.
         if cfg.data_id_strategy == "column":
-            data_id = F.trim(F.col(cfg.data_id_column).cast("string"))
+            data_id = F.trim(src(cfg.data_id_column).cast("string"))
         else:
             ns = _uuid.uuid5(_uuid.NAMESPACE_URL, f"ingest://{cfg.table_name}").hex
-            content = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in df.columns])
+            content = F.concat_ws("\x1f", *[src(c).cast("string") for c in df.columns])
             data_id = F.sha2(F.concat(F.lit(ns), content), 256)
         now = F.current_timestamp()
-        out = (
-            df.withColumn("label", label)
-            .withColumn("data_id", data_id)
-            .withColumn("data_intent", F.lit(cfg.data_intent))
-            .withColumn("ingestor_id", F.lit(cfg.ingestor_id))
-            .withColumn("status", F.lit(0))
-            .withColumn("created_at", now)
-            .withColumn("updated_at", now)
-        )
+        cols = {
+            "label": label,
+            "data_id": data_id,
+            "data_intent": F.lit(cfg.data_intent),
+            "ingestor_id": F.lit(cfg.ingestor_id),
+            "status": F.lit(0),
+            "created_at": now,
+            "updated_at": now,
+        }
         # T5: the file-bearing standard columns exist on every table
         # (database.py:302-321); absent in the source ⇒ NULL. The file
         # transfer stage later overwrites filename/extension with the
         # resolved on-disk values (file_transfer.py:153-154).
         for name in ("filename", "extension", "annotation", "mask_id"):
-            if name not in out.columns:
-                out = out.withColumn(name, F.lit(None).cast("string"))
-        return out
+            if name not in df.columns:
+                cols[name] = F.lit(None).cast("string")
+        return df.withColumns(cols)
 
     # -- run -------------------------------------------------------------
 
@@ -160,6 +195,7 @@ class Ingestor:
         # (csv_options.decimal — reference #739 i18n battery).
         if cfg.csv_options.get("decimal") == ",":
             from data_ingestors_spark.functions.casts import is_numeric_decl
+            fixes = {}
             for name, decl in cfg.schema.items():
                 if name in raw.columns and is_numeric_decl(decl):
                     c = F.col(name).cast("string")
@@ -180,7 +216,8 @@ class Ingestor:
                         )
                         .otherwise(c)
                     )
-                    raw = raw.withColumn(name, fixed)
+                    fixes[name] = fixed
+            raw = raw.withColumns(fixes)
         # A single small source file arrives as ONE input split, which
         # would run the whole validate/conform path single-threaded on
         # the cached partition. Spread under-partitioned input across
@@ -197,11 +234,12 @@ class Ingestor:
             par = self.spark.sparkContext.defaultParallelism
             if raw.rdd.getNumPartitions() < par:
                 raw = raw.repartition(par)
+        # the row count rides on the first action over the cache, which
+        # reads every row: the validation aggregate, else the file
+        # transfer's count or the upsert
+        raw, source_counts = _observe(raw, n=F.count(F.lit(1)))
         raw.cache()
-        augmented = None
         try:
-            total = raw.count()
-
             # every declared column must exist in the source — a
             # missing one is usually a delimiter/encoding mistake, so
             # say that instead of an unresolved-column plan error.
@@ -248,9 +286,9 @@ class Ingestor:
                         "expectations failed:\n  " + "\n  ".join(report.errors())
                     )
 
-            conformed = raw
-            for name, decl in cfg.schema.items():
-                conformed = conformed.withColumn(name, cast_for_decl(F.col(name), decl))
+            conformed = raw.withColumns(
+                {name: cast_for_decl(F.col(name), decl) for name, decl in cfg.schema.items()}
+            )
             conformed = self.transform(conformed)
             if cfg.processors:
                 # T8 declared processors — resolved fail-loud before
@@ -289,15 +327,14 @@ class Ingestor:
                     )
 
             # skipped: mapped data_id missing/blank ⇒ row dropped
-            # (base.py:315-326)
+            # (base.py:315-326). Both counts ride on the first action
+            # over `ok`, which scans every row: the file transfer's
+            # count, else the upsert.
             ok_pred = F.col("data_id").isNotNull() & (F.col("data_id") != "")
+            augmented, split_counts = _observe(
+                augmented, n=F.count(F.lit(1)), ok=F.count(F.when(ok_pred, 1))
+            )
             ok = augmented.filter(ok_pred)
-            augmented.cache()
-            # one agg for both counts (was two .count() jobs)
-            n_aug, n_ok = augmented.agg(
-                F.count("*"), F.count(F.when(ok_pred, 1))
-            ).collect()[0]
-            skipped = n_aug - n_ok
 
             # K5: sidecar copies for file-bearing categories. Records
             # missing a source file (or whose copy failed) are dropped
@@ -332,6 +369,9 @@ class Ingestor:
                 self.spark, self.target_path, ok, key="data_id"
             )
             processed = updated + inserted
+            total = source_counts()["n"]
+            split = split_counts()
+            skipped = split["n"] - split["ok"]
 
             # K3: per-batch metadata send — api_sent counts only ACKed
             # batches, so a rejected batch trips has_failures
@@ -369,5 +409,3 @@ class Ingestor:
             )
         finally:
             raw.unpersist()
-            if augmented is not None:
-                augmented.unpersist()

@@ -166,8 +166,7 @@ def q_validation_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs.update(column_rule_aggs("int_col", "INT"))
     aggs.update(column_rule_aggs("vc_col", "VARCHAR(8)"))
     aggs.update(column_rule_aggs("ts_col", "DATETIME"))
-    counts = {k: v for k, v in aggs.items() if not k.endswith("__bad_samples")}
-    return raw.agg(*[v.cast("long").alias(k) for k, v in counts.items()])
+    return raw.agg(*[v.cast("long").alias(k) for k, v in aggs.items()])
 
 
 O_VALIDATION_AGG = f"""

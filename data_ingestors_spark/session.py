@@ -36,7 +36,16 @@ RUNTIME_CONFS: dict[str, str] = {
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-created session (idempotent)."""
-    for k, v in RUNTIME_CONFS.items():
+    confs = {
+        **RUNTIME_CONFS,
+        # listing a table's partition directories (64 bucket dirs) runs
+        # as a Spark job with one task per directory by default; cap it
+        # at the session's cores
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism": str(
+            spark.sparkContext.defaultParallelism
+        ),
+    }
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # conf not settable on this build — non-fatal
@@ -58,10 +67,13 @@ def get_spark(app_name: str = "data_ingestors_spark", cpus: int | None = None) -
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        # listing a table's partition directories (64 bucket dirs)
-        # runs as a Spark job with one task per directory by default;
-        # cap it at the cores
-        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
+        # Off: PySpark's DataFrame debugging makes every F.* / Column
+        # call walk the Python stack (and try an IPython import) to
+        # record its call site, a few extra py4j round trips each — on
+        # an ingest, about a tenth of the wall time. What is lost: a
+        # DataFrame error's query context no longer names the Python
+        # line that built the failing expression. Static: builder only.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

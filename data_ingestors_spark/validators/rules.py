@@ -17,11 +17,16 @@ Rule semantics replicated from data_validator.py (SURVEY.md V1):
 - BOOL uses the truthy/falsy vocabulary (casts.py);
 - VARCHAR(n) counts length > n; CHAR(n) counts length ≠ n;
 - DATE/DATETIME/TIME count unparseable present values;
-- up to 5 offending samples are collected per rule
-  (data_validator.py's sample reporting).
+- up to 5 offending samples are reported per failing column
+  (data_validator.py's sample reporting) — samples on failure only: the
+  one pass carries the counts, and a second ``collect_set`` pass runs
+  over the failing columns alone.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -69,24 +74,12 @@ def _bad_timestamp(c: Column) -> Column:
     return s.isNotNull() & (s != "") & F.try_to_timestamp(s).isNull()
 
 
-def column_rule_aggs(name: str, decl: str) -> dict[str, Column]:
-    """Aggregation columns validating one declared column.
-
-    Returns {metric_name: agg_column}; metric names are
-    '<col>__<rule>' so the single agg row unpacks unambiguously.
-    """
+def _rule_conditions(name: str, decl: str) -> dict[str, Column]:
+    """{rule: offending-value condition} for one declared column; empty
+    for TEXT / unparameterized VARCHAR, where only the null count
+    applies."""
     c = F.col(name)
     base, args = parse_decl(decl)
-    aggs: dict[str, Column] = {f"{name}__nulls": F.sum(F.when(c.isNull(), 1).otherwise(0))}
-
-    def count_of(cond: Column) -> Column:
-        return F.sum(F.when(cond, 1).otherwise(0))
-
-    def sample_of(cond: Column) -> Column:
-        return F.slice(
-            F.array_sort(F.collect_set(F.when(cond, c.cast("string")))), 1, 5
-        )
-
     if base in _INT_TYPES or base == "BIGINT":
         bad = _bad_numeric(c, integral=True)
         # Overflow: numerically integral but outside the declared
@@ -96,31 +89,40 @@ def column_rule_aggs(name: str, decl: str) -> dict[str, Column]:
         s = F.trim(c.cast("string"))
         present = s.isNotNull() & (s != "")
         overflow = present & ~bad & cast_for_decl(c, decl).isNull()
-        aggs[f"{name}__non_integer"] = count_of(bad)
-        aggs[f"{name}__overflow"] = count_of(overflow)
-        aggs[f"{name}__bad_samples"] = sample_of(bad | overflow)
-    elif base in _FLOAT_TYPES or base in _DECIMAL_TYPES:
-        bad = _bad_numeric(c, integral=False)
-        aggs[f"{name}__non_numeric"] = count_of(bad)
-        aggs[f"{name}__bad_samples"] = sample_of(bad)
-    elif base in ("BOOL", "BOOLEAN"):
-        bad = _bad_bool(c)
-        aggs[f"{name}__bad_bool"] = count_of(bad)
-        aggs[f"{name}__bad_samples"] = sample_of(bad)
-    elif base in ("DATE", "DATETIME", "TIMESTAMP", "TIME"):
-        bad = _bad_timestamp(c)
-        aggs[f"{name}__unparseable"] = count_of(bad)
-        aggs[f"{name}__bad_samples"] = sample_of(bad)
-    elif base == "VARCHAR" and args:
-        over = c.isNotNull() & (F.length(c.cast("string")) > args[0])
-        aggs[f"{name}__too_long"] = count_of(over)
-        aggs[f"{name}__bad_samples"] = sample_of(over)
-    elif base == "CHAR" and args:
-        mis = c.isNotNull() & (F.length(c.cast("string")) != args[0])
-        aggs[f"{name}__wrong_length"] = count_of(mis)
-        aggs[f"{name}__bad_samples"] = sample_of(mis)
-    # TEXT / unparameterized VARCHAR: only the null count applies.
+        return {"non_integer": bad, "overflow": overflow}
+    if base in _FLOAT_TYPES or base in _DECIMAL_TYPES:
+        return {"non_numeric": _bad_numeric(c, integral=False)}
+    if base in ("BOOL", "BOOLEAN"):
+        return {"bad_bool": _bad_bool(c)}
+    if base in ("DATE", "DATETIME", "TIMESTAMP", "TIME"):
+        return {"unparseable": _bad_timestamp(c)}
+    if base == "VARCHAR" and args:
+        return {"too_long": c.isNotNull() & (F.length(c.cast("string")) > args[0])}
+    if base == "CHAR" and args:
+        return {"wrong_length": c.isNotNull() & (F.length(c.cast("string")) != args[0])}
+    return {}
+
+
+def column_rule_aggs(name: str, decl: str) -> dict[str, Column]:
+    """Count aggregations validating one declared column.
+
+    Returns {metric_name: agg_column}; metric names are
+    '<col>__<rule>' so the single agg row unpacks unambiguously.
+    """
+    c = F.col(name)
+    aggs: dict[str, Column] = {f"{name}__nulls": F.sum(F.when(c.isNull(), 1).otherwise(0))}
+    for rule, cond in _rule_conditions(name, decl).items():
+        aggs[f"{name}__{rule}"] = F.sum(F.when(cond, 1).otherwise(0))
     return aggs
+
+
+def _bad_samples(name: str, decl: str) -> Column:
+    """Up to 5 sorted distinct values breaking any of the rules of a
+    column that has at least one."""
+    bad = functools.reduce(operator.or_, _rule_conditions(name, decl).values())
+    return F.slice(
+        F.array_sort(F.collect_set(F.when(bad, F.col(name).cast("string")))), 1, 5
+    )
 
 
 def time_series_aggs(ts_col: str = "timestamp") -> dict[str, Column]:
@@ -161,22 +163,33 @@ def validate_schema_single_pass(df: DataFrame, schema: dict[str, str]) -> Valida
     Replaces the reference's N sequential chunked passes with a single
     distributed conditional-agg pass (SURVEY.md §4) — same verdicts,
     strictly more informative (all columns reported, not first-failure).
+    The pass carries counts only; offending samples are gathered by a
+    second pass over the failing columns alone, so a passing batch
+    never pays for the ``collect_set`` aggregates (passing columns
+    report ``[]``).
     """
-    all_aggs: dict[str, Column] = {}
-    for name, decl in schema.items():
-        if name not in df.columns:
-            continue
-        all_aggs.update(column_rule_aggs(name, decl))
-    if not all_aggs:
+    declared = {n: d for n, d in schema.items() if n in df.columns}
+    counts: dict[str, dict[str, Column]] = {n: column_rule_aggs(n, d) for n, d in declared.items()}
+    aggs = [v.alias(k) for col in counts.values() for k, v in col.items()]
+    if not aggs:
         return ValidationResult(is_valid=True, metadata={"checked_columns": 0})
-    row = df.agg(*[v.alias(k) for k, v in all_aggs.items()]).collect()[0].asDict()
+    row = df.agg(*aggs).collect()[0].asDict()
+    failing = {
+        n: [k for k in col if k != f"{n}__nulls" and row[k]]
+        for n, col in counts.items()
+    }
+    failing = {n: keys for n, keys in failing.items() if keys}
+    samples = {}
+    if failing:
+        samples = df.agg(
+            *[_bad_samples(n, declared[n]).alias(n) for n in failing]
+        ).collect()[0].asDict()
     errors: list[str] = []
-    metadata: dict[str, object] = dict(row)
-    for key, val in row.items():
-        if key.endswith("__bad_samples") or key.endswith("__nulls"):
-            continue
-        if isinstance(val, int) and val > 0:
-            col = key.split("__")[0]
-            samples = row.get(f"{col}__bad_samples")
-            errors.append(f"{key}: {val} offending values (samples: {samples})")
+    metadata: dict[str, object] = {}
+    for n, col in counts.items():
+        metadata.update({k: row[k] for k in col})
+        if len(col) > 1:  # the column has rules, hence samples
+            metadata[f"{n}__bad_samples"] = samples.get(n, [])
+        for k in failing.get(n, []):
+            errors.append(f"{k}: {row[k]} offending values (samples: {samples[n]})")
     return ValidationResult(is_valid=not errors, errors=errors, metadata=metadata)

@@ -158,3 +158,153 @@ def test_reingest_of_rewritten_source_reads_new_rows(spark, tmp_path):
     rows = sorted((r.rid, r.qty) for r in spark.read.parquet(str(tmp_path / "second")).collect())
     assert rows == [("a", 100.0), ("b", 200.0), ("c", 300.0)]
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+_JOBS_SCHEMA = {"rid": "INT", "qty": "INT", "price": "DOUBLE", "flag": "VARCHAR(3)", "note": "TEXT"}
+
+
+def _jobs_csv(path, rids):
+    path.write_text(
+        "rid,qty,price,flag,note\n"
+        + "".join(f"{i},{i % 7},{i * 0.5},{'yes' if i % 2 else 'no'},n{i}\n" for i in rids)
+    )
+    return str(path)
+
+
+def test_ingest_job_counts_fresh_and_merge(spark, tmp_path):
+    """A small tabular CSV ingest runs 7 Spark jobs into a fresh target
+    and 14 as a merge: the validation aggregate (which builds the source
+    cache and observes the row count) and the upsert; no job runs just
+    to count. On one core the source is not spread, one shuffle fewer."""
+    sc = spark.sparkContext
+    cfg = ResolvedConfig(
+        table_name="t_jobs", schema=_JOBS_SCHEMA, label_column="flag",
+        data_id_strategy="column", data_id_column="rid",
+    )
+    target = str(tmp_path / "table")
+    spread = 1 if sc.defaultParallelism > 1 else 0
+    for op, rids, jobs in (("fresh", range(200), 6), ("merge", range(100, 300), 13)):
+        group = f"test-ingest-jobs-{op}"
+        sc.setJobGroup(group, group)
+        try:
+            s = Ingestor(spark, cfg, target).ingest(_jobs_csv(tmp_path / f"{op}.csv", rids))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert (s.total_records, s.processed, s.skipped, s.failed) == (200, 200, 0, 0)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs + spread, op
+
+
+class _DropFlagged(Ingestor):
+    """Drops every row whose ``flag`` is ``drop`` before the split."""
+
+    def transform(self, df):
+        from pyspark.sql import functions as F
+
+        return df.filter(F.col("flag").isNull() | (F.col("flag") != "drop"))
+
+
+def test_transform_dropping_rows_keeps_summary_counts_exact(spark, tmp_path):
+    """Rows a ``transform`` drops count as failed, blank keys as
+    skipped, in-batch duplicates as deduplicated — exactly, into a
+    fresh target and again as a merge."""
+    src = tmp_path / "src.csv"
+    src.write_text(
+        "rid,flag\n"
+        "1,keep\n2,keep\n2,keep\n3,drop\n4,drop\n5,drop\n,keep\n,keep\n6,keep\n7,keep\n"
+    )
+    cfg = ResolvedConfig(
+        table_name="t_drop", schema={"rid": "INT", "flag": "VARCHAR(4)"},
+        data_id_strategy="column", data_id_column="rid",
+    )
+    for _ in ("fresh", "merge"):
+        s = _DropFlagged(spark, cfg, str(tmp_path / "table")).ingest(str(src))
+        got = (s.total_records, s.skipped, s.deduped, s.failed, s.processed)
+        assert got == (10, 2, 1, 3, 4)
+    assert spark.read.parquet(str(tmp_path / "table")).count() == 4
+
+
+class _DropAll(Ingestor):
+    def transform(self, df):
+        from pyspark.sql import functions as F
+
+        return df.filter(F.lit(False))
+
+
+def test_provably_empty_batches_keep_summary_counts_exact(spark, tmp_path):
+    """A header-only source, and a ``transform`` the optimizer proves
+    empty, report exact counts into a fresh target and as a merge,
+    although the optimizer then drops the observed counts from the
+    upsert's plan."""
+    empty = tmp_path / "empty.csv"
+    empty.write_text("rid,flag\n")
+    src = tmp_path / "src.csv"
+    src.write_text("rid,flag\n1,a\n2,b\n")
+    cfg = ResolvedConfig(
+        table_name="t_empty", schema={"rid": "INT", "flag": "VARCHAR(4)"},
+        data_id_strategy="column", data_id_column="rid",
+    )
+    cases = (
+        (Ingestor, empty, "fresh_empty", (0, 0, 0, 0)),
+        (_DropAll, src, "fresh_drop", (2, 0, 2, 0)),
+        (Ingestor, src, "merge", (2, 0, 0, 2)),
+        (Ingestor, empty, "merge", (0, 0, 0, 0)),
+        (_DropAll, src, "merge", (2, 0, 2, 0)),
+    )
+    for cls, source, target, want in cases:
+        s = cls(spark, cfg, str(tmp_path / target)).ingest(str(source))
+        assert (s.total_records, s.skipped, s.failed, s.processed) == want, (cls, target)
+
+
+def test_transform_dropping_rows_keeps_file_category_counts_exact(spark, tmp_path):
+    """Same accounting for a file-bearing category, whose split counts
+    come from the file transfer's first pass: two rows dropped by the
+    transform, one blank key, one record whose file is missing."""
+    images = tmp_path / "src" / "images"
+    images.mkdir(parents=True)
+    for i in range(4):
+        (images / f"img{i}.jpg").write_bytes(b"FAKEIMG:64x64:payload")
+    dest = tmp_path / "dest"
+    dest.mkdir()
+    csv = tmp_path / "labels.csv"
+    csv.write_text(
+        "filename,flag\nimg0,keep\nimg1,keep\nimg2,drop\nimg3,drop\n,keep\nimg5,keep\n"
+    )
+    cfg = ResolvedConfig(
+        table_name="t_drop_img", category="image_classification",
+        schema={"filename": "VARCHAR(20)", "flag": "VARCHAR(4)"}, tabular=False,
+        data_id_strategy="column", data_id_column="filename",
+        src_path=str(tmp_path / "src"), dest_path=str(dest), extension=".jpg",
+        target_size=(64, 64),
+    )
+    s = _DropFlagged(spark, cfg, str(tmp_path / "table")).ingest(str(csv))
+    assert (s.total_records, s.skipped, s.file_transfer_failures, s.failed, s.processed) == (
+        6, 1, 1, 2, 2
+    )
+    assert (dest / "img0.jpg").exists() and not (dest / "img2.jpg").exists()
+
+
+def test_content_hash_data_id_reads_the_mapped_label(spark, tmp_path):
+    """The content-hash data_id joins the row's values with ``\\x1f``
+    under a per-table namespace; a source column named ``label`` enters
+    it as the mapped label, not as its source value."""
+    import hashlib
+    import uuid
+
+    src = tmp_path / "src.csv"
+    src.write_text("rid,label,target\nr1,old1,new1\nr2,old2,new2\n")
+    cfg = ResolvedConfig(
+        table_name="t_hash",
+        schema={"rid": "VARCHAR(10)", "label": "VARCHAR(10)", "target": "VARCHAR(10)"},
+        label_column="target",
+    )
+    Ingestor(spark, cfg, str(tmp_path / "table")).ingest(str(src))
+    ns = uuid.uuid5(uuid.NAMESPACE_URL, "ingest://t_hash").hex
+
+    def want(*values):
+        return hashlib.sha256((ns + "\x1f".join(values)).encode()).hexdigest()
+
+    got = {r.rid: (r.label, r.data_id) for r in spark.read.parquet(str(tmp_path / "table")).collect()}
+    assert got == {
+        "r1": ("new1", want("r1", "new1", "new1")),
+        "r2": ("new2", want("r2", "new2", "new2")),
+    }

@@ -490,3 +490,26 @@ def test_bucket_clustering_lives_in_writers():
                 ):
                     hits.append(f"{rel}:{node.lineno}: repartition on BUCKET_COL")
     assert not hits, hits
+
+
+def test_ingest_pipeline_caches_once_and_never_counts():
+    """``ingest/pipeline.py`` caches the source and nothing else (one
+    ``.cache()``/``.persist()`` call) and runs no ``.count()``: its row
+    counts are observed on actions that run anyway. AST only: no
+    package module is imported."""
+    import ast
+
+    path = os.path.join(REPO, "data_ingestors_spark", "ingest", "pipeline.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    calls = [  # method calls; `F.count(...)` is an aggregate, not an action
+        (node.func.attr, node.lineno)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "F")
+    ]
+    caches = [c for c in calls if c[0] in ("cache", "persist")]
+    counts = [c for c in calls if c[0] == "count"]
+    assert len(caches) == 1, caches
+    assert not counts, counts

@@ -370,3 +370,107 @@ def test_time_ordered_scalable_many_partitions_no_single_exchange(spark):
     assert not res2.is_valid
     assert res2.metadata["n_at_partition_boundary"] == 1
     assert res2.metadata["n_within_partition"] == 0
+
+
+# --- V1 column battery: exact verdicts --------------------------------------
+
+_V1_SCHEMA = {
+    "i": "INT", "b": "BIGINT", "f": "DOUBLE", "dec": "DECIMAL(10,2)", "bo": "BOOL",
+    "ts": "DATETIME", "d": "DATE", "vc": "VARCHAR(5)", "ch": "CHAR(2)", "t": "TEXT",
+}
+
+
+def _string_frame(spark, schema, rows):
+    from pyspark.sql import types as T
+
+    st = T.StructType([T.StructField(c, T.StringType(), True) for c in schema])
+    return spark.createDataFrame(rows, st)
+
+
+def test_column_battery_verdicts_are_exact(spark):
+    """One passing and one failing frame through the V1 battery,
+    together hitting every rule; the error strings and the metadata
+    (counts and the ≤5 sorted samples per column) are pinned exactly.
+    In the failing frame ``n`` passes and still reports ``[]``."""
+    from data_ingestors_spark.validators.rules import validate_schema_single_pass
+
+    good = _string_frame(spark, _V1_SCHEMA, [
+        ("1", "9007199254740993", "1.5", "2.25", "yes", "2024-01-02 03:04:05",
+         "2024-01-02", "abc", "ab", "free text"),
+        ("-7", "0", "1e3", "-3", "0", "2024-01-02", "2023-12-31", "abcde", "xy", None),
+        (None,) * 10,
+    ])
+    res = validate_schema_single_pass(good, _V1_SCHEMA)
+    assert res.is_valid and res.errors == []
+    assert res.metadata == {
+        "i__nulls": 1, "i__non_integer": 0, "i__overflow": 0, "i__bad_samples": [],
+        "b__nulls": 1, "b__non_integer": 0, "b__overflow": 0, "b__bad_samples": [],
+        "f__nulls": 1, "f__non_numeric": 0, "f__bad_samples": [],
+        "dec__nulls": 1, "dec__non_numeric": 0, "dec__bad_samples": [],
+        "bo__nulls": 1, "bo__bad_bool": 0, "bo__bad_samples": [],
+        "ts__nulls": 1, "ts__unparseable": 0, "ts__bad_samples": [],
+        "d__nulls": 1, "d__unparseable": 0, "d__bad_samples": [],
+        "vc__nulls": 1, "vc__too_long": 0, "vc__bad_samples": [],
+        "ch__nulls": 1, "ch__wrong_length": 0, "ch__bad_samples": [],
+        "t__nulls": 2,
+    }
+
+    schema = {**_V1_SCHEMA, "n": "INT"}
+    bad = _string_frame(spark, schema, [
+        ("3.5", "1.5", "x", "1,5", "maybe", "not-a-date", "2024-13-45", "toolong", "abc", "t", "1"),
+        ("3000000000", "99999999999999999999", "inf", "nan", "2", "nope", "x", "sixchr",
+         "a", None, "2"),
+        ("abc", "7", "2.5", "1.25", "true", "2024-01-02", "2024-01-02", "ok", "ok", "u", None),
+        ("1e1", None, "NaN", None, None, None, None, "vvvvvv", None, None, "3"),
+        (None, None, None, None, None, None, None, "uuuuuu", None, None, "4"),
+        (None, None, None, None, None, None, None, "wwwwww", None, None, "5"),
+        (None, None, None, None, None, None, None, "aaaaaa", None, None, "6"),
+    ])
+    res = validate_schema_single_pass(bad, schema)
+    assert not res.is_valid
+    assert res.errors == [
+        "i__non_integer: 2 offending values (samples: ['3.5', '3000000000', 'abc'])",
+        "i__overflow: 1 offending values (samples: ['3.5', '3000000000', 'abc'])",
+        "b__non_integer: 1 offending values (samples: ['1.5', '99999999999999999999'])",
+        "b__overflow: 1 offending values (samples: ['1.5', '99999999999999999999'])",
+        "f__non_numeric: 3 offending values (samples: ['NaN', 'inf', 'x'])",
+        "dec__non_numeric: 2 offending values (samples: ['1,5', 'nan'])",
+        "bo__bad_bool: 2 offending values (samples: ['2', 'maybe'])",
+        "ts__unparseable: 2 offending values (samples: ['nope', 'not-a-date'])",
+        "d__unparseable: 2 offending values (samples: ['2024-13-45', 'x'])",
+        "vc__too_long: 6 offending values (samples: "
+        "['aaaaaa', 'sixchr', 'toolong', 'uuuuuu', 'vvvvvv'])",
+        "ch__wrong_length: 2 offending values (samples: ['a', 'abc'])",
+    ]
+    assert res.metadata == {
+        "i__nulls": 3, "i__non_integer": 2, "i__overflow": 1,
+        "i__bad_samples": ["3.5", "3000000000", "abc"],
+        "b__nulls": 4, "b__non_integer": 1, "b__overflow": 1,
+        "b__bad_samples": ["1.5", "99999999999999999999"],
+        "f__nulls": 3, "f__non_numeric": 3, "f__bad_samples": ["NaN", "inf", "x"],
+        "dec__nulls": 4, "dec__non_numeric": 2, "dec__bad_samples": ["1,5", "nan"],
+        "bo__nulls": 4, "bo__bad_bool": 2, "bo__bad_samples": ["2", "maybe"],
+        "ts__nulls": 4, "ts__unparseable": 2, "ts__bad_samples": ["nope", "not-a-date"],
+        "d__nulls": 4, "d__unparseable": 2, "d__bad_samples": ["2024-13-45", "x"],
+        "vc__nulls": 0, "vc__too_long": 6,
+        "vc__bad_samples": ["aaaaaa", "sixchr", "toolong", "uuuuuu", "vvvvvv"],
+        "ch__nulls": 4, "ch__wrong_length": 2, "ch__bad_samples": ["a", "abc"],
+        "t__nulls": 5,
+        "n__nulls": 1, "n__non_integer": 0, "n__overflow": 0, "n__bad_samples": [],
+    }
+
+
+def test_column_battery_reports_samples_for_double_underscore_names(spark):
+    """A failing column whose own name contains ``__`` still reports its
+    offending samples (the metric name is not split on the first
+    ``__``)."""
+    from data_ingestors_spark.validators.rules import validate_schema_single_pass
+
+    schema = {"qty__v2": "INT", "note__x__y": "VARCHAR(2)"}
+    df = _string_frame(spark, schema, [("1.5", "abc"), ("2", "ok")])
+    res = validate_schema_single_pass(df, schema)
+    assert res.errors == [
+        "qty__v2__non_integer: 1 offending values (samples: ['1.5'])",
+        "note__x__y__too_long: 1 offending values (samples: ['abc'])",
+    ]
+    assert res.metadata["qty__v2__bad_samples"] == ["1.5"]

@@ -461,3 +461,33 @@ def test_cluster_by_bucket_keeps_one_partition_per_bucket_when_cores_suffice(spa
     for n_buckets, want in ((cores, cores), (max(cores // 2, 1), max(cores // 2, 1)), (cores + 64, cores)):
         plan = _cluster_by_bucket(df, n_buckets)._jdf.queryExecution().logical()
         assert plan.numPartitions() == want
+
+
+def test_tune_caps_table_listing_at_the_session_cores(spark, tmp_path):
+    """A session handed in with Spark's listing default gets it capped
+    by ``session.tune``: reading a 64-bucket table then lists it in at
+    most ``defaultParallelism`` tasks, not one task per bucket."""
+    from data_ingestors_spark.session import tune
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    sc = spark.sparkContext
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame([(f"k{i}", i) for i in range(500)], ["data_id", "v"])
+    upsert(spark, t, df, n_buckets=64)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "10000")  # Spark's default
+    group = f"listing-{tmp_path.name}"
+    try:
+        tune(spark)
+        assert spark.conf.get(key) == str(sc.defaultParallelism)
+        sc.setJobGroup(group, "read a 64-bucket table")
+        try:
+            spark.read.parquet(t)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    finally:
+        spark.conf.set(key, prev)
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
+    assert stages
+    assert max(s.numTasks for s in stages) <= sc.defaultParallelism < 64
