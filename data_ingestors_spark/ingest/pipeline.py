@@ -220,20 +220,19 @@ class Ingestor:
             raw = raw.withColumns(fixes)
         # A single small source file arrives as ONE input split, which
         # would run the whole validate/conform path single-threaded on
-        # the cached partition. Spread under-partitioned input across
-        # the cores; at scale a real batch has many splits and this is
-        # a no-op (same guard as queries/_spread). NEVER for categories
+        # the cached partition, so spread it. NEVER for categories
         # whose battery validates source row order (V4 time-ordered
         # reads scan-partition arrival order — a round-robin shuffle
-        # would erase exactly the signal it checks).
+        # would erase exactly the signal it checks). Imported here, not
+        # at the top: Python workers import this module (through
+        # ingest/__init__) and must not load the operators package.
+        from data_ingestors_spark.operators.layout import spread
         from data_ingestors_spark.validators.mapping import (
             ORDER_SENSITIVE_CATEGORIES,
         )
 
         if cfg.category not in ORDER_SENSITIVE_CATEGORIES:
-            par = self.spark.sparkContext.defaultParallelism
-            if raw.rdd.getNumPartitions() < par:
-                raw = raw.repartition(par)
+            raw = spread(raw)
         # the row count rides on the first action over the cache, which
         # reads every row: the validation aggregate, else the file
         # transfer's count or the upsert

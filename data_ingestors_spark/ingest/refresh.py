@@ -41,13 +41,14 @@ compaction. Nothing in the loop ever rescans the corpus:
    as the store ages instead of growing one layer per batch.
    Compaction runs AFTER the ledger write (the folds' exactly-once
    story must not depend on it), so it carries its own crash
-   discipline: the index swap is sibling-write + atomic rename
-   (:func:`~data_ingestors_spark.streaming.batches.recover_compaction`
-   repairs half-swapped states at every loop entry), and
-   ``compact_marker.json`` records ``compacted_through`` — a crash
-   mid-compaction leaves the marker behind, and the NEXT refresh
-   detects the overdue cycle and re-runs it instead of waiting a
-   full ``compact_every`` period.
+   discipline: every rewrite (index layers, corpus buckets, the
+   ledger and ``compact_marker.json`` themselves) is one
+   :func:`~data_ingestors_spark.io.fs.swap_in`, sibling write plus
+   rename (:func:`~data_ingestors_spark.io.fs.recover_swaps` repairs
+   half-swapped states at every loop entry), and the marker records
+   ``compacted_through`` — a crash mid-compaction leaves the marker
+   behind, and the NEXT refresh detects the overdue cycle and re-runs
+   it instead of waiting a full ``compact_every`` period.
 
 Store layout (all under one ``store_dir``)::
 
@@ -59,14 +60,13 @@ Store layout (all under one ``store_dir``)::
     ledger.json        ordered list of ingested batch paths
     compact_marker.json  highest batch id compaction has folded through
 
-Store requirement: ``store_dir`` must be a POSIX filesystem visible
-to the driver — the ledger/marker writes and the compaction swap use
-local ``open``/``os.replace``/``os.rename`` for their atomicity
-guarantees, while the DATA paths go through Spark writers. On an
-object store or HDFS, keep the (tiny) store control files on a
-driver-local or NFS path and point only the data paths at the remote
-store; an object-store-native ledger (conditional PUT) is the
-documented extension point.
+Store requirement: ``store_dir`` and the batch paths may be any Hadoop
+FileSystem path or URI (a local path, ``file://``, ``hdfs://``, ...):
+every probe, rename and small-file write goes through
+``io/fs.py``. The swaps need an atomic rename, so an object store
+whose rename is a copy (S3A) is out of scope, and so are the
+per-table ingest lock (``ingest/lock.py``, local ``O_EXCL``) and the
+sidecar file transfer, which stay driver-local.
 
 CLI: ``python -m data_ingestors_spark.cli refresh <store_dir>
 <batch_parquet>`` prints the returned summary as one JSON line.
@@ -79,10 +79,13 @@ LLM-pipeline extension the 100 TB design calls for.
 
 from __future__ import annotations
 
-import json
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_ingestors_spark.io import fs
+from data_ingestors_spark.operators.layout import spread
 
 
 def _paths(store_dir: str) -> dict[str, str]:
@@ -97,51 +100,6 @@ def _paths(store_dir: str) -> dict[str, str]:
         "ledger": os.path.join(store_dir, "ledger.json"),
         "compact_marker": os.path.join(store_dir, "compact_marker.json"),
     }
-
-
-def _read_compacted_through(path: str) -> int:
-    if not os.path.exists(path):
-        return -1
-    with open(path) as fh:
-        return int(json.load(fh)["compacted_through"])
-
-
-def _write_compacted_through(path: str, batch_id: int) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"compacted_through": batch_id}, fh)
-    os.replace(tmp, path)
-
-
-def _read_ledger(path: str) -> list[str]:
-    if not os.path.exists(path):
-        return []
-    with open(path) as fh:
-        return json.load(fh)["batches"]
-
-
-def _write_ledger(path: str, batches: list[str]) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"batches": batches}, fh, indent=0)
-    os.replace(tmp, path)
-
-
-def _spread_input(spark: SparkSession, batch: DataFrame) -> DataFrame:
-    """Round-robin a narrow batch read across the cluster (guide §2.5
-    input skew). A landed batch often arrives as one or a few parquet
-    files below ``maxPartitionBytes``, so the scan yields fewer splits
-    than cores and every per-doc stage downstream (normalize+md5
-    fingerprints, shingling, MinHash) runs on that handful of cores —
-    measured at sf0.1: the fingerprint pass alone was 7.2 s on the
-    1-split read vs 1.6 s spread (the fold's CPU work is regex-bound,
-    not I/O-bound). Only fires when the scan is under-parallel; a
-    large batch that already reads as >= defaultParallelism splits is
-    left untouched, so the shuffle this adds is bounded by one small
-    batch, never corpus-sized."""
-    n = batch.rdd.getNumPartitions()
-    par = spark.sparkContext.defaultParallelism
-    return batch.repartition(par) if n < par else batch
 
 
 def read_refresh_report(spark: SparkSession, store_dir: str, batch_id: int) -> DataFrame:
@@ -192,9 +150,15 @@ def refresh_corpus(
     )
 
     p = _paths(store_dir)
-    os.makedirs(store_dir, exist_ok=True)
-    ledger = _read_ledger(p["ledger"])
-    batch_path = os.path.abspath(batch_path)
+    # repair a ledger/marker or compaction swap a previous run crashed
+    # in the middle of, BEFORE anything reads the store
+    for d in (store_dir, p["corpus"], p["nd_index"], p["emb_index"]):
+        fs.recover_swaps(spark, d)
+    ledger = fs.read_json(spark, p["ledger"], {"batches": []})["batches"]
+    # a path without a scheme is made absolute, as ledgers have always
+    # recorded it; a URI is kept as given
+    if not urlparse(batch_path).scheme:
+        batch_path = os.path.abspath(batch_path)
     replay = batch_path in ledger
     batch_id = ledger.index(batch_path) if replay else len(ledger)
 
@@ -211,22 +175,15 @@ def refresh_corpus(
         ]
         return summary
 
-    # repair any compaction a previous run crashed in the middle of,
-    # BEFORE the folds read the indexes
-    from data_ingestors_spark.streaming.batches import recover_compaction
-
-    recover_compaction(p["nd_index"], ("bands", "shingles"))
-    recover_compaction(p["emb_index"], ("sketches", "vectors"))
-
     # One scan+spread of the landed batch, shared by every fold below
     # (unpersisted each step re-read and re-shuffled it).
-    batch = _spread_input(spark, spark.read.parquet(batch_path)).persist()
-    if not os.path.isdir(p["corpus"]) and batch.isEmpty():
+    batch = spread(spark.read.parquet(batch_path)).persist()
+    if not fs.path_exists(spark, p["corpus"]) and batch.isEmpty():
         # an empty batch folded into a fresh store leaves schema-less
         # dirs the next batch cannot read; ledger it without folding,
         # since batch ids are ledger positions
         batch.unpersist()
-        _write_ledger(p["ledger"], ledger + [batch_path])
+        fs.write_json(spark, p["ledger"], {"batches": ledger + [batch_path]})
         summary["upsert"] = {"updated": 0, "inserted": 0, "deduped": 0}
         summary["report"] = []
         return summary
@@ -269,7 +226,7 @@ def refresh_corpus(
                 f_emb = pool.submit(
                     embedding_neardup_fold_batch,
                     spark,
-                    _spread_input(spark, spark.read.parquet(embedding_batch_path)),
+                    spread(spark.read.parquet(embedding_batch_path)),
                     batch_id, p["emb_index"], p["emb_pairs"],
                     id_col=vec_id_col, vec_col=vec_col,
                     threshold=embedding_threshold,
@@ -285,11 +242,11 @@ def refresh_corpus(
     finally:
         batch.unpersist()
     # 4. ledger last — everything above is idempotent by batch id
-    _write_ledger(p["ledger"], ledger + [batch_path])
+    fs.write_json(spark, p["ledger"], {"batches": ledger + [batch_path]})
     # 5. bounded-layer maintenance — due on this batch, OR overdue
     # because a previous cycle's compaction crashed after its batch
     # was ledgered (the marker lags the expected cycle boundary).
-    # The swap itself is crash-safe (recover_compaction repairs it);
+    # The swaps themselves are crash-safe (recover_swaps repairs them);
     # the marker guarantees an interrupted cycle re-runs on the NEXT
     # refresh instead of waiting a full compact_every period.
     if compact_every:
@@ -297,18 +254,16 @@ def refresh_corpus(
         # through by now (covers both "due on this batch" and
         # "overdue from a crashed earlier cycle")
         expected_through = ((batch_id + 1) // compact_every) * compact_every - 1
-        if (
-            expected_through >= 0
-            and _read_compacted_through(p["compact_marker"]) < expected_through
-        ):
+        marker = fs.read_json(spark, p["compact_marker"], {"compacted_through": -1})
+        if 0 <= expected_through and marker["compacted_through"] < expected_through:
             from data_ingestors_spark.io.writers import compact_table
 
             compact_neardup_index(spark, p["nd_index"])
-            if os.path.isdir(p["emb_index"]):
+            if fs.path_exists(spark, p["emb_index"]):
                 compact_embedding_neardup_index(spark, p["emb_index"])
             summary["compact_stats"] = compact_table(spark, p["corpus"])
             summary["compacted"] = True
-            _write_compacted_through(p["compact_marker"], batch_id)
+            fs.write_json(spark, p["compact_marker"], {"compacted_through": batch_id})
 
     summary["report"] = [
         r.asDict() for r in read_refresh_report(spark, store_dir, batch_id).collect()

@@ -9,9 +9,9 @@ per-record fallback isolation. Spark-first equivalents:
   reads and rewrites ONLY the buckets the batch touches (dynamic
   partition overwrite) — a 1-row batch against a 100 TB table moves
   1/n_buckets of the data, not all of it;
-- all filesystem probes go through the Hadoop FileSystem API, so the
-  same code runs on file:, hdfs:, s3a:, abfs: — no driver-local
-  ``os.path`` assumptions;
+- all filesystem probes, renames and deletes go through ``io/fs.py``
+  on the Hadoop FileSystem API, so the same code runs on file:, hdfs:,
+  s3a:, abfs: — no driver-local ``os.path`` assumptions;
 - batch dedup on the key is DETERMINISTIC (row_number over a stable
   content hash), because ``dropDuplicates`` keeps an arbitrary row and
   an ambiguous merge source must not resolve differently per run;
@@ -37,29 +37,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestors_spark.io.fs import delete, ls, path_exists, rename, swap_in
+
 BUCKET_COL = "__bucket"
 DEFAULT_N_BUCKETS = 64
-
-
-def hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for any supported scheme via the JVM gateway."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
-
-
-def path_exists(spark: SparkSession, path: str) -> bool:
-    fs, jpath = hadoop_fs(spark, path)
-    return fs.exists(jpath)
-
-
-def _fs_must(ok: bool, op: str, *paths) -> None:
-    """Hadoop FileSystem reports most rename/delete failures by
-    returning ``false`` rather than raising — swallow that and a
-    failed purge swap would report success while leaving the table
-    absent. Raise with the paths instead."""
-    if not ok:
-        raise IOError(f"hadoop fs.{op} failed: {', '.join(str(p) for p in paths)}")
 
 
 def write_table(
@@ -288,9 +269,7 @@ def purge_keys(
         # complete keep-set — promote it, then run this purge normally
         # (idempotent: its keys are already gone from the keep-set)
         if path_exists(spark, tmp_swap):
-            fs, tgt = hadoop_fs(spark, target_path)
-            _, tmpp = hadoop_fs(spark, tmp_swap)
-            _fs_must(fs.rename(tmpp, tgt), "rename", tmpp, tgt)
+            rename(spark, tmp_swap, target_path)
         else:
             return 0
     keyset = (
@@ -321,10 +300,8 @@ def purge_keys(
             )
             keep.write.mode("overwrite").parquet(tmp_swap)
             n_after = spark.read.parquet(tmp_swap).count()
-            fs, tgt = hadoop_fs(spark, target_path)
-            _, tmpp = hadoop_fs(spark, tmp_swap)
-            _fs_must(fs.delete(tgt, True), "delete", tgt)
-            _fs_must(fs.rename(tmpp, tgt), "rename", tmpp, tgt)
+            delete(spark, target_path)
+            rename(spark, tmp_swap, target_path)
             return n_before - n_after
         current = all_current.filter(F.col(BUCKET_COL).isin(touched))
         n_before = current.count()
@@ -345,19 +322,13 @@ def purge_keys(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy(BUCKET_COL).parquet(target_path)
         for b in emptied:
-            fs, p = hadoop_fs(spark, f"{target_path}/{BUCKET_COL}={b}")
-            # deleting an already-absent dir returns false too — only
-            # fail when the bucket dir is still there afterwards
-            if not fs.delete(p, True) and fs.exists(p):
-                _fs_must(False, "delete", p)
+            delete(spark, f"{target_path}/{BUCKET_COL}={b}")
         # if the purge emptied the LAST bucket of the whole table,
         # leave a schema-bearing empty parquet (flat layout — upsert's
         # legacy path re-buckets on next write) so readers don't hit
         # UNABLE_TO_INFER_SCHEMA on an all-deleted table
-        fs, root = hadoop_fs(spark, target_path)
         has_buckets = any(
-            st.getPath().getName().startswith(f"{BUCKET_COL}=")
-            for st in fs.listStatus(root)
+            name.startswith(f"{BUCKET_COL}=") for name, _, _ in ls(spark, target_path)
         )
         if not has_buckets:
             empty = spark.createDataFrame([], current.schema)
@@ -412,45 +383,31 @@ def compact_table(spark: SparkSession, path: str, *, files_per_bucket: int = 1) 
     incremental upsert appends files to its touched buckets; after
     many batches a bucket holds dozens of tiny files and scan/task
     overhead dominates. Rewrites each bucket directory down to
-    ``files_per_bucket`` files. Each bucket is rewritten into a temp
-    sibling first, so a failed rewrite leaves the bucket untouched;
-    the swap is then a Hadoop FS delete followed by a rename, so
-    between those two calls (or after a crash there) the bucket is
-    missing. A delete or rename the filesystem reports as failed
-    raises ``IOError``.
+    ``files_per_bucket`` files through
+    :func:`~data_ingestors_spark.io.fs.swap_in`, so a bucket is never
+    missing: a crash leaves its old or its new copy, and the swap
+    siblings are hidden from readers until the next swap of that
+    bucket or ``io.fs.recover_swaps`` over ``path`` repairs them. A
+    rename or delete the filesystem reports as failed raises
+    ``IOError``.
 
     Returns {"buckets": n_compacted, "files_before": .., "files_after": ..}.
     """
-    import os as _os
-
-    jvm_fs, root = hadoop_fs(spark, path)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    if not jvm_fs.exists(root):
+    if not path_exists(spark, path):
         raise FileNotFoundError(path)
 
     files_before = files_after = buckets = 0
-    for status in jvm_fs.listStatus(root):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(f"{BUCKET_COL}=")):
+    for name, is_dir, _ in ls(spark, path):
+        if not (is_dir and name.startswith(f"{BUCKET_COL}=")):
             continue
-        bucket_dir = status.getPath()
-        parts = [
-            s for s in jvm_fs.listStatus(bucket_dir) if s.getPath().getName().endswith(".parquet")
-        ]
+        src = f"{path}/{name}"
+        parts = [n for n, _, _ in ls(spark, src) if n.endswith(".parquet")]
         if len(parts) <= files_per_bucket:
             continue
         buckets += 1
         files_before += len(parts)
-        src = _os.path.join(path, name)
-        tmp = _os.path.join(path, f".compact_tmp_{name}")
-        (
-            spark.read.parquet(src)
-            .coalesce(files_per_bucket)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        _fs_must(jvm_fs.delete(bucket_dir, True), "delete", bucket_dir)
-        _fs_must(jvm_fs.rename(Path(tmp), bucket_dir), "rename", tmp, bucket_dir)
+        writer = spark.read.parquet(src).coalesce(files_per_bucket).write.mode("overwrite")
+        swap_in(spark, src, writer.parquet)
         files_after += files_per_bucket
     return {"buckets": buckets, "files_before": files_before, "files_after": files_after}
 
@@ -459,20 +416,15 @@ def table_stats(spark: SparkSession, path: str) -> dict:
     """Operational stats for a bucketed table: per-bucket file counts
     and bytes, plus totals — the numbers a compaction policy decides
     on (many small files per bucket -> run compact_table)."""
-    jvm_fs, root = hadoop_fs(spark, path)
-    if not jvm_fs.exists(root):
+    if not path_exists(spark, path):
         raise FileNotFoundError(path)
     buckets: dict[str, dict] = {}
     total_files = total_bytes = 0
-    for status in jvm_fs.listStatus(root):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(f"{BUCKET_COL}=")):
+    for name, is_dir, _ in ls(spark, path):
+        if not (is_dir and name.startswith(f"{BUCKET_COL}=")):
             continue
-        files = [
-            s for s in jvm_fs.listStatus(status.getPath())
-            if s.getPath().getName().endswith(".parquet")
-        ]
-        nbytes = sum(s.getLen() for s in files)
+        files = [n for n in ls(spark, f"{path}/{name}") if n[0].endswith(".parquet")]
+        nbytes = sum(size for _, _, size in files)
         buckets[name] = {"files": len(files), "bytes": nbytes}
         total_files += len(files)
         total_bytes += nbytes

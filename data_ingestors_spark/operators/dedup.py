@@ -1047,12 +1047,8 @@ def build_fingerprint_index(
     batch-id-keyed streaming fold (streaming/neardup.py
     stream_incremental_dedup_fold), which overwrites its own batch
     partition. Returns upsert's (updated, inserted, deduped)."""
-    from data_ingestors_spark.io.writers import (
-        BUCKET_COL,
-        DEFAULT_N_BUCKETS,
-        path_exists,
-        upsert,
-    )
+    from data_ingestors_spark.io.fs import path_exists
+    from data_ingestors_spark.io.writers import BUCKET_COL, DEFAULT_N_BUCKETS, upsert
 
     n_buckets = n_buckets or DEFAULT_N_BUCKETS
     fps = docs.select(
@@ -1136,11 +1132,8 @@ def incremental_dedup_report(
     the identical report relationally (corpus = the unindexed split)
     and is DuckDB-oracle-paired; equality of the two paths is
     asserted in tests."""
-    from data_ingestors_spark.io.writers import (
-        BUCKET_COL,
-        DEFAULT_N_BUCKETS,
-        path_exists,
-    )
+    from data_ingestors_spark.io.fs import path_exists
+    from data_ingestors_spark.io.writers import BUCKET_COL, DEFAULT_N_BUCKETS
 
     n_buckets = n_buckets or DEFAULT_N_BUCKETS
     b = batch.select(

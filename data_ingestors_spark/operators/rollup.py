@@ -35,8 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestors_spark.io.writers import path_exists
-from data_ingestors_spark.streaming.batches import BATCH_PART_COL, write_batch
+from data_ingestors_spark.io.fs import path_exists, recover
+from data_ingestors_spark.streaming.batches import (
+    BATCH_PART_COL,
+    compact_batches,
+    write_batch,
+)
 
 BUCKET_PART_COL = "__bucket"
 
@@ -186,26 +190,17 @@ def rollup_append_partials(
 def compact_rollup(
     spark: SparkSession, store_path: str, *, key_cols: tuple[str, ...] = ("event_type",)
 ) -> None:
-    """Fold all per-batch partials into a single __batch=-1 layer.
-    Offline maintenance: run while no refresh is active (the same
-    single-writer discipline as writers.upsert's table lock)."""
-    # Not batches.compact_batches: this store partitions by (__bucket,
-    # __batch) and uses only Spark writes, so it works on any Hadoop
-    # filesystem; compact_batches swaps with local os renames.
-    df = spark.read.parquet(store_path)
-    if BATCH_PART_COL not in df.columns:
+    """Fold all per-batch partials into a single __batch=-1 layer,
+    crash-safely (:func:`~data_ingestors_spark.streaming.batches.compact_batches`).
+    A merged-bucket store (rollup_upsert) has no layers and is left
+    as it is. Offline maintenance: run while no refresh is active (the
+    same single-writer discipline as writers.upsert's table lock)."""
+    recover(spark, store_path)  # the layout check reads the store
+    if BATCH_PART_COL not in spark.read.parquet(store_path).columns:
         return
-    merged = _merge(df.drop(BATCH_PART_COL), key_cols).withColumn(
-        BATCH_PART_COL, F.lit(-1).cast("long")
+    compact_batches(
+        spark,
+        store_path,
+        merge=lambda parts: _merge(parts, key_cols).repartition(BUCKET_PART_COL),
+        partition_by=(BUCKET_PART_COL, BATCH_PART_COL),
     )
-    # STATIC overwrite is load-bearing: under dynamic mode (which
-    # clusters often default to) the write would replace only the
-    # __batch=-1 partitions and leave every stale per-batch partial in
-    # place — read_rollup would then double-count all measures.
-    # Per-write option so an ambient dynamic mode cannot leak in (r13).
-    # materialize before the full-store overwrite reads-under-write
-    merged.localCheckpoint(eager=True).repartition(BUCKET_PART_COL).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy(
-        BUCKET_PART_COL, BATCH_PART_COL
-    ).parquet(store_path)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingestors_spark.functions.rounding import fround
+from data_ingestors_spark.operators.layout import spread
 
 #: Within-block pair count past which ``blocked_cosine_pairs``
 #: strategy="auto" swaps the plain chunked grid for the (equally
@@ -40,20 +41,6 @@ GRID_PAIRS_CELLS_CUTOVER = 10_000_000
 #: the planner's f is 0.10 -> grid; at t>=0.96 f drops below the
 #: cutover and the ids-only bucket join becomes the scale path.
 LSH_PAIRS_CANDIDATE_CUTOVER = 0.02
-
-
-def _spread_df(df: DataFrame) -> DataFrame:
-    """Repartition an under-partitioned input up to default
-    parallelism. A corpus that arrives as one small parquet file
-    otherwise runs every Arrow GEMM batch / cross-join task in ONE
-    task (r9: embedding_dim_corr's whole products stage showed
-    (0 + 1) / 1 in the stage trace — parallelism, not per-row cost,
-    was the wall time). No-op at cluster scale, where inputs already
-    carry thousands of splits."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _dot(a, b) -> "F.Column":
@@ -96,7 +83,7 @@ def cosine_topk_bruteforce(
     q = F.broadcast(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     )
-    c = _spread_df(
+    c = spread(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
     )
     scored = (
@@ -302,7 +289,7 @@ def cosine_topk_numpy(
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    scored = _spread_df(corpus.select(id_col, vec_col)).mapInPandas(score, out_schema)
+    scored = spread(corpus.select(id_col, vec_col)).mapInPandas(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )

@@ -26,12 +26,10 @@ from data_ingestors_spark.operators import dedup as D
 from data_ingestors_spark.operators import similarity as S
 from data_ingestors_spark.operators import text as X
 from data_ingestors_spark.operators.baskets import basket_pairs
+from data_ingestors_spark.operators.layout import spread
 from data_ingestors_spark.functions.rounding import fround, o_fround
 from data_ingestors_spark.queries.base import DEC, tables
-from data_ingestors_spark.queries.text_llm import (
-    MAX_BROADCAST_STRATUM,
-    _spread,
-)
+from data_ingestors_spark.queries.text_llm import MAX_BROADCAST_STRATUM
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -509,10 +507,10 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-size benchmark set, unchanged at every ≤2000-row test
     scale)."""
     t = tables(spark, sf_dir, "embeddings")
-    # _spread: the corpus side of the cross join otherwise runs in
+    # spread: the corpus side of the cross join otherwise runs in
     # ONE task off the single parquet file (same lesson as
     # embedding_dim_corr)
-    emb = _spread(t["embeddings"]).select(
+    emb = spread(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     mod = emb.agg(

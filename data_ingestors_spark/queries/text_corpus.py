@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from data_ingestors_spark.operators import dedup as D
 from data_ingestors_spark.operators import similarity as S
 from data_ingestors_spark.operators import text as X
+from data_ingestors_spark.operators.layout import spread
 from data_ingestors_spark.functions.rounding import fround, o_fround
 from data_ingestors_spark.queries.base import DEC, tables
 from data_ingestors_spark.queries.text_llm import (
@@ -31,7 +32,6 @@ from data_ingestors_spark.queries.text_llm import (
     _H_ES,
     _H_FR,
     _queries_subset,
-    _spread,
     q_bigram_logprob,
 )
 
@@ -575,17 +575,17 @@ def q_embedding_dim_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched numpy fancy-indexed multiply (float64 x·y is the
     identical IEEE op the interpreted lambda ran, so the decimal
     sums and the oracle hash are unchanged) and the input is
-    _spread — together 6.4 s → 2.3 s at sf0.1. Per-dim stats
+    spread — together 6.4 s → 2.3 s at sf0.1. Per-dim stats
     broadcast onto the 2016-row pair frame. (A full XᵀX GEMM would
     shave more but loses the per-pair decimal-fold exactness the
     oracle hash needs.) Corr derives from the sums in identical
     double math on both engines.
     """
     t = tables(spark, sf_dir, "embeddings")
-    # _spread: the single-parquet-file table otherwise runs the whole
+    # spread: the single-parquet-file table otherwise runs the whole
     # 2016-products-per-row stage in ONE task (the stage trace showed
     # (0 + 1) / 1 — parallelism, not per-row cost, was the 6 s)
-    emb = _spread(t["embeddings"]).select(
+    emb = spread(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     dims = emb.select(F.posexplode("v").alias("pos", "val"))
@@ -611,7 +611,7 @@ def q_embedding_dim_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (one fancy-indexed multiply per batch) instead of a nested
     # interpreted transform lambda — float64 x*y is the identical
     # IEEE multiply either way, so the decimal-folded sums (and the
-    # oracle hash) are unchanged; with _spread above, 6.4 → 2.3 s
+    # oracle hash) are unchanged; with spread above, 6.4 → 2.3 s
     # at sf0.1
     probe = emb.select("v").head()  # 1-row driver probe
     if probe is None:

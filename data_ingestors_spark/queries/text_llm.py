@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from data_ingestors_spark.operators import dedup as D
 from data_ingestors_spark.operators import similarity as S
 from data_ingestors_spark.operators import text as X
+from data_ingestors_spark.operators.layout import spread
 from data_ingestors_spark.functions.rounding import fround, o_fround
 from data_ingestors_spark.queries.base import DEC, tables
 
@@ -27,18 +28,6 @@ from data_ingestors_spark.queries.base import DEC, tables
 # (binary_embedding_audit): 50k x 64-dim doubles ~ 26 MB broadcast.
 # Module-level so tests can patch it to prove the guard fires.
 MAX_BROADCAST_STRATUM = 50_000
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread compute-heavy per-row work across all cores when the
-    input arrives under-partitioned (one tiny parquet file → one
-    partition → one task). At cluster scale inputs already have
-    thousands of splits and this is a no-op — the repartition only
-    fires when partitions < defaultParallelism."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # --- dedup -------------------------------------------------------------
@@ -98,7 +87,7 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard verification math is oracle-covered by q_ngram_jaccard."""
     t = tables(spark, sf_dir, "documents")
     return D.minhash_near_duplicates(
-        _spread(t["documents"]), "text", "doc_id",
+        spread(t["documents"]), "text", "doc_id",
         num_hashes=32, bands=8, shingle_n=3, threshold=0.7,
     )
 
@@ -106,7 +95,7 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (rows-only: xxhash64 not in DuckDB)."""
     t = tables(spark, sf_dir, "documents")
-    return D.simhash_near_duplicates(_spread(t["documents"]), "text", "doc_id", max_hamming=3)
+    return D.simhash_near_duplicates(spread(t["documents"]), "text", "doc_id", max_hamming=3)
 
 
 # --- similarity search --------------------------------------------------
@@ -753,7 +742,7 @@ def q_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestors_spark.operators.text import dup_span_stats
 
     t = tables(spark, sf_dir, "documents")
-    return dup_span_stats(_spread(t["documents"]), "text", "doc_id", span=30)
+    return dup_span_stats(spread(t["documents"]), "text", "doc_id", span=30)
 
 
 O_DUP_SPAN_STATS = f"""
@@ -787,7 +776,7 @@ def q_dup_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestors_spark.operators.text import dup_span_merge
 
     t = tables(spark, sf_dir, "documents")
-    return dup_span_merge(_spread(t["documents"]), "text", "doc_id", span=30)
+    return dup_span_merge(spread(t["documents"]), "text", "doc_id", span=30)
 
 
 O_DUP_SPAN_MERGE = """
@@ -835,7 +824,7 @@ def q_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestors_spark.operators.text import strip_dup_spans
 
     t = tables(spark, sf_dir, "documents")
-    return strip_dup_spans(_spread(t["documents"]), "text", "doc_id", span=30)
+    return strip_dup_spans(spread(t["documents"]), "text", "doc_id", span=30)
 
 
 O_STRIP_DUP_SPANS = """
@@ -1007,7 +996,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestors_spark.operators.fuzzy import fuzzy_match_stats
 
     t = tables(spark, sf_dir, "customer")
-    return fuzzy_match_stats(_spread(t["customer"]), "c_name", "c_custkey")
+    return fuzzy_match_stats(spread(t["customer"]), "c_name", "c_custkey")
 
 
 O_FUZZY_MATCH = """

@@ -14,27 +14,22 @@ exactly-once fold in ``streaming/`` and ``operators/rollup.py``.
   prior state and emits the same rows, not doubled ones.
 - **Compaction** (:func:`compact_batches`): offline maintenance folds
   every layer into ``__batch=-1`` so partition counts stay bounded as
-  the stream ages. It swaps the folded copy in crash-safely;
-  :func:`recover_compaction` repairs an interrupted swap.
+  the stream ages. The folded copy replaces the store through
+  :func:`~data_ingestors_spark.io.fs.swap_in`, crash-safe on any Hadoop
+  filesystem with an atomic rename.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestors_spark.io.writers import path_exists
+from data_ingestors_spark.io.fs import path_exists, swap_in
 
 BATCH_PART_COL = "__batch"
-
-# sibling-directory suffixes for the crash-safe compaction swap
-_COMPACT_TMP = "__compacting"
-_COMPACT_OLD = "__precompact"
 
 
 def write_batch(
@@ -92,73 +87,36 @@ def start_folds(
     return writer.start()
 
 
-def recover_compaction(root: str, subdirs: tuple[str, ...]) -> None:
-    """Repair a compaction of ``root/<sub>`` interrupted mid-swap (see
-    :func:`compact_batches`).
-
-    State machine per subdir (write-tmp → rename live→old →
-    rename tmp→live → rm old):
-
-    - live missing, old present: crashed between the two renames —
-      restore the original (``old`` → live); the interrupted
-      compaction simply never happened. The tmp copy (complete at
-      that point by ordering) is discarded.
-    - live present, old present: crashed before the old layer was
-      removed — finish by deleting ``old``.
-    - tmp present, live present: crashed before the swap started —
-      discard the partial/complete tmp copy.
-
-    Every terminal state leaves ``live`` holding either the exact
-    pre-compaction or the exact post-compaction row set (the two are
-    semantically identical: compaction only folds layers)."""
-    for sub in subdirs:
-        live = os.path.join(root, sub)
-        tmp = live + _COMPACT_TMP
-        old = live + _COMPACT_OLD
-        if not os.path.isdir(live) and os.path.isdir(old):
-            os.rename(old, live)
-        if os.path.isdir(old) and os.path.isdir(live):
-            shutil.rmtree(old)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-
-
 def compact_batches(
     spark: SparkSession,
     path: str,
     merge: Callable[[DataFrame], DataFrame] | None = None,
+    partition_by: tuple[str, ...] = (BATCH_PART_COL,),
 ) -> None:
     """Fold every batch layer of the store at ``path`` into a single
-    ``__batch=-1`` layer. ``merge`` combines the rows of all layers
-    (``BATCH_PART_COL`` dropped), e.g. a groupBy-sum for additive
-    counts; the default keeps every row (immutable index facts).
-    Offline maintenance: run while no fold writes to ``path``.
+    ``__batch=-1`` layer, written with ``partition_by`` as
+    :func:`write_batch` wrote it. ``merge`` combines the rows of all
+    layers (``BATCH_PART_COL`` dropped), e.g. a groupBy-sum for
+    additive counts; the default keeps every row (immutable index
+    facts). Offline maintenance: run while no fold writes to ``path``.
 
-    Crash-safe: the folded layer is written to a SIBLING directory
-    first, then swapped in with two directory renames (local-FS atomic
-    each); the live store is never the write target, so a crash at any
-    point leaves a complete copy on disk and :func:`recover_compaction`
-    (run here first, and at every refresh-loop entry) repairs the
-    half-swapped states. The renames are local ``os`` calls, so
-    ``path`` must be a driver-visible POSIX path."""
-    live = path.rstrip("/")
-    root, sub = os.path.split(live)
-    recover_compaction(root, (sub,))
-    tmp = live + _COMPACT_TMP
-    old = live + _COMPACT_OLD
-    layers = spark.read.parquet(live).drop(BATCH_PART_COL)
-    folded = (merge(layers) if merge else layers).withColumn(
-        BATCH_PART_COL, F.lit(-1).cast("long")
-    )
-    # the write target is a sibling, not the read path, so no
-    # localCheckpoint materialization is needed. STATIC overwrite is
-    # load-bearing: under dynamic mode only the __batch=-1 partitions
-    # would be replaced and the stale per-batch layers would survive,
-    # doubling every row (the compact_rollup bug class). Per-write
-    # option so an ambient dynamic mode cannot leak in.
-    folded.write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
-        BATCH_PART_COL
-    ).parquet(tmp)
-    os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old)
+    Crash-safe: the folded layer is written to a hidden sibling and
+    swapped in by :func:`~data_ingestors_spark.io.fs.swap_in`, which
+    first repairs an interrupted earlier swap of ``path``; the live
+    store is never the write target, so a crash at any point leaves a
+    complete copy on disk."""
+
+    def write_folded(tmp: str) -> None:
+        layers = spark.read.parquet(path).drop(BATCH_PART_COL)
+        folded = (merge(layers) if merge else layers).withColumn(
+            BATCH_PART_COL, F.lit(-1).cast("long")
+        )
+        # STATIC overwrite is load-bearing: under dynamic mode only the
+        # __batch=-1 partitions would be replaced and stale per-batch
+        # layers would survive, doubling every row. Per-write option so
+        # an ambient dynamic mode cannot leak in.
+        folded.write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
+            *partition_by
+        ).parquet(tmp)
+
+    swap_in(spark, path, write_folded)

@@ -35,7 +35,7 @@ def fuzzy_match_fold_batch(
 ) -> None:
     """Match one micro-batch against the reference; idempotent by
     batch id (dynamic overwrite of the batch's own partition)."""
-    from data_ingestors_spark.io.writers import path_exists
+    from data_ingestors_spark.io.fs import path_exists
     from data_ingestors_spark.operators.fuzzy import fastss_match
 
     matched = fastss_match(batch, reference, col, id_col, ref_col, ref_id_col)

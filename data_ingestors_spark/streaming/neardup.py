@@ -115,7 +115,7 @@ def neardup_fold_batch(
     """Fold one batch into the near-dup index and emit its pairs.
     Idempotent by batch id (dynamic overwrite of own partitions)."""
     from data_ingestors_spark.functions.rounding import fround
-    from data_ingestors_spark.io.writers import path_exists
+    from data_ingestors_spark.io.fs import path_exists
 
     bands_dir = f"{index_path}/bands"
     sh_dir = f"{index_path}/shingles"
@@ -269,11 +269,11 @@ def incremental_dedup_fold_batch(
     bucket directories across prior batches (two-level partition
     pruning); per-batch cost is O(|batch| fingerprints + touched
     buckets), the stream never rescans the corpus."""
+    from data_ingestors_spark.io.fs import path_exists
     from data_ingestors_spark.io.writers import (
         BUCKET_COL,
         DEFAULT_N_BUCKETS,
         _cluster_by_bucket,
-        path_exists,
     )
     from data_ingestors_spark.operators.dedup import _novelty_report, normalize_text
 
@@ -404,7 +404,7 @@ def embedding_neardup_fold_batch(
     ``operators/similarity._lsh_cosine_pairs`` — so after any prefix
     of batches the emitted set equals the batch operator over the
     union (asserted in tests)."""
-    from data_ingestors_spark.io.writers import path_exists
+    from data_ingestors_spark.io.fs import path_exists
     from data_ingestors_spark.operators.similarity import (
         _lsh_pair_params,
         _pair_cosine_udf,

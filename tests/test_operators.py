@@ -1341,6 +1341,60 @@ def test_compact_rollup_immune_to_dynamic_overwrite_mode(spark, tmp_path):
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
+def test_compact_rollup_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch):
+    """A crash between the compaction swap's two renames (live store
+    moved aside, folded copy not yet in place) loses nothing: recovery
+    restores the store, read_rollup answers as before, and so it does
+    after a compaction that first repairs a crashed one."""
+    import os
+
+    from data_ingestors_spark.io import fs
+    from data_ingestors_spark.operators.rollup import (
+        compact_rollup,
+        read_rollup,
+        rollup_append_partials,
+    )
+
+    rows = [(i, dt.datetime(2024, 1, 1, i % 2), 1, "view", float(i), "{}") for i in range(4)]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    )
+    store = str(tmp_path / "r")
+    rollup_append_partials(spark, df.filter("event_id < 2"), store, 0)
+    rollup_append_partials(spark, df.filter("event_id >= 2"), store, 1)
+
+    def snapshot():
+        return sorted(
+            (r.bucket, r.event_type, r.n_events, float(r.sum_value))
+            for r in read_rollup(spark, store).collect()
+        )
+
+    before = snapshot()
+    real_rename = fs.rename
+
+    def crash_into_store(spark, src, dst):
+        if dst == store:
+            raise OSError("simulated crash before the folded copy is swapped in")
+        real_rename(spark, src, dst)
+
+    monkeypatch.setattr(fs, "rename", crash_into_store)
+    with pytest.raises(OSError):
+        compact_rollup(spark, store)
+    monkeypatch.setattr(fs, "rename", real_rename)
+    assert not os.path.exists(store)
+
+    fs.recover_swaps(spark, str(tmp_path))
+    assert snapshot() == before
+
+    monkeypatch.setattr(fs, "rename", crash_into_store)
+    with pytest.raises(OSError):
+        compact_rollup(spark, store)
+    monkeypatch.setattr(fs, "rename", real_rename)
+    compact_rollup(spark, store)
+    assert snapshot() == before
+    assert os.listdir(tmp_path) == ["r"]
+
+
 def test_interval_overlap_join_exactly_once_across_bins(spark):
     """A pair overlapping across MANY shared bins must appear exactly
     once (the later-start bin guard), and touching endpoints count as

@@ -513,3 +513,50 @@ def test_ingest_pipeline_caches_once_and_never_counts():
     counts = [c for c in calls if c[0] == "count"]
     assert len(caches) == 1, caches
     assert not counts, counts
+
+
+def test_store_filesystem_lives_in_io_fs():
+    """``io/fs.py`` is the only module that touches the store's
+    filesystem: ``hadoop_fs`` and ``org.apache.hadoop.fs`` appear
+    nowhere else; the store rewriters make no local ``os``/``shutil``
+    file calls and no builtin ``open``; and ``compact_rollup`` no
+    longer materializes with ``localCheckpoint``. AST only: no package
+    module is imported."""
+    import ast
+
+    pkg_dir = os.path.join(REPO, "data_ingestors_spark")
+    owner = os.path.join(pkg_dir, "io", "fs.py")
+    local_calls = {
+        "os.rename", "os.replace", "os.makedirs", "os.path.exists", "os.path.isdir",
+        "shutil.rmtree", "shutil.move", "open",
+    }
+    rewriters = {
+        os.path.join(pkg_dir, *p)
+        for p in (
+            ("streaming", "batches.py"),
+            ("operators", "rollup.py"),
+            ("ingest", "refresh.py"),
+            ("io", "writers.py"),
+        )
+    }
+    hits = []
+    for root, _dirs, names in os.walk(pkg_dir):
+        for name in sorted(names):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                source = fh.read()
+            rel = os.path.relpath(path, REPO)
+            if path != owner:
+                hits += [f"{rel}: {s}" for s in ("hadoop_fs", "org.apache.hadoop.fs") if s in source]
+            if path not in rewriters:
+                continue
+            for node in ast.walk(ast.parse(source, path)):
+                if isinstance(node, ast.Call):
+                    callee = ast.unparse(node.func)
+                    if callee in local_calls or (
+                        path.endswith("rollup.py") and callee.endswith(".localCheckpoint")
+                    ):
+                        hits.append(f"{rel}:{node.lineno}: {callee}")
+    assert not hits, hits

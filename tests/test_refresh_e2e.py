@@ -144,6 +144,37 @@ def test_refresh_compaction_ran_and_bounded_layers(spark, store):
     assert layers == [-1]
 
 
+def test_refresh_store_on_file_uri(spark, tmp_path):
+    """The ``store`` scenario with a ``file:///`` store and ``file://``
+    batch paths: the ledger and the marker land inside the store, the
+    ledger keeps the URIs as given, and the replay is recognised."""
+    from data_ingestors_spark.ingest.refresh import refresh_corpus
+
+    b1 = _write_batch(
+        spark, tmp_path, "ub1",
+        [(1, "web", LOREM), (2, "web", LOREM), (3, "web", OTHER), (4, "books", LOREM_NEAR)],
+    )
+    b2 = _write_batch(
+        spark, tmp_path, "ub2",
+        [(5, "web", LOREM), (6, "books", OTHER + " appended"),
+         (7, "books", "a third topic entirely unrelated to both")],
+    )
+    store_dir = str(tmp_path / "store")
+    uri1, uri2 = f"file://{b1}", f"file://{b2}"
+    r1 = refresh_corpus(spark, f"file://{store_dir}", uri1, compact_every=2)
+    r2 = refresh_corpus(spark, f"file://{store_dir}", uri2, compact_every=2)
+    replay = refresh_corpus(spark, f"file://{store_dir}", uri2, compact_every=2)
+
+    assert (r1["batch_id"], r2["batch_id"], replay["batch_id"]) == (0, 1, 1)
+    assert r2["compacted"] is True and replay["replay"] is True
+    assert r2["upsert"] == {"updated": 0, "inserted": 3, "deduped": 0}
+    with open(os.path.join(store_dir, "ledger.json")) as fh:
+        assert json.load(fh)["batches"] == [uri1, uri2]
+    with open(os.path.join(store_dir, "compact_marker.json")) as fh:
+        assert json.load(fh)["compacted_through"] == 1
+    assert spark.read.parquet(os.path.join(store_dir, "corpus")).count() == 7
+
+
 def test_refresh_cli_subcommand(spark, store, tmp_path, capsys):
     """`cli refresh <store> <batch>` runs the loop and prints one JSON
     summary line."""
@@ -218,51 +249,49 @@ def test_refresh_embedding_monitor(spark, tmp_path):
 # --- r12: compaction crash-safety (ADVICE r12 #1) ------------------------
 
 
-def test_recover_compaction_state_machine(tmp_path):
+def test_recover_compaction_state_machine(spark, tmp_path):
     """Every interrupted-swap state terminates with a complete live
     copy: live-missing+old → restore old; live+old → drop old;
-    live+tmp → drop tmp. Pure directory mechanics, no Spark."""
+    live+tmp → drop tmp. Pure directory mechanics, no Spark job."""
     import shutil
 
-    from data_ingestors_spark.streaming.batches import (
-        _COMPACT_OLD,
-        _COMPACT_TMP,
-        recover_compaction,
-    )
+    from data_ingestors_spark.io.fs import recover_swaps, swap_paths
 
-    def mk(name, tag):
-        d = tmp_path / name
+    def mk(path, tag):
+        d = tmp_path / path
         d.mkdir(parents=True)
         (d / "part-0.parquet").write_text(tag)
         return d
 
     idx = tmp_path / "index"
+    tmp, old = (os.path.relpath(p, tmp_path) for p in swap_paths(str(idx / "bands")))
     # state A: crashed between the two renames (live gone, old+tmp left)
-    mk("index/bands" + _COMPACT_OLD, "original")
-    mk("index/bands" + _COMPACT_TMP, "folded")
-    recover_compaction(str(idx), ("bands",))
+    mk(old, "original")
+    mk(tmp, "folded")
+    recover_swaps(spark, str(idx))
     assert (idx / "bands" / "part-0.parquet").read_text() == "original"
-    assert not (idx / ("bands" + _COMPACT_OLD)).exists()
-    assert not (idx / ("bands" + _COMPACT_TMP)).exists()
+    assert not (tmp_path / old).exists()
+    assert not (tmp_path / tmp).exists()
 
     # state B: crashed after the swap, before old was removed
     shutil.rmtree(idx)
     mk("index/bands", "folded")
-    mk("index/bands" + _COMPACT_OLD, "original")
-    recover_compaction(str(idx), ("bands",))
+    mk(old, "original")
+    recover_swaps(spark, str(idx))
     assert (idx / "bands" / "part-0.parquet").read_text() == "folded"
-    assert not (idx / ("bands" + _COMPACT_OLD)).exists()
+    assert not (tmp_path / old).exists()
 
     # state C: crashed mid-tmp-write, before any rename
     shutil.rmtree(idx)
     mk("index/bands", "original")
-    mk("index/bands" + _COMPACT_TMP, "partial")
-    recover_compaction(str(idx), ("bands",))
+    mk(tmp, "partial")
+    recover_swaps(spark, str(idx))
     assert (idx / "bands" / "part-0.parquet").read_text() == "original"
-    assert not (idx / ("bands" + _COMPACT_TMP)).exists()
+    assert not (tmp_path / tmp).exists()
 
     # no-op on a healthy or absent index
-    recover_compaction(str(idx), ("bands", "shingles"))
+    recover_swaps(spark, str(idx))
+    recover_swaps(spark, str(tmp_path / "absent"))
     assert (idx / "bands" / "part-0.parquet").read_text() == "original"
 
 
@@ -270,12 +299,12 @@ def test_compact_table_raises_when_swap_rename_fails(spark, tmp_path, monkeypatc
     """Hadoop FileSystem reports a failed rename by returning False;
     compact_table must raise instead of reporting success with the
     bucket directory already deleted."""
-    from data_ingestors_spark.io import writers
+    from data_ingestors_spark.io import fs, writers
 
     table = str(tmp_path / "table")
     spark.range(30).repartition(3).write.parquet(f"{table}/__bucket=0")
 
-    real_hadoop_fs = writers.hadoop_fs
+    real_hadoop_fs = fs.hadoop_fs
 
     class RenameFails:
         def __init__(self, fs):
@@ -288,12 +317,42 @@ def test_compact_table_raises_when_swap_rename_fails(spark, tmp_path, monkeypatc
             return False
 
     def failing_fs(spark, path):
-        fs, jpath = real_hadoop_fs(spark, path)
-        return RenameFails(fs), jpath
+        jfs, jpath = real_hadoop_fs(spark, path)
+        return RenameFails(jfs), jpath
 
-    monkeypatch.setattr(writers, "hadoop_fs", failing_fs)
+    monkeypatch.setattr(fs, "hadoop_fs", failing_fs)
     with pytest.raises(IOError, match="rename"):
         writers.compact_table(spark, table)
+
+
+def test_compact_table_keeps_every_row_through_a_crash_mid_swap(spark, tmp_path, monkeypatch):
+    """A crash between the bucket swap's two renames hides the bucket
+    (its old copy is a hidden sibling) but loses nothing: recovery
+    restores it, and the next compaction folds it."""
+    from data_ingestors_spark.io import fs, writers
+
+    table = str(tmp_path / "table")
+    bucket = f"{table}/__bucket=0"
+    spark.range(30).repartition(3).write.parquet(bucket)
+
+    real_rename = fs.rename
+
+    def crash_into_bucket(spark, src, dst):
+        if dst == bucket:
+            raise OSError("simulated crash before the compacted bucket is swapped in")
+        real_rename(spark, src, dst)
+
+    monkeypatch.setattr(fs, "rename", crash_into_bucket)
+    with pytest.raises(OSError):
+        writers.compact_table(spark, table)
+    monkeypatch.setattr(fs, "rename", real_rename)
+    assert not os.path.exists(bucket)
+
+    fs.recover_swaps(spark, table)
+    assert sorted(r.id for r in writers.read_table(spark, table).collect()) == list(range(30))
+    assert writers.compact_table(spark, table)["buckets"] == 1
+    assert sorted(r.id for r in writers.read_table(spark, table).collect()) == list(range(30))
+    assert sorted(os.listdir(table)) == ["__bucket=0"]
 
 
 def test_refresh_compaction_overdue_catchup(spark, tmp_path):
@@ -342,8 +401,9 @@ def test_refresh_repairs_halfswapped_index_at_entry(spark, tmp_path):
     import os as _os
 
     from data_ingestors_spark.ingest.refresh import refresh_corpus
+    from data_ingestors_spark.io.fs import swap_paths
     from data_ingestors_spark.operators.dedup import minhash_near_duplicates
-    from data_ingestors_spark.streaming.batches import _COMPACT_OLD, BATCH_PART_COL
+    from data_ingestors_spark.streaming.batches import BATCH_PART_COL
 
     store_dir = str(tmp_path / "store")
     b0 = _write_batch(
@@ -351,13 +411,14 @@ def test_refresh_repairs_halfswapped_index_at_entry(spark, tmp_path):
     )
     refresh_corpus(spark, store_dir, b0, compact_every=0)
     bands = _os.path.join(store_dir, "neardup", "index", "bands")
+    _, old = swap_paths(bands)
     # simulate the crash window between the two swap renames
-    _os.rename(bands, bands + _COMPACT_OLD)
+    _os.rename(bands, old)
     assert not _os.path.isdir(bands)
 
     b1 = _write_batch(spark, tmp_path, "hb1", [(3, "web", LOREM_NEAR)])
     refresh_corpus(spark, store_dir, b1, compact_every=0)  # repairs, then folds
-    assert _os.path.isdir(bands) and not _os.path.isdir(bands + _COMPACT_OLD)
+    assert _os.path.isdir(bands) and not _os.path.isdir(old)
 
     union = spark.read.parquet(b0).unionByName(spark.read.parquet(b1))
     want = {
@@ -373,11 +434,60 @@ def test_refresh_repairs_halfswapped_index_at_entry(spark, tmp_path):
     assert got == want and (1, 3) in got
 
 
+def test_refresh_reruns_a_batch_whose_ledger_swap_crashed(spark, tmp_path, monkeypatch):
+    """A crash between the ledger swap's two renames (old ledger moved
+    aside, new one not yet in) restores the previous ledger at the
+    next entry, so the batch re-runs under the same id and every fold
+    stays exact."""
+    from data_ingestors_spark.ingest.refresh import refresh_corpus
+    from data_ingestors_spark.io import fs
+    from data_ingestors_spark.operators.dedup import minhash_near_duplicates
+    from data_ingestors_spark.streaming.batches import BATCH_PART_COL
+
+    store_dir = str(tmp_path / "store")
+    ledger = os.path.join(store_dir, "ledger.json")
+    b0 = _write_batch(spark, tmp_path, "lb0", [(1, "web", LOREM), (2, "web", OTHER)])
+    b1 = _write_batch(spark, tmp_path, "lb1", [(3, "web", LOREM_NEAR)])
+    refresh_corpus(spark, store_dir, b0, compact_every=0)
+
+    real_rename = fs.rename
+
+    def crash_into_ledger(spark, src, dst):
+        if dst == ledger:
+            raise OSError("simulated crash before the new ledger is swapped in")
+        real_rename(spark, src, dst)
+
+    monkeypatch.setattr(fs, "rename", crash_into_ledger)
+    with pytest.raises(OSError):
+        refresh_corpus(spark, store_dir, b1, compact_every=0)
+    monkeypatch.setattr(fs, "rename", real_rename)
+    assert not os.path.exists(ledger)
+
+    r = refresh_corpus(spark, store_dir, b1, compact_every=0)
+    assert r["batch_id"] == 1 and r["replay"] is False
+    with open(ledger) as fh:
+        assert json.load(fh)["batches"] == [b0, b1]
+    assert spark.read.parquet(os.path.join(store_dir, "corpus")).count() == 3
+
+    union = spark.read.parquet(b0).unionByName(spark.read.parquet(b1))
+    want = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_near_duplicates(union, "text", "doc_id").collect()
+    }
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in spark.read.parquet(os.path.join(store_dir, "neardup", "pairs"))
+        .drop(BATCH_PART_COL)
+        .collect()
+    }
+    assert got == want and (1, 3) in got
+
+
 def test_spread_input_only_when_under_parallel(spark, tmp_path):
-    """r12-opt guard: _spread_input round-robins a 1-file batch read
+    """r12-opt guard: spread round-robins a 1-file batch read
     to defaultParallelism (so per-doc stages use the cluster) but is
     row-identical and leaves an already-parallel frame untouched."""
-    from data_ingestors_spark.ingest.refresh import _spread_input
+    from data_ingestors_spark.operators.layout import spread
 
     rows = [(i, "s", f"doc {i}") for i in range(100)]
     path = str(tmp_path / "one_file_batch")
@@ -385,12 +495,12 @@ def test_spread_input_only_when_under_parallel(spark, tmp_path):
     narrow = spark.read.parquet(path)
     assert narrow.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
 
-    spread = _spread_input(spark, narrow)
-    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    assert sorted(r.doc_id for r in spread.collect()) == list(range(100))
+    spread_df = spread(narrow)
+    assert spread_df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(r.doc_id for r in spread_df.collect()) == list(range(100))
 
     wide = _docs(spark, rows).repartition(spark.sparkContext.defaultParallelism)
-    assert _spread_input(spark, wide) is wide  # no extra shuffle added
+    assert spread(wide) is wide  # no extra shuffle added
 
 
 @pytest.mark.parametrize("parity", [0, 1])

@@ -506,10 +506,9 @@ def test_compact_counts_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatc
     """A crash between compaction's two swap renames (live store moved
     aside, folded copy not yet in place) loses nothing: the next
     compaction restores the store first, then folds it."""
-    import os
-
     import pytest
 
+    from data_ingestors_spark.io import fs
     from data_ingestors_spark.streaming import compact_counts, counts_fold_batch, read_heavy_hitters
 
     store = str(tmp_path / "counts")
@@ -519,17 +518,17 @@ def test_compact_counts_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatc
     before = {(r.w, r.cnt) for r in read_heavy_hitters(spark, store, 1, 10).collect()}
     assert before == {("hot", 8), ("warm", 4)}
 
-    real_rename = os.rename
+    real_rename = fs.rename
 
-    def crash_into_store(src, dst):
-        if os.fspath(dst) == store:
+    def crash_into_store(spark, src, dst):
+        if dst == store:
             raise OSError("simulated crash before the folded copy is swapped in")
-        real_rename(src, dst)
+        real_rename(spark, src, dst)
 
-    monkeypatch.setattr(os, "rename", crash_into_store)
+    monkeypatch.setattr(fs, "rename", crash_into_store)
     with pytest.raises(OSError):
         compact_counts(spark, store)
-    monkeypatch.setattr(os, "rename", real_rename)
+    monkeypatch.setattr(fs, "rename", real_rename)
 
     compact_counts(spark, store)
     assert {(r.w, r.cnt) for r in read_heavy_hitters(spark, store, 1, 10).collect()} == before

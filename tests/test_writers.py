@@ -8,9 +8,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from data_ingestors_spark.io.fs import path_exists
 from data_ingestors_spark.io.writers import (
     BUCKET_COL,
-    path_exists,
     read_table,
     upsert,
 )
