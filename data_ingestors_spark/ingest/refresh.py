@@ -201,8 +201,7 @@ def refresh_corpus(
     # partition-keyed write inside the folds carries its own per-write
     # option("partitionOverwriteMode", ...), which takes precedence over
     # the session conf — no session-level mutation happens here or in
-    # any fold, so concurrent folds cannot race on it and upsert's
-    # whole-table-rewrite branches keep their static truncation.
+    # any fold, so concurrent folds cannot race on it.
     from concurrent.futures import ThreadPoolExecutor
 
     try:

@@ -5,27 +5,37 @@ The reference upserts batches into MySQL keyed on unique ``data_id``
 per-record fallback isolation. Spark-first equivalents:
 
 - primary store: a parquet "table" directory **hash-bucketed on the
-  key** (``__bucket = pmod(xxhash64(key), n_buckets)``). An upsert
-  reads and rewrites ONLY the buckets the batch touches (dynamic
-  partition overwrite) — a 1-row batch against a 100 TB table moves
-  1/n_buckets of the data, not all of it;
+  key** (``__bucket = pmod(xxhash64(key), n)``). The bucket count
+  ``n`` is a property of the table, recorded with it in a hidden
+  ``_buckets.json`` (:func:`bucket_count`; a table written before
+  counts were recorded has 64). A new table is sized to its data:
+  the smallest power of two of buckets no larger than Spark's read
+  split (``spark.sql.files.maxPartitionBytes``), at most 64 — a 10k-row
+  batch writes one file, not 64. A merge that touches every bucket
+  rewrites every bucket anyway, so it grows ``n`` to the table's
+  on-disk size first. Otherwise an upsert reads and rewrites ONLY the
+  buckets the batch touches (dynamic partition overwrite) — a 1-row
+  batch against a 100 TB table moves one bucket, not the table;
 - all filesystem probes, renames and deletes go through ``io/fs.py``
   on the Hadoop FileSystem API, so the same code runs on file:, hdfs:,
-  s3a:, abfs: — no driver-local ``os.path`` assumptions;
+  abfs: — no driver-local ``os.path`` assumptions;
 - batch dedup on the key is DETERMINISTIC (row_number over a stable
   content hash), because ``dropDuplicates`` keeps an arbitrary row and
   an ambiguous merge source must not resolve differently per run;
 - no job runs just to count: the merge counts (updated, inserted,
-  deduped) are observed on the write or on the merge's lineage
-  checkpoint, next to the one per-bucket aggregation the merge needs
-  to find its touched buckets;
+  deduped) are observed on the write, next to the one per-bucket
+  aggregation the merge needs to find its touched buckets;
 - per-record fallback isolation is replaced by *pre-validation
   splitting* (SURVEY.md §7 hard-part 1): rows that would violate
   constraints split off before the write.
 
-Atomicity: dynamic partition overwrite swaps each bucket atomically
-but not the set of buckets as a whole; a crash mid-write can leave a
-mix of old/new buckets. The per-table ingest lock (ingest/lock.py)
+Atomicity: a new table, and every whole-table rewrite (growth, schema
+evolution, the legacy flat layout), is written beside the table and
+swapped in with its recorded count (:func:`~data_ingestors_spark.io.fs.swap_in`):
+a crash leaves the old rows with the old count or the new rows with
+the new one. A touched-bucket merge commits each bucket atomically but
+not the set of buckets as a whole; a crash mid-commit can leave a mix
+of old/new buckets. The per-table ingest lock (ingest/lock.py)
 serializes writers, and the deterministic key-based merge makes a
 re-run idempotent — the standard posture for plain-parquet tables.
 With Delta/Iceberg jars on the classpath, swap the write for a real
@@ -37,10 +47,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_ingestors_spark.io.fs import delete, ls, path_exists, rename, swap_in
+from data_ingestors_spark.io.fs import (
+    FS,
+    delete,
+    ls,
+    path_exists,
+    put_json,
+    read_json,
+    recover,
+    rename,
+    resolve,
+    swap_in,
+)
 
 BUCKET_COL = "__bucket"
+# the bucket count of a table written before counts were recorded, and
+# the most buckets a new table starts with
 DEFAULT_N_BUCKETS = 64
+# the recorded count, inside the table; Spark's reader skips "_" names
+BUCKETS_FILE = "_buckets.json"
 
 
 def write_table(
@@ -60,11 +85,42 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 DUPS_COL = "__dups"
+# run-time stamps (the ingest's created_at/updated_at): one value for a
+# whole batch and another on every run, so the dedup orders by them only
+# after the content hash
+STAMP_COLS = ("created_at", "updated_at")
 
 
 def _bucket_of(key: str, n_buckets: int):
     """The bucket a key hashes to: ``pmod(xxhash64(key), n_buckets)``."""
     return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int")
+
+
+def bucket_count(on: SparkSession | FS, path: str, n_buckets: int | None = None) -> int:
+    """The bucket count recorded with the bucketed table at ``path``
+    (:data:`DEFAULT_N_BUCKETS` if it has none). A caller's
+    ``n_buckets`` that differs raises ``ValueError``: a key hashed
+    with another count names the wrong bucket."""
+    recorded = read_json(
+        on, f"{path.rstrip('/')}/{BUCKETS_FILE}", {"n_buckets": DEFAULT_N_BUCKETS}
+    )["n_buckets"]
+    if n_buckets is not None and n_buckets != recorded:
+        raise ValueError(f"{path} has {recorded} buckets, not n_buckets={n_buckets}")
+    return recorded
+
+
+def _buckets_for(df: DataFrame, cap: int | None = None) -> int:
+    """The smallest power of two of buckets that holds ``df`` (by its
+    plan's size estimate) in buckets no larger than Spark's read split
+    (``spark.sql.files.maxPartitionBytes``), at most ``cap``. A frame
+    whose size Spark cannot estimate (an RDD, a Python list) gets
+    ``cap``."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    split = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = 1
+    while n * split < size and (cap is None or n < cap):
+        n *= 2
+    return n
 
 
 def _cluster_by_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -83,9 +139,26 @@ def _cluster_by_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.repartition(parts, F.col(BUCKET_COL))
 
 
+def _swap_table(fs: FS, path: str, rows: DataFrame, key: str, n_buckets: int) -> None:
+    """Write ``rows`` as the whole table at ``path`` in ``n_buckets``
+    buckets, with the count recorded beside them, and swap it in: the
+    rows and their count appear together or not at all. ``rows`` may
+    read the table it replaces."""
+    rows = rows.withColumn(BUCKET_COL, _bucket_of(key, n_buckets))
+
+    def write(tmp: str) -> None:
+        _cluster_by_bucket(rows, n_buckets).write.mode("overwrite").partitionBy(
+            BUCKET_COL
+        ).parquet(tmp)
+        put_json(fs, f"{tmp}/{BUCKETS_FILE}", {"n_buckets": n_buckets})
+
+    swap_in(fs, path, write)
+
+
 def _dedup_deterministic(batch: DataFrame, key: str) -> DataFrame:
-    """Keep exactly one row per key, chosen by a stable content hash —
-    same winner on every run/partitioning, unlike dropDuplicates.
+    """Keep exactly one row per key, chosen by a stable hash of the
+    row's content (every column but the run-time stamps) — same winner
+    on every run/partitioning, unlike dropDuplicates.
 
     The kept row carries ``__dups`` = (group size − 1), computed in the
     SAME window pass (count over the identical partition spec adds no
@@ -93,10 +166,14 @@ def _dedup_deterministic(batch: DataFrame, key: str) -> DataFrame:
     whatever aggregation they already run — no standalone
     count_distinct job over the key column (the round-3 ingest
     throughput regression)."""
+    stamps = [c for c in STAMP_COLS if c in batch.columns]
     tiebreak = F.sha2(
-        F.concat_ws("\x1f", *[F.col(c).cast("string") for c in batch.columns]), 256
+        F.concat_ws(
+            "\x1f", *[F.col(c).cast("string") for c in batch.columns if c not in stamps]
+        ),
+        256,
     )
-    w = Window.partitionBy(key).orderBy(tiebreak)
+    w = Window.partitionBy(key).orderBy(tiebreak, *stamps)
     wg = Window.partitionBy(key)
     return (
         batch.withColumn("__rn", F.row_number().over(w))
@@ -111,7 +188,7 @@ def upsert(
     target_path: str,
     batch: DataFrame,
     key: str = "data_id",
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int | None = None,
     allow_evolution: bool = False,
 ) -> tuple[int, int, int]:
     """Incremental MERGE-equivalent upsert into a bucketed parquet
@@ -122,68 +199,84 @@ def upsert(
     observed on its write; a merge takes the batch size and ``deduped``
     from the per-bucket aggregation that also names the touched
     buckets, and ``updated`` from the rows observed on the current
-    buckets and on their kept rows during the lineage checkpoint. Only
-    the hash buckets present in the batch are read, merged, and
-    rewritten.
+    rows and on their kept rows during the write.
+
+    ``n_buckets`` sets a new table's bucket count; ``None`` sizes it
+    from the batch (see the module docstring). An existing table keeps
+    its recorded count, and an ``n_buckets`` that differs from it
+    raises ``ValueError``. An interrupted earlier swap of the table is
+    repaired first, so a half-swapped table is never taken for absent.
+
+    A merge reads and rewrites only the buckets the batch touches, in
+    place (dynamic partition overwrite). It rewrites the WHOLE table,
+    through :func:`~data_ingestors_spark.io.fs.swap_in`, when the batch
+    touches every bucket and the table has outgrown its count (every
+    row is re-hashed into the grown count), when the table has the
+    legacy flat layout (pre-bucketing), and on schema evolution.
 
     Schema drift is an ERROR, never silent: a batch missing table
     columns, or carrying new ones without ``allow_evolution=True``,
     fails with the exact column lists (K2 drift semantics,
     database.py:272-297). With ``allow_evolution=True`` new columns
-    are appended (existing rows read NULL) — this rewrites the WHOLE
-    table once so every parquet file carries the same schema, because
-    a mixed-schema directory silently drops the new column on read
-    unless every reader remembers mergeSchema."""
-    batch = _dedup_deterministic(batch, key).withColumn(BUCKET_COL, _bucket_of(key, n_buckets))
+    are appended (existing rows read NULL) — the whole-table rewrite
+    gives every parquet file the same schema, because a mixed-schema
+    directory silently drops the new column on read unless every
+    reader remembers mergeSchema."""
+    fs = resolve(spark, target_path)
+    recover(fs, target_path)
+    deduped_batch = _dedup_deterministic(batch, key)
 
-    if not path_exists(spark, target_path):
+    if not path_exists(fs, target_path):
+        n = n_buckets or _buckets_for(batch, cap=DEFAULT_N_BUCKETS)
         obs = Observation()
-        observed = batch.observe(
+        observed = deduped_batch.observe(
             obs, F.count(F.lit(1)).alias("n"), F.sum(DUPS_COL).alias("deduped")
         )
-        write_table(
-            _cluster_by_bucket(observed.drop(DUPS_COL), n_buckets),
-            target_path, "overwrite", [BUCKET_COL],
-        )
+        _swap_table(fs, target_path, observed.drop(DUPS_COL), key, n)
         return (0, int(obs.get["n"]), int(obs.get["deduped"] or 0))
 
-    batch = batch.persist()
+    current = spark.read.parquet(target_path)
+    current_cols = [c for c in current.columns if c != BUCKET_COL]
+    batch_cols = [c for c in deduped_batch.columns if c != DUPS_COL]
+    missing = [c for c in current_cols if c not in batch_cols]
+    extra = [c for c in batch_cols if c not in current_cols]
+    if missing:
+        raise ValueError(
+            f"schema drift: batch is missing table columns {missing} "
+            f"(table has {current_cols}). Upserts must carry every "
+            "existing column — project NULLs explicitly if intended."
+        )
+    if extra and not allow_evolution:
+        raise ValueError(
+            f"schema drift: batch carries new columns {extra} not in the "
+            f"table ({current_cols}). Pass allow_evolution=True to add "
+            "them (existing rows read NULL)."
+        )
+    flat = BUCKET_COL not in current.columns
+    if flat:
+        n = n_buckets or _buckets_for(current, cap=DEFAULT_N_BUCKETS)
+    else:
+        n = bucket_count(fs, target_path, n_buckets)
+
+    batch = deduped_batch.withColumn(BUCKET_COL, _bucket_of(key, n)).persist()
     try:
-        current = spark.read.parquet(target_path)
-
-        current_cols = [c for c in current.columns if c != BUCKET_COL]
-        batch_cols = [c for c in batch.columns if c not in (BUCKET_COL, DUPS_COL)]
-        missing = [c for c in current_cols if c not in batch_cols]
-        extra = [c for c in batch_cols if c not in current_cols]
-        if missing:
-            raise ValueError(
-                f"schema drift: batch is missing table columns {missing} "
-                f"(table has {current_cols}). Upserts must carry every "
-                "existing column — project NULLs explicitly if intended."
-            )
-        if extra and not allow_evolution:
-            raise ValueError(
-                f"schema drift: batch carries new columns {extra} not in the "
-                f"table ({current_cols}). Pass allow_evolution=True to add "
-                "them (existing rows read NULL)."
-            )
-
         per_bucket = batch.groupBy(BUCKET_COL).agg(
             F.count(F.lit(1)).alias("n"), F.sum(DUPS_COL).alias("deduped")
         ).collect()
-        n = sum(r["n"] for r in per_bucket)
+        rows = sum(r["n"] for r in per_bucket)
         deduped = sum(r["deduped"] or 0 for r in per_bucket)
+        touched = [r[BUCKET_COL] for r in per_bucket]
 
-        # Evolution and the legacy flat layout (pre-bucketing) rewrite
-        # the WHOLE table once, so the on-disk schema and layout are
-        # uniform; otherwise only the touched buckets are read.
-        whole_table = bool(extra) or BUCKET_COL not in current.columns
+        grown = n
+        if not flat and len(touched) == n:
+            # the merge rewrites every bucket anyway: size the table to
+            # its on-disk bytes (the listed files' total) first
+            grown = max(n, _buckets_for(current))
+        whole_table = flat or bool(extra) or grown != n
         for c in extra:
             current = current.withColumn(c, F.lit(None).cast(batch.schema[c].dataType))
-        if BUCKET_COL not in current.columns:
-            current = current.withColumn(BUCKET_COL, _bucket_of(key, n_buckets))
         if not whole_table:
-            current = current.filter(F.col(BUCKET_COL).isin([r[BUCKET_COL] for r in per_bucket]))
+            current = current.filter(F.col(BUCKET_COL).isin(touched))
 
         # the batch is key-deduplicated, so every current row whose key
         # the batch carries is exactly one update: updated = rows read
@@ -194,28 +287,19 @@ def upsert(
             .join(batch.select(key), on=key, how="left_anti")
             .observe(keep_obs, F.count(F.lit(1)).alias("n"))
         )
-        merged = _cluster_by_bucket(keep.unionByName(batch.select(keep.columns)), n_buckets)
-
-        # Truncate lineage before overwriting the path we just read —
-        # Spark (correctly) refuses an overwrite whose plan still scans
-        # the target. A transactional format (Delta MERGE) removes the
-        # need.
-        merged = merged.localCheckpoint(eager=True)
+        merged = keep.unionByName(batch.select(keep.columns))
+        if whole_table:
+            _swap_table(fs, target_path, merged, key, grown)
+        else:
+            # the dynamic overwrite stages its output before it replaces
+            # the touched buckets, so the plan may read them; the
+            # writer option scopes the mode to this write, so it is
+            # thread-safe under the concurrent refresh folds
+            _cluster_by_bucket(merged, n).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy(BUCKET_COL).parquet(target_path)
         updated = int(read_obs.get["n"]) - int(keep_obs.get["n"])
-
-        # A whole-table rewrite forces a STATIC overwrite so an ambient
-        # dynamic mode (e.g. a caller running refresh folds
-        # concurrently) cannot leave the pre-upgrade files alongside
-        # the new __bucket=* dirs — reads would then return duplicated
-        # rows (ADVICE r12, medium). Otherwise a dynamic overwrite
-        # replaces only partitions present in `merged` (exactly the
-        # touched buckets). The writer option takes precedence over the
-        # session conf and is scoped to this write only, so it is
-        # thread-safe under the concurrent refresh folds.
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "static" if whole_table else "dynamic"
-        ).partitionBy(BUCKET_COL).parquet(target_path)
-        return (updated, n - updated, deduped)
+        return (updated, rows - updated, deduped)
     finally:
         batch.unpersist()
 
@@ -225,11 +309,13 @@ def purge_keys(
     target_path: str,
     keys: DataFrame,
     key: str = "data_id",
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int | None = None,
 ) -> int:
     """Right-to-be-forgotten delete: remove every row whose ``key``
     appears in ``keys`` from a bucketed table written by
-    :func:`upsert`. Returns the number of rows deleted.
+    :func:`upsert`. Returns the number of rows deleted. The keys hash
+    with the table's recorded count (:func:`bucket_count`; an
+    ``n_buckets`` that differs raises).
 
     Same touched-buckets-only contract as upsert: the deletion key set
     hashes to its buckets, ONLY those bucket partitions are read,
@@ -272,21 +358,20 @@ def purge_keys(
             rename(spark, tmp_swap, target_path)
         else:
             return 0
+    all_current = spark.read.parquet(target_path)
+    flat = BUCKET_COL not in all_current.columns
+    n = DEFAULT_N_BUCKETS if flat else bucket_count(spark, target_path, n_buckets)
     keyset = (
         keys.select(F.col(key).cast("string").alias(key))
         .distinct()
-        .withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"),
-        )
+        .withColumn(BUCKET_COL, _bucket_of(key, n))
         .persist()
     )
     try:
         touched = [r[BUCKET_COL] for r in keyset.select(BUCKET_COL).distinct().collect()]
         if not touched:
             return 0
-        all_current = spark.read.parquet(target_path)
-        if BUCKET_COL not in all_current.columns:
+        if flat:
             # legacy flat layout (pre-bucketing, same as upsert's
             # upgrade path): full-table anti-join rewrite once —
             # written to a durable temp dir then swapped (see the

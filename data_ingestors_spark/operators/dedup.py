@@ -1046,11 +1046,13 @@ def build_fingerprint_index(
     idempotent). For exactly-once counting under replay, use the
     batch-id-keyed streaming fold (streaming/neardup.py
     stream_incremental_dedup_fold), which overwrites its own batch
-    partition. Returns upsert's (updated, inserted, deduped)."""
+    partition. ``n_buckets`` sets a new index's bucket count (``None``
+    sizes it, as upsert does); an existing index hashes with its
+    recorded count, and an ``n_buckets`` that differs raises. Returns
+    upsert's (updated, inserted, deduped)."""
     from data_ingestors_spark.io.fs import path_exists
-    from data_ingestors_spark.io.writers import BUCKET_COL, DEFAULT_N_BUCKETS, upsert
+    from data_ingestors_spark.io.writers import BUCKET_COL, _bucket_of, bucket_count, upsert
 
-    n_buckets = n_buckets or DEFAULT_N_BUCKETS
     fps = docs.select(
         F.md5(normalize_text(F.col(text_col))).alias("fp_md5"),
         F.col(id_col).alias("first_doc_id"),
@@ -1068,15 +1070,9 @@ def build_fingerprint_index(
         # fold the already-indexed stats for fingerprints this batch
         # touches into the batch rows, reading ONLY the touched bucket
         # partitions (same O(batch) contract as the report itself)
+        n = bucket_count(spark, index_path, n_buckets)
         touched = [
-            r[0]
-            for r in idx.select(
-                F.pmod(F.xxhash64(F.col("fp_md5").cast("string")), F.lit(n_buckets))
-                .cast("int")
-                .alias(BUCKET_COL)
-            )
-            .distinct()
-            .collect()
+            r[0] for r in idx.select(_bucket_of("fp_md5", n)).distinct().collect()
         ]
         if touched:
             existing = (
@@ -1094,13 +1090,7 @@ def build_fingerprint_index(
                     F.max("max_nc").cast("long").alias("max_nc"),
                 )
             )
-    return upsert(
-        spark,
-        index_path,
-        idx,
-        key="fp_md5",
-        n_buckets=n_buckets,
-    )
+    return upsert(spark, index_path, idx, key="fp_md5", n_buckets=n_buckets)
 
 
 def incremental_dedup_report(
@@ -1131,11 +1121,11 @@ def incremental_dedup_report(
     Registry twin: queries/text_audits.py:q_incremental_dedup computes
     the identical report relationally (corpus = the unindexed split)
     and is DuckDB-oracle-paired; equality of the two paths is
-    asserted in tests."""
+    asserted in tests. The fingerprints hash with the index's recorded
+    bucket count; an ``n_buckets`` that differs raises."""
     from data_ingestors_spark.io.fs import path_exists
-    from data_ingestors_spark.io.writers import BUCKET_COL, DEFAULT_N_BUCKETS
+    from data_ingestors_spark.io.writers import BUCKET_COL, _bucket_of, bucket_count
 
-    n_buckets = n_buckets or DEFAULT_N_BUCKETS
     b = batch.select(
         F.col(id_col).alias("doc_id"),
         F.col(source_col).alias("source"),
@@ -1143,12 +1133,8 @@ def incremental_dedup_report(
         F.md5(normalize_text(F.col(text_col))).alias("fp_md5"),
     )
     if path_exists(spark, index_path):
-        buckets = b.select(
-            F.pmod(F.xxhash64(F.col("fp_md5")), F.lit(n_buckets))
-            .cast("int")
-            .alias(BUCKET_COL)
-        ).distinct()
-        touched = [r[0] for r in buckets.collect()]
+        n = bucket_count(spark, index_path, n_buckets)
+        touched = [r[0] for r in b.select(_bucket_of("fp_md5", n)).distinct().collect()]
         idx = (
             spark.read.parquet(index_path)
             .filter(F.col(BUCKET_COL).isin(touched))

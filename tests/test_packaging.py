@@ -560,3 +560,58 @@ def test_store_filesystem_lives_in_io_fs():
                     ):
                         hits.append(f"{rel}:{node.lineno}: {callee}")
     assert not hits, hits
+
+
+def test_bucket_hash_and_count_live_in_writers():
+    """A table's bucket hash has one home: ``io/writers._bucket_of``,
+    with the count the table records. Outside ``io/writers.py`` and
+    the batch-keyed ``streaming/`` stores, no module computes
+    ``pmod(xxhash64(...), n)`` as a table bucket (a modulus naming a
+    bucket count, or a module that names ``BUCKET_COL``; chunk and
+    salt hashes elsewhere are not table buckets); inside it only
+    ``_bucket_of`` does. ``upsert`` rewrites through the swap, never a
+    ``localCheckpoint``. AST only: no package module is imported."""
+    import ast
+
+    pkg_dir = os.path.join(REPO, "data_ingestors_spark")
+    writers = os.path.join(pkg_dir, "io", "writers.py")
+    streaming = os.path.join(pkg_dir, "streaming") + os.sep
+
+    def callee(node):
+        f = node.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    hits = []
+    for root, _dirs, names in os.walk(pkg_dir):
+        for name in sorted(names):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path.startswith(streaming):
+                continue
+            with open(path) as fh:
+                source = fh.read()
+            tree = ast.parse(source, path)
+            rel = os.path.relpath(path, REPO)
+            allowed = set()
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and path == writers:
+                    if fn.name == "_bucket_of":
+                        allowed |= {id(n) for n in ast.walk(fn)}
+                    if fn.name == "upsert":
+                        hits += [
+                            f"{rel}:{n.lineno}: localCheckpoint in upsert"
+                            for n in ast.walk(fn)
+                            if isinstance(n, ast.Attribute) and n.attr == "localCheckpoint"
+                        ]
+            for node in ast.walk(tree):
+                if not (
+                    isinstance(node, ast.Call)
+                    and callee(node) == "pmod"
+                    and node.args
+                    and isinstance(node.args[0], ast.Call)
+                    and callee(node.args[0]) == "xxhash64"
+                ) or id(node) in allowed:
+                    continue
+                modulus = ast.unparse(node.args[1]) if len(node.args) > 1 else ""
+                if path == writers or "bucket" in modulus.lower() or "BUCKET_COL" in source:
+                    hits.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
+    assert not hits, hits

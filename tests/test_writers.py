@@ -102,7 +102,8 @@ def test_upsert_whole_table_rewrites_immune_to_dynamic_mode(spark, tmp_path):
     refresh folds pre-r13, and a common cluster default) that write used
     to replace only the new __bucket=* partitions and leave the old flat
     parquet files at the table root — readers then returned duplicated
-    rows. The writes now force static mode per-write."""
+    rows. The whole-table rewrites now write a new table beside the
+    old one and swap it in, so no file of the old layout can survive."""
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     try:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -491,3 +492,177 @@ def test_tune_caps_table_listing_at_the_session_cores(spark, tmp_path):
     stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
     assert stages
     assert max(s.numTasks for s in stages) <= sc.defaultParallelism < 64
+
+
+def _recorded_buckets(spark, t):
+    """The table's recorded bucket count, after checking that every row
+    sits in ``pmod(xxhash64(key), count)``."""
+    from data_ingestors_spark.io.writers import bucket_count
+
+    n = bucket_count(spark, t)
+    stray = spark.read.parquet(t).filter(
+        F.col(BUCKET_COL) != F.pmod(F.xxhash64(F.col("data_id").cast("string")), F.lit(n))
+    )
+    assert stray.count() == 0
+    return n
+
+
+def test_new_table_records_a_count_sized_to_its_data(spark, tmp_path):
+    """A new table gets the fewest buckets that hold it in read splits
+    (one, for a small batch), recorded inside the table where Spark's
+    reader does not see it; an explicit ``n_buckets`` is recorded as
+    given. A frame whose size Spark cannot estimate (one made from a
+    Python list) gets 64, as every table did before counts were
+    recorded."""
+    df = spark.range(200).selectExpr("concat('k', id) AS data_id", "id AS v")
+    t = str(tmp_path / "sized")
+    upsert(spark, t, df)
+    assert _recorded_buckets(spark, t) == 1
+    assert len(bucket_files(t)) == 1
+    listed = str(tmp_path / "listed")
+    upsert(spark, listed, spark.createDataFrame([(f"k{i}", i) for i in range(200)], ["data_id", "v"]))
+    assert _recorded_buckets(spark, listed) == 64
+    assert os.path.exists(os.path.join(t, "_buckets.json"))
+    assert read_table(spark, t).columns == ["data_id", "v"]
+    t8 = str(tmp_path / "eight")
+    upsert(spark, t8, df, n_buckets=8)
+    assert _recorded_buckets(spark, t8) == 8
+    with pytest.raises(ValueError, match="has 8 buckets"):
+        upsert(spark, t8, df, n_buckets=4)
+
+
+def test_merge_hashes_with_the_recorded_bucket_count(spark, tmp_path):
+    """A merge that does not name the count uses the table's: 200 keys
+    stay 200 rows (a caller's default count used to hash 50 updates
+    into the wrong buckets and store them a second time)."""
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame([(f"k{i}", i) for i in range(200)], ["data_id", "v"])
+    upsert(spark, t, df, n_buckets=8)
+    assert upsert(spark, t, df.orderBy("data_id").limit(50)) == (50, 0, 0)
+    rows = read_table(spark, t)
+    assert rows.count() == 200 and rows.select("data_id").distinct().count() == 200
+    assert _recorded_buckets(spark, t) == 8
+
+
+def test_purge_keys_hashes_with_the_recorded_bucket_count(spark, tmp_path):
+    """A purge that does not name the count uses the table's: all 20
+    victims go (a caller's default count used to find 5 of them)."""
+    from data_ingestors_spark.io.writers import purge_keys
+
+    t = str(tmp_path / "t")
+    upsert(spark, t, spark.createDataFrame([(f"k{i}", i) for i in range(200)], ["data_id", "v"]), n_buckets=8)
+    victims = spark.createDataFrame([(f"k{i}",) for i in range(0, 200, 10)], ["data_id"])
+    assert purge_keys(spark, t, victims) == 20
+    assert {r.data_id for r in read_table(spark, t).collect()} == {
+        f"k{i}" for i in range(200) if i % 10
+    }
+    with pytest.raises(ValueError, match="has 8 buckets"):
+        purge_keys(spark, t, victims, n_buckets=64)
+
+
+def test_unrecorded_64_bucket_table_merges_purges_and_compacts(spark, tmp_path):
+    """A table written before counts were recorded (64 buckets, no
+    ``_buckets.json``) reads as 64: it merges in place, purges and
+    compacts as before, and gains no recorded count."""
+    from data_ingestors_spark.io.writers import compact_table, purge_keys
+
+    t = str(tmp_path / "t")
+    base = [(f"k{i}", i) for i in range(300)]
+    spark.createDataFrame(base, ["data_id", "v"]).withColumn(
+        BUCKET_COL, F.pmod(F.xxhash64(F.col("data_id")), F.lit(64)).cast("int")
+    ).repartition(2).write.partitionBy(BUCKET_COL).parquet(t)
+    batch = [(f"k{i}", 1000 + i) for i in range(290, 310)]
+    assert upsert(spark, t, spark.createDataFrame(batch, ["data_id", "v"])) == (10, 10, 0)
+    assert not os.path.exists(os.path.join(t, "_buckets.json"))
+    assert _recorded_buckets(spark, t) == 64
+    victims = spark.createDataFrame([("k0",), ("k1",), ("k305",)], ["data_id"])
+    assert purge_keys(spark, t, victims) == 3
+    assert compact_table(spark, t)["buckets"] > 0
+    want = {**dict(base), **dict(batch)}
+    for k in ("k0", "k1", "k305"):
+        del want[k]
+    assert {r.data_id: r.v for r in read_table(spark, t).collect()} == want
+    assert _recorded_buckets(spark, t) == 64
+
+
+def test_swap_siblings_of_a_relative_path_are_relative():
+    """A table at a relative path (resolved against the working
+    directory, as Spark resolves it) is swapped beside itself, not at
+    the filesystem root."""
+    from data_ingestors_spark.io.fs import swap_paths
+
+    assert swap_paths("t") == (".t.swap_tmp", ".t.swap_old")
+    assert swap_paths("d/t/") == ("d/.t.swap_tmp", "d/.t.swap_old")
+    assert swap_paths("/t") == ("/.t.swap_tmp", "/.t.swap_old")
+
+
+@pytest.fixture
+def small_splits(spark):
+    """Read splits of 512 bytes, so a table of a few KB outgrows a
+    small bucket count."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    yield
+    spark.conf.set(key, prev)
+
+
+def test_merge_touching_every_bucket_grows_the_table(spark, tmp_path, small_splits):
+    """A merge whose batch touches every bucket of a table that has
+    outgrown its count re-hashes every row into a larger power of two
+    and records it; rows and counts match the plain-Python MERGE."""
+    t = str(tmp_path / "t")
+    cols = ["data_id", "v"]
+    base = [(f"k{i}", i) for i in range(400)]
+    upsert(spark, t, spark.createDataFrame(base, cols), n_buckets=2)
+    batch = [(f"k{i}", 100 + i) for i in range(380, 420)] + [("k381", 7), ("k415", 8)]
+    expected, after = _reference_upsert({r[0]: r for r in base}, batch)
+    assert upsert(spark, t, spark.createDataFrame(batch, "data_id string, v long")) == expected
+    n = _recorded_buckets(spark, t)
+    assert n > 2 and n & (n - 1) == 0
+    assert _table_rows(spark, t, cols) == after
+    # a merge that touches only some of the grown buckets stays in place
+    before = bucket_files(t)
+    assert upsert(spark, t, spark.createDataFrame([("k1", -1)], cols)) == (1, 0, 0)
+    assert _recorded_buckets(spark, t) == n
+    assert sum(before[d] != bucket_files(t).get(d) for d in before) == 1
+
+
+@pytest.mark.parametrize("crash_into", ["old", "live"])
+def test_growth_swap_crash_leaves_old_or_new_table(spark, tmp_path, monkeypatch, small_splits, crash_into):
+    """A crash inside the whole-table swap of a growing merge leaves the
+    old rows with the old count (``io.fs.recover``) or, once the merge
+    is re-run, the new rows with the new count — never a mix. The
+    re-run repairs a table crashed between the renames by itself: it
+    must not take the hidden table for absent and write a new one."""
+    from data_ingestors_spark.io import fs
+
+    t = str(tmp_path / "t")
+    cols = ["data_id", "v"]
+    base = [(f"k{i}", i) for i in range(400)]
+    upsert(spark, t, spark.createDataFrame(base, cols), n_buckets=2)
+    batch = spark.createDataFrame([(f"k{i}", -i) for i in range(390, 410)], cols)
+    crash_dst = t if crash_into == "live" else fs.swap_paths(t)[1]
+    real_rename = fs.rename
+
+    def crash(on, src, dst):
+        if dst == crash_dst:
+            raise OSError("simulated crash inside the table swap")
+        real_rename(on, src, dst)
+
+    monkeypatch.setattr(fs, "rename", crash)
+    with pytest.raises(OSError):
+        upsert(spark, t, batch)
+    monkeypatch.setattr(fs, "rename", real_rename)
+    assert os.path.exists(t) == (crash_into == "old")
+
+    if crash_into == "old":
+        fs.recover(spark, t)
+        assert _recorded_buckets(spark, t) == 2
+        assert _table_rows(spark, t, cols) == {r[0]: r for r in base}
+
+    assert upsert(spark, t, batch) == (10, 10, 0)
+    assert _recorded_buckets(spark, t) > 2
+    want = {**{r[0]: r for r in base}, **{f"k{i}": (f"k{i}", -i) for i in range(390, 410)}}
+    assert _table_rows(spark, t, cols) == want
+    assert not [n for n in os.listdir(tmp_path) if n.startswith(".t.swap")]
