@@ -19,6 +19,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingestors_spark.functions.rounding import fround
+from data_ingestors_spark.operators.pairs import (
+    candidate_pairs,
+    jaccard_verify,
+    minhash_bands,
+    pair_payload,
+)
 
 # --- exact -------------------------------------------------------------
 
@@ -160,7 +166,6 @@ def minhash_near_duplicates(
     sets so the output has no false positives (recall is the usual LSH
     probability 1-(1-t^r)^b).
     """
-    r = num_hashes // bands
     # Two small cached frames: shingles (reused by exact verify) and
     # signatures (reused by band join + estimate prune). The persist
     # boundary on shingled is load-bearing — see _minhash_sig_expr —
@@ -171,71 +176,24 @@ def minhash_near_duplicates(
         shingled.select("doc_id", _minhash_sig_expr(num_hashes).alias("signature"))
     )
 
-    # Stage 1 — candidate ids from the band join. The join payload is
-    # (band, bucket, id) ONLY: at 100 TB you never shuffle shingle
-    # arrays through an LSH self-join; pairs are two longs.
-    band_rows = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        # hash the r ints directly — no string round-trip
-                        F.hash(
-                            *[F.col("signature")[b * r + j] for j in range(r)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    right = band_rows.select(
-        F.col("band").alias("band_r"),
-        F.col("bucket").alias("bucket_r"),
-        F.col("doc_id").alias("id_b"),
-    )
-    cand = (
-        band_rows.join(
-            right,
-            (F.col("band") == F.col("band_r"))
-            & (F.col("bucket") == F.col("bucket_r"))
-            & (F.col("doc_id") < F.col("id_b")),
-        )
-        .select(F.col("doc_id").alias("id_a"), "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # Stage 1 — candidate ids from the band join.
+    cand = candidate_pairs(minhash_bands(sigs, num_hashes, bands), ["band", "bucket"], "doc_id")
 
     # Stage 2 — cheap signature-based Jaccard estimate (fraction of
     # equal minhash components) prunes the band join's false positives
     # before any shingle array moves.
-    sig_only = sigs
     est_eq = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda b: b)
+        F.filter(F.zip_with("signature_a", "signature_b", lambda x, y: x == y), lambda b: b)
     ) / F.lit(float(num_hashes))
     est = (
-        cand.join(sig_only.select(F.col("doc_id").alias("id_a"), F.col("signature").alias("sig_a")), "id_a")
-        .join(sig_only.select(F.col("doc_id").alias("id_b"), F.col("signature").alias("sig_b")), "id_b")
+        pair_payload(cand, sigs, "doc_id", "signature")
         .withColumn("est_j", est_eq)
         .filter(F.col("est_j") >= threshold - 0.2)
         .select("id_a", "id_b")
     )
 
     # Stage 3 — exact verification on the survivors only.
-    sh_only = shingled
-    pairs = est.join(
-        sh_only.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a"
-    ).join(
-        sh_only.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        pairs.select("id_a", "id_b", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", fround(F.col("jaccard"), 6).alias("jaccard"))
-    )
+    return jaccard_verify(pair_payload(est, shingled, "doc_id", "shingles"), threshold)
 
 
 # --- SimHash ------------------------------------------------------------
@@ -287,9 +245,15 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFr
 def simhash_near_duplicates(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64 bits into 4×16-bit keys
-    (pigeonhole: hamming ≤3 ⇒ at least one identical band), bucket-join,
-    verify exact Hamming distance."""
+    """Near-dup pairs by SimHash: band the 64 bits into ``max_hamming + 1``
+    disjoint keys of ``64 // (max_hamming + 1)`` bits (pigeonhole: hamming
+    ≤ max_hamming ⇒ at least one identical band), bucket-join, verify
+    exact Hamming distance."""
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
+    n_bands = max_hamming + 1
+    width = 64 // n_bands
+    mask = (1 << width) - 1 if width < 64 else -1
     # eager persist: the self-join would otherwise evaluate the per-doc
     # simhash HOF chain twice (once per side) or race the cache.
     sh = _materialize(simhash(df, text_col, id_col))
@@ -301,15 +265,16 @@ def simhash_near_duplicates(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), b * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
+                        F.shiftrightunsigned(F.col("simhash"), b * width)
+                        .bitwiseAND(F.lit(mask))
                         .alias("key"),
                     )
-                    for b in range(4)
+                    for b in range(n_bands)
                 ]
             )
         ).alias("bb"),
     ).select("doc_id", "simhash", "bb.band", "bb.key")
+    # not candidate_pairs: the simhash rides in the join, so no verify join
     right = bands.select(
         F.col("band").alias("band_r"),
         F.col("key").alias("key_r"),
@@ -553,21 +518,7 @@ def _jaccard_pairs_index(
             "doc_id", "block", "sz",
             F.posexplode(F.slice(F.col("ids"), F.lit(1), plen)).alias("pos", "w"),
         )
-        a, b = prefix.alias("a"), prefix.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.block") == F.col("b.block"))
-                & (F.col("a.w") == F.col("b.w"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & sz_filter
-                & pos_filter,
-            )
-            .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-            .distinct()
-        )
-        wa = docs.select(F.col("doc_id").alias("id_a"), F.col("ids").alias("wa"))
-        wb = docs.select(F.col("doc_id").alias("id_b"), F.col("ids").alias("wb"))
+        sets = docs.select("doc_id", F.col("ids").alias("words"))
     else:
         sets = _materialize(sets)
         plen = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
@@ -578,30 +529,12 @@ def _jaccard_pairs_index(
             .filter(F.col("pos") < plen)
             .select("doc_id", "block", "sz", "pos", "w")
         )
-        a, b = prefix.alias("a"), prefix.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.block") == F.col("b.block"))
-                & (F.col("a.w") == F.col("b.w"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & sz_filter
-                & pos_filter,
-            )
-            .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-            .distinct()
-        )
-        wa = sets.select(F.col("doc_id").alias("id_a"), F.col("words").alias("wa"))
-        wb = sets.select(F.col("doc_id").alias("id_b"), F.col("words").alias("wb"))
 
-    inter = F.size(F.array_intersect("wa", "wb")).cast("double")
-    j = (
-        cand.join(wa, "id_a")
-        .join(wb, "id_b")
-        .withColumn(
-            "jaccard",
-            inter / (F.size("wa") + F.size("wb") - inter).cast("double"),
-        )
+    cand = candidate_pairs(prefix, ["block", "w"], "doc_id", where=sz_filter & pos_filter)
+    inter = F.size(F.array_intersect("words_a", "words_b")).cast("double")
+    j = pair_payload(cand, sets, "doc_id", "words").withColumn(
+        "jaccard",
+        inter / (F.size("words_a") + F.size("words_b") - inter).cast("double"),
     )
     return (
         j.filter(F.col("jaccard") >= threshold)
@@ -675,6 +608,7 @@ def _jaccard_pairs_bitmask(
         F.col("sz").alias("sz_b"),
         *[F.col(f"mask{k}").alias(f"mb{k}") for k in range(nw)],
     )
+    # not candidate_pairs: a block-only join, the masks ride in it
     pairs = a.join(b, (F.col("block") == F.col("block_b")) & (F.col("id_a") < F.col("id_b")))
     inter = sum(
         F.bit_count(F.col(f"ma{k}").bitwiseAND(F.col(f"mb{k}"))) for k in range(nw)
@@ -789,6 +723,8 @@ def prefix_filter_pairs(
             )
             .select("doc_id", "sz", *mask_cols, F.col("pfx"))
         ).select("doc_id", "sz", *[f"mask{k}" for k in range(nw)], F.explode("pfx").alias("w"))
+        # not candidate_pairs: the masks ride in the join, and a row-local
+        # min-common-token dedup replaces the distinct
         a, b = docs.alias("a"), docs.alias("b")
         joined = a.join(
             b,
@@ -836,24 +772,10 @@ def prefix_filter_pairs(
     pos_w = Window.partitionBy("doc_id").orderBy("df", "w")
     ordered = tok.join(dft, "w").withColumn("pos", F.row_number().over(pos_w))
     prefix = ordered.filter(F.col("pos") <= plen).select("doc_id", "sz", "w")
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & sz_filter,
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    wa = sets.select(F.col("doc_id").alias("id_a"), F.col("words").alias("wa"))
-    wb = sets.select(F.col("doc_id").alias("id_b"), F.col("words").alias("wb"))
-    inter = F.size(F.array_intersect("wa", "wb")).cast("double")
-    j = (
-        cand.join(wa, "id_a")
-        .join(wb, "id_b")
-        .withColumn("jaccard", inter / (F.size("wa") + F.size("wb") - inter))
+    cand = candidate_pairs(prefix, ["w"], "doc_id", where=sz_filter)
+    inter = F.size(F.array_intersect("words_a", "words_b")).cast("double")
+    j = pair_payload(cand, sets, "doc_id", "words").withColumn(
+        "jaccard", inter / (F.size("words_a") + F.size("words_b") - inter)
     )
     return (
         j.filter(F.col("jaccard") >= threshold)

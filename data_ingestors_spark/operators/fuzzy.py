@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_ingestors_spark.operators.pairs import candidate_pairs, pair_payload
+
 #: Default document-frequency cap on blocking keys. A key shared by df
 #: rows generates df² candidate pairs, so an uncapped degenerate key —
 #: the empty string from 1-char values, or a value duplicated millions
@@ -101,22 +103,10 @@ def fastss_pairs(
         hot = keyed.groupBy("_fkey").count().filter(F.col("count") > max_key_df)
         keyed = keyed.join(F.broadcast(hot.select("_fkey")), "_fkey", "left_anti")
 
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    cands = (
-        a.join(b, F.col("a._fkey") == F.col("b._fkey"))
-        .filter(F.col("a._fid") < F.col("b._fid"))
-        .select(F.col("a._fid").alias("id_a"), F.col("b._fid").alias("id_b"))
-        .distinct()
-    )
-
-    names = df.select(F.col(id_col).alias("_nid"), F.col(col).alias("_nval"))
+    cands = candidate_pairs(keyed, ["_fkey"], "_fid")
     verified = (
-        cands.join(names.withColumnRenamed("_nid", "id_a"), "id_a")
-        .withColumnRenamed("_nval", "_val_a")
-        .join(names.withColumnRenamed("_nid", "id_b"), "id_b")
-        .withColumnRenamed("_nval", "_val_b")
-        .withColumn("dist", F.levenshtein("_val_a", "_val_b"))
+        pair_payload(cands, df, id_col, col)
+        .withColumn("dist", F.levenshtein(f"{col}_a", f"{col}_b"))
         .filter(F.col("dist") == 1)
     )
     return verified.select("id_a", "id_b", "dist")

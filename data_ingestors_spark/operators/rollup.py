@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestors_spark.io.fs import path_exists, recover
+from data_ingestors_spark.io.fs import ls, path_exists, recover, resolve
 from data_ingestors_spark.streaming.batches import (
     BATCH_PART_COL,
     compact_batches,
@@ -195,8 +195,19 @@ def compact_rollup(
     A merged-bucket store (rollup_upsert) has no layers and is left
     as it is. Offline maintenance: run while no refresh is active (the
     same single-writer discipline as writers.upsert's table lock)."""
-    recover(spark, store_path)  # the layout check reads the store
-    if BATCH_PART_COL not in spark.read.parquet(store_path).columns:
+    fs = resolve(spark, store_path)
+    recover(fs, store_path)  # the layout check lists the store
+    if not path_exists(fs, store_path):
+        return
+    # both layouts hold __bucket= directories; only the partials layout
+    # has __batch= directories inside them (hidden swap entries skipped)
+    buckets = [
+        n for n, is_dir, _ in ls(fs, store_path) if is_dir and n.startswith(f"{BUCKET_PART_COL}=")
+    ]
+    if not buckets or not any(
+        is_dir and n.startswith(f"{BATCH_PART_COL}=")
+        for n, is_dir, _ in ls(fs, f"{store_path}/{buckets[0]}")
+    ):
         return
     compact_batches(
         spark,

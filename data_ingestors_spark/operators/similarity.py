@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from data_ingestors_spark.functions.rounding import fround
 from data_ingestors_spark.operators.layout import spread
+from data_ingestors_spark.operators.pairs import candidate_pairs, pair_payload
 
 #: Within-block pair count past which ``blocked_cosine_pairs``
 #: strategy="auto" swaps the plain chunked grid for the (equally
@@ -720,28 +721,10 @@ def _lsh_cosine_pairs(
     sk = base.select(
         "block", "pid", F.posexplode(sketch(F.col("vec"))).alias("tbl", "bucket")
     )
-    cand = (
-        sk.join(
-            sk.select(
-                F.col("block").alias("block_r"),
-                F.col("pid").alias("id_b"),
-                F.col("tbl").alias("tbl_r"),
-                F.col("bucket").alias("bucket_r"),
-            ),
-            (F.col("block") == F.col("block_r"))
-            & (F.col("tbl") == F.col("tbl_r"))
-            & (F.col("bucket") == F.col("bucket_r"))
-            & (F.col("pid") < F.col("id_b")),
-        )
-        .select(F.col("pid").alias("id_a"), "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = base.select(F.col("pid").alias("id_a"), F.col("vec").alias("v_a"))
-    vb = base.select(F.col("pid").alias("id_b"), F.col("vec").alias("v_b"))
-    sim = _pair_cosine_udf()(F.col("v_a"), F.col("v_b"))
+    cand = candidate_pairs(sk, ["block", "tbl", "bucket"], "pid")
+    sim = _pair_cosine_udf()(F.col("vec_a"), F.col("vec_b"))
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
+        pair_payload(cand, base, "pid", "vec")
         .select("id_a", "id_b", sim.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )

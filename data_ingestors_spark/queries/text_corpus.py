@@ -23,6 +23,7 @@ from data_ingestors_spark.operators import dedup as D
 from data_ingestors_spark.operators import similarity as S
 from data_ingestors_spark.operators import text as X
 from data_ingestors_spark.operators.layout import spread
+from data_ingestors_spark.operators.pairs import candidate_pairs
 from data_ingestors_spark.functions.rounding import fround, o_fround
 from data_ingestors_spark.queries.base import DEC, tables
 from data_ingestors_spark.queries.text_llm import (
@@ -1281,13 +1282,7 @@ def q_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("v"))
     )
     keys = cust.select("id", F.explode(_deletion_keys("v")).alias("k"))
-    cands = D._materialize(
-        keys.alias("a")
-        .join(keys.alias("b"), F.col("a.k") == F.col("b.k"))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cands = D._materialize(candidate_pairs(keys, ["k"], "id"))
     # r12-opt (guide §2.5 input skew): the ≤1500-row sample collapses
     # to ONE scan partition, so the deliberately-quadratic ~1.1M-pair
     # levenshtein nested-loop ran on a single core (measured 8-9.5 s;

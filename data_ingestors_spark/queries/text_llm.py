@@ -652,6 +652,7 @@ def q_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = fps.join(F.broadcast(hot), "fp", "left_anti")
     src = docs.select("doc_id", "source")
     fps = fps.join(src, "doc_id")
+    # not candidate_pairs: the pairs count their shared keys, not distinct
     right = fps.select(
         F.col("doc_id").alias("id_b"), F.col("fp").alias("fp_r"), F.col("source").alias("src_r")
     )

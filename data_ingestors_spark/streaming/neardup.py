@@ -9,8 +9,9 @@ Per micro-batch:
 1. shingle + MinHash the batch (the same JVM-side expressions as the
    batch operator — one persisted shingle frame per batch);
 2. candidate pairs = batch band rows equi-joined against the
-   ACCUMULATED band index (old ∪ this batch) on (band, bucket) — the
-   index holds (doc_id, band, bucket) longs only, never text;
+   ACCUMULATED band index (old ∪ this batch) on (band, bucket), the
+   probe form of operators/pairs.candidate_pairs — the index holds
+   (doc_id, band, bucket) longs only, never text;
 3. exact-Jaccard verify against the accumulated shingle store;
 4. append this batch's bands/shingles to the index and its verified
    pairs to the output — all three are batch-keyed stores
@@ -18,13 +19,15 @@ Per micro-batch:
    partitions with identical content.
 
 Coverage argument: a pair (a, b) is checked exactly when the LATER of
-the two arrives (or both in one batch, guarded by id order), so after
-any prefix of batches the emitted pair set equals the batch operator's
-output over the union of those batches — asserted in tests.
+the two arrives (or both in one batch: the ``!=`` guard finds it from
+both sides, and ``least``/``greatest`` plus a distinct keep it once), so
+after any prefix of batches the emitted pair set equals the batch
+operator's output over the union of those batches — asserted in tests.
 
-At scale the per-batch cost is |batch| x bands index probes (an
-equi-join against a bucket-partitioned store) plus verification of
-collisions only; the stream never joins old-vs-old again.
+The per-batch cost is |batch| x bands index probes plus verification
+of collisions only; the stream never joins old-vs-old again. The index
+and shingle stores are partitioned by ``__batch`` only, so each probe
+still reads every prior layer of both, not just the touched buckets.
 """
 
 from __future__ import annotations
@@ -34,6 +37,12 @@ from functools import partial
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_ingestors_spark.operators.pairs import (
+    candidate_pairs,
+    jaccard_verify,
+    minhash_bands,
+    pair_payload,
+)
 from data_ingestors_spark.streaming.batches import (
     BATCH_PART_COL,
     compact_batches,
@@ -64,7 +73,6 @@ def _batch_index_frames(
         shingle_docs,
     )
 
-    r = num_hashes // bands
     # Both frames need a persist() CACHE BOUNDARY in the plan (the
     # InMemoryRelation is what stops CollapseProject re-inlining the
     # shingle regex into every seed's array_min, and the 32-way
@@ -79,22 +87,7 @@ def _batch_index_frames(
     sigs = _materialize(
         shingled.select("doc_id", _minhash_sig_expr(num_hashes).alias("signature"))
     )
-    band_rows = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(*[F.col("signature")[b * r + j] for j in range(r)]).alias(
-                            "bucket"
-                        ),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    band_rows = minhash_bands(sigs, num_hashes, bands)
     return band_rows, shingled.select("doc_id", "shingles"), [shingled, sigs]
 
 
@@ -114,7 +107,6 @@ def neardup_fold_batch(
 ) -> None:
     """Fold one batch into the near-dup index and emit its pairs.
     Idempotent by batch id (dynamic overwrite of own partitions)."""
-    from data_ingestors_spark.functions.rounding import fround
     from data_ingestors_spark.io.fs import path_exists
 
     bands_dir = f"{index_path}/bands"
@@ -140,35 +132,8 @@ def neardup_fold_batch(
         all_bands = new_bands.unionByName(old_bands)
         all_sh = new_sh.unionByName(old_sh)
 
-    other = all_bands.select(
-        F.col("band").alias("band_r"),
-        F.col("bucket").alias("bucket_r"),
-        F.col("doc_id").alias("id_o"),
-    )
-    cand = (
-        new_bands.join(
-            other,
-            (F.col("band") == F.col("band_r"))
-            & (F.col("bucket") == F.col("bucket_r"))
-            & (F.col("doc_id") != F.col("id_o")),
-        )
-        .select(
-            F.least("doc_id", "id_o").alias("id_a"),
-            F.greatest("doc_id", "id_o").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    pairs = (
-        cand.join(all_sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
-        .join(all_sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    verified = (
-        pairs.select("id_a", "id_b", (inter / union).alias("j"))
-        .filter(F.col("j") >= threshold)
-        .select("id_a", "id_b", fround(F.col("j"), 6).alias("jaccard"))
-    )
+    cand = candidate_pairs(all_bands, ["band", "bucket"], "doc_id", probe=new_bands)
+    verified = jaccard_verify(pair_payload(cand, all_sh, "doc_id", "shingles"), threshold)
 
     # The three writes land on DISTINCT paths and each reads only the
     # persisted shingle/signature caches (plus prior-batch parquet), so
@@ -399,7 +364,7 @@ def embedding_neardup_fold_batch(
     there, run the batch chunked-grid scan over the union instead.
 
     Coverage: a pair is checked when its LATER element arrives (or
-    both in one batch, deduplicated by id order) against the SAME
+    both in one batch, found from both sides and kept once) against the SAME
     (tbl, bucket) collision predicate and the same exact verify as
     ``operators/similarity._lsh_cosine_pairs`` — so after any prefix
     of batches the emitted set equals the batch operator over the
@@ -450,33 +415,10 @@ def embedding_neardup_fold_batch(
         all_sk = new_sk.unionByName(old_sk)
         all_vec = new_vec.unionByName(old_vec)
 
-    cand = (
-        new_sk.join(
-            all_sk.select(
-                F.col("tbl").alias("tbl_r"),
-                F.col("bucket").alias("bucket_r"),
-                F.col("vec_id").alias("id_o"),
-            ),
-            (F.col("tbl") == F.col("tbl_r"))
-            & (F.col("bucket") == F.col("bucket_r"))
-            & (F.col("vec_id") != F.col("id_o")),
-        )
-        .select(
-            F.least("vec_id", "id_o").alias("id_a"),
-            F.greatest("vec_id", "id_o").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sim = _pair_cosine_udf()(F.col("v_a"), F.col("v_b"))
+    cand = candidate_pairs(all_sk, ["tbl", "bucket"], "vec_id", probe=new_sk)
+    sim = _pair_cosine_udf()(F.col("vec_a"), F.col("vec_b"))
     verified = (
-        cand.join(
-            all_vec.select(F.col("vec_id").alias("id_a"), F.col("vec").alias("v_a")),
-            "id_a",
-        )
-        .join(
-            all_vec.select(F.col("vec_id").alias("id_b"), F.col("vec").alias("v_b")),
-            "id_b",
-        )
+        pair_payload(cand, all_vec, "vec_id", "vec")
         .select("id_a", "id_b", sim.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )

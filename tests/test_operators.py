@@ -142,6 +142,67 @@ def test_simhash_stable_and_neardup(spark):
     assert (1, 2) in got
 
 
+@pytest.mark.parametrize("max_hamming", [3, 6, 10])
+def test_simhash_near_duplicates_matches_brute_force_hamming(spark, max_hamming):
+    """Every pair within ``max_hamming`` bits of ``simhash()``'s own
+    values comes out, each with its distance, and nothing else: the
+    banding stays lossless past 3 differing bits (4 fixed 16-bit bands
+    only guarantee a shared band up to 3)."""
+    import random
+
+    rng = random.Random(7)
+    base = [f"w{rng.randrange(60)}" for _ in range(30)]
+    rows = []
+    for i in range(40):
+        words = list(base)
+        for _ in range(rng.randrange(1, 5)):
+            words[rng.randrange(30)] = f"x{rng.randrange(1000)}"
+        rows.append((i, " ".join(words)))
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    sims = sorted((r.doc_id, r.simhash) for r in simhash(df, "text", "doc_id").collect())
+    want = {
+        (a, b): bin((ha ^ hb) & (2**64 - 1)).count("1")
+        for i, (a, ha) in enumerate(sims)
+        for b, hb in sims[i + 1:]
+    }
+    want = {p: d for p, d in want.items() if d <= max_hamming}
+    pairs = simhash_near_duplicates(df, "text", "doc_id", max_hamming=max_hamming)
+    assert {(r.id_a, r.id_b): r.hamming for r in pairs.collect()} == want
+    with pytest.raises(ValueError):
+        simhash_near_duplicates(df, "text", "doc_id", max_hamming=64)
+
+
+def test_candidate_pairs_self_join_and_probe_forms(spark):
+    """Each true pair comes out exactly once as id_a < id_b, however
+    many keys it shares and from whichever side the probe finds it;
+    a null id or a null key never pairs."""
+    from data_ingestors_spark.operators.pairs import candidate_pairs
+
+    rows = spark.createDataFrame(
+        [
+            (1, "x"), (2, "x"), (3, "x"), (None, "x"),  # null id
+            (1, "z"), (2, "z"),                          # (1, 2) shares two keys
+            (4, None), (5, None),                        # null keys
+            (6, "y"), (7, "y"),
+        ],
+        "id long, k string",
+    )
+
+    def got(df):
+        out = [(r.id_a, r.id_b) for r in df.collect()]
+        assert len(out) == len(set(out)), out
+        return sorted(out)
+
+    assert got(candidate_pairs(rows, ["k"], "id")) == [(1, 2), (1, 3), (2, 3), (6, 7)]
+    assert got(candidate_pairs(rows, ["k"], "id", where=F.col("a.k") != "y")) == [
+        (1, 2), (1, 3), (2, 3),
+    ]
+    probe = rows.filter("id IN (2, 5, 7) OR id IS NULL")
+    assert got(candidate_pairs(rows, ["k"], "id", probe=probe)) == [(1, 2), (2, 3), (6, 7)]
+    both_sides = rows.filter("id IN (1, 2)")  # (1, 2) is found from 1 and from 2
+    assert got(candidate_pairs(rows, ["k"], "id", probe=both_sides)) == [(1, 2), (1, 3), (2, 3)]
+
+
 def test_ngram_jaccard_blocked(spark):
     df = spark.createDataFrame(
         [(1, "a b c d", "x"), (2, "a b c e", "x"), (3, "a b c d", "y")],
@@ -1339,6 +1400,28 @@ def test_compact_rollup_immune_to_dynamic_overwrite_mode(spark, tmp_path):
         assert after == before
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+def test_compact_rollup_on_a_merged_store_runs_no_spark_job(spark, tmp_path):
+    """A merged-bucket store (rollup_upsert) has no per-batch layers, and
+    compact_rollup tells so from a listing: no Spark job runs."""
+    from data_ingestors_spark.operators.rollup import compact_rollup, rollup_upsert
+
+    rows = [(i, dt.datetime(2024, 1, 1, i % 3), 1, "view", float(i), "{}") for i in range(6)]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    )
+    store = str(tmp_path / "r")
+    rollup_upsert(spark, df, store)
+    sc = spark.sparkContext
+    group = f"compact_rollup_merged_{id(store)}"
+    sc.setJobGroup(group, group)
+    try:
+        compact_rollup(spark, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    compact_rollup(spark, str(tmp_path / "absent"))  # no store: nothing to do
 
 
 def test_compact_rollup_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch):

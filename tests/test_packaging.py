@@ -615,3 +615,132 @@ def test_bucket_hash_and_count_live_in_writers():
                 if path == writers or "bucket" in modulus.lower() or "BUCKET_COL" in source:
                     hits.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
     assert not hits, hits
+
+
+#: Bucket self-joins that keep their own join, by function, and why.
+OWN_CANDIDATE_JOINS = {
+    "simhash_near_duplicates": "the simhash rides in the join; there is no verify join",
+    "prefix_filter_pairs": "mask branch: the masks ride in the join and a row-local "
+    "min-common-token dedup replaces the distinct",
+    "_jaccard_pairs_bitmask": "a block-only join with the masks in it",
+    "q_winnowing_overlap": "it counts the keys each pair shares, not distinct pairs",
+}
+
+#: The functions whose candidate join is ``operators/pairs.candidate_pairs``.
+ROUTED_CANDIDATE_JOINS = {
+    "minhash_near_duplicates", "_jaccard_pairs_index", "prefix_filter_pairs",
+    "fastss_pairs", "_lsh_cosine_pairs", "q_blocking_audit",
+    "neardup_fold_batch", "embedding_neardup_fold_batch",
+}
+
+
+def _own_candidate_joins(fn, modules) -> list[int]:
+    """Lines in ``fn`` where a method chain joins a frame against a copy
+    of itself under an id ``<``/``>``/``!=`` guard (in the join
+    condition or a filter after it) and then ``distinct``s or
+    ``dropDuplicates``es the result. A frame's roots are the names it is
+    assigned from, followed through wrapper calls (``F.broadcast(x)``,
+    ``_materialize(x)``) and method calls on frames."""
+    import ast
+
+    assigns: dict[str, list] = {}
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Assign):
+            for tgt in node.targets:
+                if isinstance(tgt, ast.Name):
+                    assigns.setdefault(tgt.id, []).append(node.value)
+                elif isinstance(tgt, ast.Tuple) and isinstance(node.value, ast.Tuple):
+                    for t, v in zip(tgt.elts, node.value.elts):
+                        if isinstance(t, ast.Name):
+                            assigns.setdefault(t.id, []).append(v)
+
+    def roots(expr, seen=frozenset()) -> set[str]:
+        if isinstance(expr, ast.Call):
+            f = expr.func
+            if isinstance(f, ast.Attribute) and not (
+                isinstance(f.value, ast.Name) and f.value.id in modules
+            ):
+                return roots(f.value, seen)
+            return roots(expr.args[0], seen) if expr.args else set()
+        if isinstance(expr, ast.Attribute):
+            return roots(expr.value, seen)
+        if not isinstance(expr, ast.Name) or expr.id in seen or expr.id in modules:
+            return set()
+        out = {expr.id}
+        for value in assigns.get(expr.id, []):
+            out |= roots(value, seen | {expr.id})
+        return out
+
+    def id_guard(nodes) -> bool:
+        return any(
+            isinstance(n, ast.Compare) and any(isinstance(op, (ast.Lt, ast.Gt, ast.NotEq)) for op in n.ops)
+            for node in nodes
+            for n in ast.walk(node)
+        )
+
+    lines = []
+    for node in ast.walk(fn):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("distinct", "dropDuplicates")
+        ):
+            continue
+        guards, call = [], node.func.value
+        while isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute):
+            if call.func.attr == "join" and call.args:
+                guards += call.args[1:] + [k.value for k in call.keywords]
+                if id_guard(guards) and roots(call.func.value) & roots(call.args[0]):
+                    lines.append(node.lineno)
+                break
+            if call.func.attr in ("filter", "where"):
+                guards += call.args
+            call = call.func.value
+    return lines
+
+
+def test_candidate_join_lives_in_pairs():
+    """The near-duplicate operators' bucketed candidate join has one
+    home, ``operators/pairs.candidate_pairs``: outside that module no
+    function joins a frame against a copy of itself under an id guard
+    and then dedups the pairs, except the four listed in
+    ``OWN_CANDIDATE_JOINS`` with their reason (a function in both sets
+    is not exempt); and each function in ``ROUTED_CANDIDATE_JOINS``
+    calls ``candidate_pairs``. AST only: no
+    package module is imported."""
+    import ast
+
+    pkg_dir = os.path.join(REPO, "data_ingestors_spark")
+    owner = os.path.join(pkg_dir, "operators", "pairs.py")
+    hits, routed, defined = [], set(), set()
+    for root, _dirs, names in os.walk(pkg_dir):
+        for name in sorted(names):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == owner:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            rel = os.path.relpath(path, REPO)
+            modules = {"F"} | {
+                (a.asname or a.name).split(".")[0]
+                for n in ast.walk(tree)
+                if isinstance(n, (ast.Import, ast.ImportFrom))
+                for a in n.names
+            }
+            fns = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+            defined |= {fn.name for fn in fns}
+            for fn in tree.body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                if any(
+                    isinstance(n, ast.Call) and getattr(n.func, "id", None) == "candidate_pairs"
+                    for n in ast.walk(fn)
+                ):
+                    routed.add(fn.name)
+                # prefix_filter_pairs is in both sets: its mask branch keeps
+                # its own join, its open-vocabulary branch must not
+                if fn.name not in OWN_CANDIDATE_JOINS or fn.name in ROUTED_CANDIDATE_JOINS:
+                    hits += [f"{rel}:{line}: {fn.name}" for line in _own_candidate_joins(fn, modules)]
+    assert not hits, hits
+    assert set(OWN_CANDIDATE_JOINS) <= defined, set(OWN_CANDIDATE_JOINS) - defined
+    assert ROUTED_CANDIDATE_JOINS <= routed, ROUTED_CANDIDATE_JOINS - routed
