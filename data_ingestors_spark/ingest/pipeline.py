@@ -14,9 +14,9 @@ the only job before the write is one aggregation over that cache:
 Conformance and the framework columns are one ``withColumns``
 projection each. The split is a filter whose two counts are observed
 on the first action that scans it (the file transfer's count, else the
-upsert's write), so no job runs just to count (``_observe``), and
-nothing past the source is cached. Offending-value samples are gathered only when the
-validation fails.
+upsert's write), so no job runs just to count (``io.writers.observe``),
+and nothing past the source is cached. Offending-value samples are
+gathered only when the validation fails.
 
 Failure accounting is reproduced by *splitting* DataFrames rather than
 catching per-row exceptions (SURVEY.md §7 hard-part 1): `skipped` =
@@ -27,10 +27,8 @@ rows whose declared-type conformance produced an error verdict.
 from __future__ import annotations
 
 import uuid as _uuid
-from typing import Callable
 
-from py4j.protocol import Py4JJavaError
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,28 +47,8 @@ from data_ingestors_spark.io.readers import (
     read_csv_source,
     read_json_source,
 )
-from data_ingestors_spark.io.writers import upsert, write_table
+from data_ingestors_spark.io.writers import observe, upsert, write_table
 from data_ingestors_spark.validators.mapping import run_battery
-
-
-def _observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Callable[[], dict]]:
-    """``df`` with ``aggs`` observed on it, and a reader for their
-    values, which ride on the first action over the returned frame. When
-    the optimizer drops the observed node from that action's plan (it
-    does when it proves empty the rows reaching the node, or a window,
-    grouping or filter above it), no values are reported and the reader
-    computes ``aggs`` in a job of their own."""
-    obs = Observation()
-    cols = [c.alias(k) for k, c in aggs.items()]
-    observed = df.observe(obs, *cols)
-
-    def values() -> dict:
-        try:
-            return obs.get
-        except Py4JJavaError:  # no values reported: see above
-            return observed.agg(*cols).first().asDict()
-
-    return observed, values
 
 
 class Ingestor:
@@ -236,7 +214,7 @@ class Ingestor:
         # the row count rides on the first action over the cache, which
         # reads every row: the validation aggregate, else the file
         # transfer's count or the upsert
-        raw, source_counts = _observe(raw, n=F.count(F.lit(1)))
+        raw, source_counts = observe(raw, n=F.count(F.lit(1)))
         raw.cache()
         try:
             # every declared column must exist in the source — a
@@ -330,7 +308,7 @@ class Ingestor:
             # over `ok`, which scans every row: the file transfer's
             # count, else the upsert.
             ok_pred = F.col("data_id").isNotNull() & (F.col("data_id") != "")
-            augmented, split_counts = _observe(
+            augmented, split_counts = observe(
                 augmented, n=F.count(F.lit(1)), ok=F.count(F.when(ok_pred, 1))
             )
             ok = augmented.filter(ok_pred)
@@ -358,10 +336,9 @@ class Ingestor:
                     write_table(failed_recs, self.target_path + "__failed")
 
             # in-batch duplicate data_ids collapse in the upsert's
-            # deterministic dedup; the reference treats duplicate keys
-            # as updates, never failures. The upsert takes that count
-            # from work it runs anyway (observed on a fresh table's
-            # write; the merge's per-bucket aggregation) — no
+            # deterministic ranking; the reference treats duplicate
+            # keys as updates, never failures. The upsert observes
+            # that count, like its others, on its one write — no
             # standalone count_distinct job (the r3 ingest throughput
             # regression).
             updated, inserted, deduped = upsert(

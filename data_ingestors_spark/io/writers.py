@@ -19,12 +19,13 @@ per-record fallback isolation. Spark-first equivalents:
 - all filesystem probes, renames and deletes go through ``io/fs.py``
   on the Hadoop FileSystem API, so the same code runs on file:, hdfs:,
   abfs: — no driver-local ``os.path`` assumptions;
-- batch dedup on the key is DETERMINISTIC (row_number over a stable
-  content hash), because ``dropDuplicates`` keeps an arbitrary row and
-  an ambiguous merge source must not resolve differently per run;
-- no job runs just to count: the merge counts (updated, inserted,
-  deduped) are observed on the write, next to the one per-bucket
-  aggregation the merge needs to find its touched buckets;
+- one shuffle per upsert: the batch and the current rows of its
+  buckets are ranked per key in one window on the bucket clustering,
+  which dedups the batch DETERMINISTICALLY (a stable content hash, not
+  ``dropDuplicates``' arbitrary row — an ambiguous merge source must
+  not resolve differently per run) and merges it in the same pass;
+- no job runs just to count: the counts (updated, inserted, deduped)
+  are observed on the write (:func:`observe`);
 - per-record fallback isolation is replaced by *pre-validation
   splitting* (SURVEY.md §7 hard-part 1): rows that would violate
   constraints split off before the write.
@@ -44,7 +45,10 @@ With Delta/Iceberg jars on the classpath, swap the write for a real
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from typing import Callable
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestors_spark.io.fs import (
@@ -84,11 +88,30 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
 
-DUPS_COL = "__dups"
 # run-time stamps (the ingest's created_at/updated_at): one value for a
-# whole batch and another on every run, so the dedup orders by them only
-# after the content hash
+# whole batch and another on every run, so the ranking orders by them
+# only after the content hash
 STAMP_COLS = ("created_at", "updated_at")
+
+
+def observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Callable[[], dict]]:
+    """``df`` with ``aggs`` observed on it, and a reader for their
+    values, which ride on the first action over the returned frame. When
+    the optimizer drops the observed node from that action's plan (it
+    does when it proves empty the rows reaching the node, or a window,
+    grouping or filter above it), no values are reported and the reader
+    computes ``aggs`` in a job of their own."""
+    obs = Observation()
+    cols = [c.alias(k) for k, c in aggs.items()]
+    observed = df.observe(obs, *cols)
+
+    def values() -> dict:
+        try:
+            return obs.get
+        except Py4JJavaError:  # no values reported: see above
+            return observed.agg(*cols).first().asDict()
+
+    return observed, values
 
 
 def _bucket_of(key: str, n_buckets: int):
@@ -134,53 +157,71 @@ def _cluster_by_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     unclustered, 64 files / 1.0 s clustered). Capping the partitions
     at the cores keeps a small batch from paying one task per bucket;
     with at least ``n_buckets`` cores the plan is one partition per
-    bucket."""
+    bucket. A window partitioned by the bucket column (and more) rides
+    on this exchange, as :func:`_merged` does: no second shuffle."""
     parts = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
     return df.repartition(parts, F.col(BUCKET_COL))
 
 
-def _swap_table(fs: FS, path: str, rows: DataFrame, key: str, n_buckets: int) -> None:
-    """Write ``rows`` as the whole table at ``path`` in ``n_buckets``
-    buckets, with the count recorded beside them, and swap it in: the
-    rows and their count appear together or not at all. ``rows`` may
-    read the table it replaces."""
-    rows = rows.withColumn(BUCKET_COL, _bucket_of(key, n_buckets))
+def _swap_table(fs: FS, path: str, rows: DataFrame, n_buckets: int) -> None:
+    """Write the bucketed ``rows`` (:func:`_merged`) as the whole table
+    at ``path``, with their bucket count recorded beside them, and swap
+    it in: the rows and their count appear together or not at all.
+    ``rows`` may read the table it replaces."""
 
     def write(tmp: str) -> None:
-        _cluster_by_bucket(rows, n_buckets).write.mode("overwrite").partitionBy(
-            BUCKET_COL
-        ).parquet(tmp)
+        rows.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
         put_json(fs, f"{tmp}/{BUCKETS_FILE}", {"n_buckets": n_buckets})
 
     swap_in(fs, path, write)
 
 
-def _dedup_deterministic(batch: DataFrame, key: str) -> DataFrame:
-    """Keep exactly one row per key, chosen by a stable hash of the
-    row's content (every column but the run-time stamps) — same winner
-    on every run/partitioning, unlike dropDuplicates.
-
-    The kept row carries ``__dups`` = (group size − 1), computed in the
-    SAME window pass (count over the identical partition spec adds no
-    shuffle), so callers get the in-batch duplicate count for free from
-    whatever aggregation they already run — no standalone
-    count_distinct job over the key column (the round-3 ingest
-    throughput regression)."""
+def _merged(
+    batch: DataFrame, current: DataFrame | None, key: str, n_buckets: int, cols: list[str]
+) -> tuple[DataFrame, Callable[[], tuple[int, int, int]]]:
+    """The rows an upsert writes (``cols`` and the bucket column) in one
+    plan with one exchange, and a reader for its (updated, inserted,
+    deduped) counts, observed on the write. The ``current`` rows
+    (``None`` for a new table) and the batch are unioned, bucketed and
+    clustered (:func:`_cluster_by_bucket`); one window over (bucket,
+    key) on that clustering, whose sort meets the partitioned writer's,
+    ranks a batch row first, and batch rows by a stable hash of their
+    content (every column but the run-time stamps, in the batch's own
+    order and types). Each key's first row is kept, and every current
+    row whose key no batch row carries (a null key never matches)."""
     stamps = [c for c in STAMP_COLS if c in batch.columns]
-    tiebreak = F.sha2(
-        F.concat_ws(
-            "\x1f", *[F.col(c).cast("string") for c in batch.columns if c not in stamps]
-        ),
-        256,
+    content = [F.col(c).cast("string") for c in batch.columns if c not in stamps]
+    batch, batch_n = observe(batch, n=F.count(F.lit(1)))
+    # __tag: the row's source (0: the batch, 1: the table)
+    rows = batch.select(
+        *cols, F.lit(0).alias("__tag"), F.sha2(F.concat_ws("\x1f", *content), 256).alias("__hash")
     )
-    w = Window.partitionBy(key).orderBy(tiebreak, *stamps)
-    wg = Window.partitionBy(key)
-    return (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .withColumn(DUPS_COL, F.count("*").over(wg) - F.lit(1))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    read_n = None
+    if current is not None:
+        current, read_n = observe(current.select(*cols), n=F.count(F.lit(1)))
+        unhashed = F.lit(None).cast("string").alias("__hash")
+        rows = current.select("*", F.lit(1).alias("__tag"), unhashed).unionByName(rows)
+    tag = F.col("__tag")
+    w = Window.partitionBy(BUCKET_COL, key).orderBy(tag, "__hash", *stamps)
+    ranked = _cluster_by_bucket(rows.withColumn(BUCKET_COL, _bucket_of(key, n_buckets)), n_buckets)
+    ranked = ranked.select(
+        "*", F.row_number().over(w).alias("__rn"), F.min(tag).over(w).alias("__first")
     )
+    # each key's first row, every row of a key no batch row carries (its
+    # first row is a current one) and every current row with a null key
+    ranked = ranked.filter(
+        (F.col("__rn") == 1) | (F.col("__first") == 1) | ((tag == 1) & F.col(key).isNull())
+    )
+    kept, kept_n = observe(
+        ranked, batch=F.count(F.when(tag == 0, 1)), current=F.count(F.when(tag == 1, 1))
+    )
+
+    def counts() -> tuple[int, int, int]:
+        k = kept_n()
+        updated = read_n()["n"] - k["current"] if read_n else 0
+        return (updated, k["batch"] - updated, batch_n()["n"] - k["batch"])
+
+    return kept.select(*cols, BUCKET_COL), counts
 
 
 def upsert(
@@ -194,12 +235,9 @@ def upsert(
     """Incremental MERGE-equivalent upsert into a bucketed parquet
     table. WHEN MATCHED → the batch row wins; WHEN NOT MATCHED →
     insert. Returns (updated, inserted, deduped) where ``deduped`` is
-    the number of in-batch rows collapsed by the deterministic key
-    dedup. No job runs just to count: a fresh table's counts are
-    observed on its write; a merge takes the batch size and ``deduped``
-    from the per-bucket aggregation that also names the touched
-    buckets, and ``updated`` from the rows observed on the current
-    rows and on their kept rows during the write.
+    the number of in-batch rows collapsed onto another of their key.
+    The dedup and the merge are one ranking in one write with one
+    shuffle (:func:`_merged`), which observes the counts.
 
     ``n_buckets`` sets a new table's bucket count; ``None`` sizes it
     from the batch (see the module docstring). An existing table keeps
@@ -208,7 +246,8 @@ def upsert(
     repaired first, so a half-swapped table is never taken for absent.
 
     A merge reads and rewrites only the buckets the batch touches, in
-    place (dynamic partition overwrite). It rewrites the WHOLE table,
+    place (dynamic partition overwrite), named by the batch keys alone
+    (no job for a one-bucket table). It rewrites the WHOLE table,
     through :func:`~data_ingestors_spark.io.fs.swap_in`, when the batch
     touches every bucket and the table has outgrown its count (every
     row is re-hashed into the grown count), when the table has the
@@ -224,22 +263,17 @@ def upsert(
     reader remembers mergeSchema."""
     fs = resolve(spark, target_path)
     recover(fs, target_path)
-    deduped_batch = _dedup_deterministic(batch, key)
 
     if not path_exists(fs, target_path):
         n = n_buckets or _buckets_for(batch, cap=DEFAULT_N_BUCKETS)
-        obs = Observation()
-        observed = deduped_batch.observe(
-            obs, F.count(F.lit(1)).alias("n"), F.sum(DUPS_COL).alias("deduped")
-        )
-        _swap_table(fs, target_path, observed.drop(DUPS_COL), key, n)
-        return (0, int(obs.get["n"]), int(obs.get["deduped"] or 0))
+        rows, counts = _merged(batch, None, key, n, batch.columns)
+        _swap_table(fs, target_path, rows, n)
+        return counts()
 
     current = spark.read.parquet(target_path)
     current_cols = [c for c in current.columns if c != BUCKET_COL]
-    batch_cols = [c for c in deduped_batch.columns if c != DUPS_COL]
-    missing = [c for c in current_cols if c not in batch_cols]
-    extra = [c for c in batch_cols if c not in current_cols]
+    missing = [c for c in current_cols if c not in batch.columns]
+    extra = [c for c in batch.columns if c not in current_cols]
     if missing:
         raise ValueError(
             f"schema drift: batch is missing table columns {missing} "
@@ -254,54 +288,36 @@ def upsert(
         )
     flat = BUCKET_COL not in current.columns
     if flat:
-        n = n_buckets or _buckets_for(current, cap=DEFAULT_N_BUCKETS)
+        n = grown = n_buckets or _buckets_for(current, cap=DEFAULT_N_BUCKETS)
     else:
-        n = bucket_count(fs, target_path, n_buckets)
-
-    batch = deduped_batch.withColumn(BUCKET_COL, _bucket_of(key, n)).persist()
-    try:
-        per_bucket = batch.groupBy(BUCKET_COL).agg(
-            F.count(F.lit(1)).alias("n"), F.sum(DUPS_COL).alias("deduped")
-        ).collect()
-        rows = sum(r["n"] for r in per_bucket)
-        deduped = sum(r["deduped"] or 0 for r in per_bucket)
-        touched = [r[BUCKET_COL] for r in per_bucket]
-
-        grown = n
-        if not flat and len(touched) == n:
+        n = grown = bucket_count(fs, target_path, n_buckets)
+        # a non-empty batch touches a one-bucket table's bucket
+        keys = batch.select(_bucket_of(key, n)).distinct()
+        touched = [0] if n == 1 else [r[0] for r in keys.collect()]
+        if len(touched) == n:
             # the merge rewrites every bucket anyway: size the table to
             # its on-disk bytes (the listed files' total) first
             grown = max(n, _buckets_for(current))
-        whole_table = flat or bool(extra) or grown != n
-        for c in extra:
-            current = current.withColumn(c, F.lit(None).cast(batch.schema[c].dataType))
-        if not whole_table:
-            current = current.filter(F.col(BUCKET_COL).isin(touched))
+    whole_table = flat or bool(extra) or grown != n
+    if not whole_table:
+        if not touched:
+            return (0, 0, 0)
+        current = current.filter(F.col(BUCKET_COL).isin(touched))
+    for c in extra:
+        current = current.withColumn(c, F.lit(None).cast(batch.schema[c].dataType))
 
-        # the batch is key-deduplicated, so every current row whose key
-        # the batch carries is exactly one update: updated = rows read
-        # − rows kept
-        read_obs, keep_obs = Observation(), Observation()
-        keep = (
-            current.observe(read_obs, F.count(F.lit(1)).alias("n"))
-            .join(batch.select(key), on=key, how="left_anti")
-            .observe(keep_obs, F.count(F.lit(1)).alias("n"))
-        )
-        merged = keep.unionByName(batch.select(keep.columns))
-        if whole_table:
-            _swap_table(fs, target_path, merged, key, grown)
-        else:
-            # the dynamic overwrite stages its output before it replaces
-            # the touched buckets, so the plan may read them; the
-            # writer option scopes the mode to this write, so it is
-            # thread-safe under the concurrent refresh folds
-            _cluster_by_bucket(merged, n).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy(BUCKET_COL).parquet(target_path)
-        updated = int(read_obs.get["n"]) - int(keep_obs.get["n"])
-        return (updated, rows - updated, deduped)
-    finally:
-        batch.unpersist()
+    rows, counts = _merged(batch, current, key, grown, current_cols + extra)
+    if whole_table:
+        _swap_table(fs, target_path, rows, grown)
+    else:
+        # the dynamic overwrite stages its output before it replaces
+        # the touched buckets, so the plan may read them; the writer
+        # option scopes the mode to this write, so it is thread-safe
+        # under the concurrent refresh folds
+        rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            BUCKET_COL
+        ).parquet(target_path)
+    return counts()
 
 
 def purge_keys(

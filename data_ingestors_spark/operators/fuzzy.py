@@ -173,8 +173,9 @@ def fastss_match(
         # deliberately NOT persisted: this path runs once per streaming
         # micro-batch, where a persist with no unpersist would
         # accumulate cache forever; the double-computed side is a pure
-        # explode+hash projection (cheap), unlike fastss_pairs' where
-        # the keyed frame feeds a self-join and IS materialized.
+        # explode+hash projection (cheap). fastss_pairs does not persist
+        # its keyed frame either: there a persist measured slower than
+        # recomputing it (see its comment).
         hot = (
             probe.groupBy("_k").count().filter(F.col("count") > max_key_df)
             .select("_k")

@@ -197,14 +197,15 @@ def _jobs_csv(path, rids):
 
 
 def test_ingest_job_counts_fresh_and_merge(spark, tmp_path):
-    """A small tabular CSV ingest runs 7 Spark jobs into a fresh target
-    and 12 as a merge: the validation aggregate (which builds the source
+    """A small tabular CSV ingest runs 6 Spark jobs into a fresh target
+    and 7 as a merge: the validation aggregate (which builds the source
     cache and observes the row count) and the upsert; no job runs just
-    to count. The merge upsert runs 8: the schema read, the per-bucket
-    aggregation and the write, with no lineage checkpoint and, as the
-    one-bucket table is no more than Spark's 32-path threshold, no
-    parallel file listing. On one core the source is not spread, one
-    shuffle fewer."""
+    to count. The upsert is one write with one shuffle (2 jobs: the
+    shuffle stage and the write); the merge adds the schema read, and
+    into its one-bucket table it runs no job to find the touched
+    buckets, no lineage checkpoint and, as one bucket directory is no
+    more than Spark's 32-path threshold, no parallel file listing. On
+    one core the source is not spread, one shuffle fewer."""
     sc = spark.sparkContext
     cfg = ResolvedConfig(
         table_name="t_jobs", schema=_JOBS_SCHEMA, label_column="flag",
@@ -212,7 +213,7 @@ def test_ingest_job_counts_fresh_and_merge(spark, tmp_path):
     )
     target = str(tmp_path / "table")
     spread = 1 if sc.defaultParallelism > 1 else 0
-    for op, rids, jobs in (("fresh", range(200), 6), ("merge", range(100, 300), 11)):
+    for op, rids, jobs in (("fresh", range(200), 5), ("merge", range(100, 300), 6)):
         group = f"test-ingest-jobs-{op}"
         sc.setJobGroup(group, group)
         try:

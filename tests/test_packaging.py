@@ -492,6 +492,45 @@ def test_bucket_clustering_lives_in_writers():
     assert not hits, hits
 
 
+def test_upsert_holds_no_cached_batch():
+    """``io/writers.upsert`` is one ranked write: neither it nor a
+    ``io/writers`` function it calls makes a ``.persist()``/``.cache()``
+    call, and the separate key dedup (``_dedup_deterministic``, its
+    ``DUPS_COL``) is gone from the package. AST only: no package module
+    is imported."""
+    import ast
+
+    pkg_dir = os.path.join(REPO, "data_ingestors_spark")
+    writers = os.path.join(pkg_dir, "io", "writers.py")
+    with open(writers) as fh:
+        funcs = {f.name: f for f in ast.parse(fh.read(), writers).body if isinstance(f, ast.FunctionDef)}
+    called = {
+        n.func.id for n in ast.walk(funcs["upsert"])
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id in funcs
+    }
+    hits = [
+        f"{name}:{n.lineno}: .{n.func.attr}()"
+        for name in {"upsert", *called}
+        for n in ast.walk(funcs[name])
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("persist", "cache")
+    ]
+    for root, _dirs, names in os.walk(pkg_dir):
+        for name in sorted(n for n in names if n.endswith(".py")):
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            rel = os.path.relpath(path, REPO)
+            hits += [
+                f"{rel}:{n.lineno}: {ident}"
+                for n in ast.walk(tree)
+                if isinstance(n, (ast.FunctionDef, ast.Name, ast.Attribute))
+                for ident in [getattr(n, "name", None) or getattr(n, "id", None) or n.attr]
+                if ident in ("_dedup_deterministic", "DUPS_COL")
+            ]
+    assert not hits, hits
+
+
 def test_ingest_pipeline_caches_once_and_never_counts():
     """``ingest/pipeline.py`` caches the source and nothing else (one
     ``.cache()``/``.persist()`` call) and runs no ``.count()``: its row

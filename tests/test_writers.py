@@ -375,16 +375,21 @@ def test_purge_keys_recovers_interrupted_legacy_swap(spark, tmp_path):
     assert rows == {f"k{i}" for i in range(2, 30)}
 
 
-def _reference_upsert(table: dict, batch: list[tuple]) -> tuple[tuple[int, int, int], dict]:
+def _reference_upsert(
+    table: dict, batch: list[tuple], order: list[int] | None = None
+) -> tuple[tuple[int, int, int], dict]:
     """Plain-Python MERGE: the in-batch winner per key is the row with
     the smallest sha256 of its ``\\x1f``-joined values (the dedup's
-    tiebreak); it replaces or inserts the table row. Returns the
-    expected (updated, inserted, deduped) and the table afterwards."""
+    tiebreak), joined in the batch's column ``order`` (indices into the
+    row; the row's own order by default); it replaces or inserts the
+    table row. Returns the expected (updated, inserted, deduped) and
+    the table afterwards."""
     import hashlib
 
     winners: dict = {}
     for row in batch:
-        h = hashlib.sha256("\x1f".join(str(v) for v in row).encode()).hexdigest()
+        values = [row[i] for i in order] if order else row
+        h = hashlib.sha256("\x1f".join(str(v) for v in values).encode()).hexdigest()
         if row[0] not in winners or h < winners[row[0]][0]:
             winners[row[0]] = (h, row)
     updated = sum(1 for k in winners if k in table)
@@ -427,6 +432,123 @@ def test_upsert_counts_match_python_reference(spark, tmp_path, path):
     assert upsert(spark, t, df, n_buckets=8, allow_evolution=path == "evolution") == expected
     if after:
         assert _table_rows(spark, t, cols) == after
+
+
+@pytest.mark.parametrize("n_buckets", [1, 8])
+def test_merge_keeps_the_table_column_order(spark, tmp_path, n_buckets):
+    """A merge writes the table's own column order into every bucket it
+    rewrites, whatever the batch's order and wherever the key sits, so
+    every file and ``read_table`` agree with the fresh table."""
+    t = str(tmp_path / "t")
+    cols = ["v", "data_id", "w"]
+    upsert(spark, t, spark.createDataFrame([(i, f"k{i}", "a") for i in range(40)], cols), n_buckets=n_buckets)
+    batch = spark.createDataFrame([(f"k{i}", "b", -i) for i in range(0, 80, 2)], ["data_id", "w", "v"])
+    assert upsert(spark, t, batch) == (20, 20, 0)
+    assert read_table(spark, t).columns == cols
+    for d in bucket_files(t):
+        assert spark.read.parquet(os.path.join(t, d)).columns == cols, d
+    assert read_table(spark, t).count() == 60
+
+
+@pytest.mark.parametrize("n_buckets", [1, 8])
+def test_null_keys_in_a_merge(spark, tmp_path, n_buckets):
+    """Null keys never match: every current row with a null key
+    survives a merge, and the batch's null-key rows collapse to one,
+    counted as an insert."""
+    t = str(tmp_path / "t")
+    schema = "data_id string, v long"
+    steps = (
+        ([(f"k{i}", i) for i in range(6)] + [(None, 100), (None, 101)], (0, 7, 1)),
+        ([(None, 200), (None, 201), ("k1", 11), ("k1", 12), ("k20", 20)], (1, 2, 2)),
+        ([(None, 300), ("k2", 22)], (1, 1, 0)),
+        ([("k3", 33), ("k3", 34)], (1, 0, 1)),
+    )
+    for rows, want in steps:
+        got = upsert(spark, t, spark.createDataFrame(rows, schema), n_buckets=n_buckets)
+        assert got == want, rows
+    table = sorted((r.data_id or "", r.v) for r in read_table(spark, t).collect())
+    assert table == [
+        ("", 101), ("", 200), ("", 300),
+        ("k0", 0), ("k1", 11), ("k2", 22), ("k20", 20), ("k3", 33), ("k4", 4), ("k5", 5),
+    ]
+
+
+def test_merge_keeps_every_current_row_the_batch_does_not_match(spark, tmp_path):
+    """As a left anti-join would, a merge keeps every current row whose
+    key no batch row carries, even rows sharing a key (a table written
+    by hand in the legacy flat layout), and replaces every row whose
+    key it does carry."""
+    t = str(tmp_path / "flat")
+    cols = ["data_id", "v"]
+    spark.createDataFrame([("a", 1), ("a", 2), ("b", 3), ("b", 4), ("c", 5)], cols).write.parquet(t)
+    upsert(spark, t, spark.createDataFrame([("b", 9), ("d", 6)], cols))
+    assert sorted(tuple(r) for r in read_table(spark, t).collect()) == [
+        ("a", 1), ("a", 2), ("b", 9), ("c", 5), ("d", 6)
+    ]
+
+
+@pytest.mark.parametrize("n_buckets", [1, 8])
+def test_permuted_batch_keeps_the_reference_winner(spark, tmp_path, n_buckets):
+    """A batch that lists the table's columns in another order dedups
+    by the hash of its rows in its own column order, as the reference
+    MERGE does; the merged rows land in the table's order."""
+    t = str(tmp_path / "t")
+    cols = ["data_id", "v", "w"]
+    base = [(f"k{i}", i, "old") for i in range(30)]
+    upsert(spark, t, spark.createDataFrame(base, cols), n_buckets=n_buckets)
+    batch = [(f"k{i % 12 + 20}", 100 + i, f"w{i % 5}") for i in range(36)]
+    order = [2, 0, 1]  # the batch lists (w, data_id, v)
+    table = {r[0]: r for r in base}
+    expected, after = _reference_upsert(table, batch, order)
+    # the permutation decides at least one winner, so the test can fail
+    assert after != _reference_upsert(table, batch)[1]
+    df = spark.createDataFrame([tuple(r[i] for i in order) for r in batch], ["w", "data_id", "v"])
+    assert upsert(spark, t, df) == expected
+    assert _table_rows(spark, t, cols) == after
+
+
+def _group_work(spark, group):
+    """(jobs, stages that wrote shuffle output) of a job group."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    st, store = sc.statusTracker(), jsc.statusStore()
+    jobs = st.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+    shuffles = 0
+    for s in stages:
+        try:
+            shuffles += store.lastStageAttempt(s).shuffleWriteBytes() > 0
+        except Py4JJavaError:  # a stage never submitted (skipped)
+            pass
+    return len(jobs), shuffles
+
+
+def test_upsert_is_one_shuffle(spark, tmp_path):
+    """A fresh insert is one shuffle and one write, at most 2 jobs; a
+    merge into a one-bucket table adds only the schema read, at most 3
+    jobs with exactly one shuffle-map stage — no job before the write
+    to find its touched bucket or count the batch."""
+    sc = spark.sparkContext
+    t = str(tmp_path / "t")
+    rows = spark.range(2000).selectExpr("concat('k', id) AS data_id", "id AS v")
+    for op, batch, want in (
+        ("fresh", rows, (0, 2000, 0)),
+        ("merge", rows.filter("v >= 1000").selectExpr("data_id", "v + 1 AS v").union(
+            spark.range(2000, 2500).selectExpr("concat('k', id)", "id")), (1000, 500, 0)),
+    ):
+        group = f"one-shuffle-{op}-{tmp_path.name}"
+        sc.setJobGroup(group, op)
+        try:
+            assert upsert(spark, t, batch) == want
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs, shuffles = _group_work(spark, group)
+        assert shuffles == 1, op
+        assert jobs <= (2 if op == "fresh" else 3), op
+    assert _recorded_buckets(spark, t) == 1
 
 
 def test_fresh_insert_writes_one_file_per_bucket_in_at_most_one_task_per_core(spark, tmp_path):
